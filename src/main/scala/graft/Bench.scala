@@ -1,179 +1,55 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.LinkedHashMap
 
-/** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. Each query is fully materialized through the
-  * `noop` sink — every column is computed and row-serialized, so
-  * Catalyst cannot prune a projection-heavy query down to a bare scan
-  * (a `count()` would let it). Failed queries are reported with value
-  * -1 and an entry in `errors`, never as a (fast) success.
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** Benchmark main: runs every registered query ([[Runner.selected]]) at
+  * [[Runner.sfDir]] and prints ONE JSON line. Each query is fully
+  * materialized through the `noop` sink ([[Runner.noop]]). Failed
+  * queries are reported with value -1 and an entry in `errors`, never
+  * as a (fast) success.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      // static conf, so it must be set at session build: the default
-      // generated-code cache holds only 100 entries, and 70+ queries
-      // x several codegen units each evict everything between repeats
-      // (each repeat then pays full Janino recompilation — measured as
-      // warm times approaching cold ones late in the run)
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // dev knob: SPARK_GRAFT_AQE=false measures how much of the
-      // per-query floor is adaptive re-planning (each exchange is a
-      // blocking stage + re-optimize at this scale); production keeps
-      // AQE on — it is the skew/coalesce story at 100 TB
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config(graft.sources.Tables.conf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // o1_sort_topk intentionally ranks over an already-limit(100)ed
-    // frame with an unpartitioned window (≤100 rows by construction —
-    // plan-pinned in PlanSpec), so WindowExec's "No Partition Defined"
-    // WARN is a false alarm here and only pollutes the captured bench
-    // tail; silence that one logger, not the package.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // releaseAll unpersisting a locally-checkpointed RDD (the
-    // Caches.checkpointed lifecycle — intentional, per-query frames
-    // are never reused after release) logs one WARN per RDD from the
-    // RDD class logger; hundreds of them would drown the captured
-    // stdout/stderr tail exactly when diagnostics matter
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
-    // Untimed harness warmup: loads the scheduler, codegen compiler,
-    // shuffle machinery, and noop-sink codepaths once, so the first
-    // TIMED query measures itself rather than JVM/session init
-    // (~4-5s observed on the first query otherwise). Extended to the
-    // other hot framework paths the registry exercises — parquet
-    // reader (also fills the memoized table-plan cache), window exec,
-    // broadcast join, sort/limit, explode + array HOFs — so their
-    // one-time JIT cost is not charged to whichever query happens to
-    // hit each path first.
-    spark.range(0, 1000).selectExpr("md5(cast(id as string)) AS h", "id % 7 AS k")
-      .groupBy("k").count()
-      .write.format("noop").mode("overwrite").save()
-    for (t <- Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings"))
-      try graft.sources.Tables.load(spark, sfDir, t)
-        .write.format("noop").mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(_) => () }
-    {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val base = spark.range(0, 10000)
-        .selectExpr("id % 97 AS k", "id AS v", "cast(id as double) AS x")
-      val dim = spark.range(0, 97).selectExpr("id AS k", "id * 2 AS y")
-      base.withColumn("rn", row_number().over(Window.partitionBy("k").orderBy("v")))
-        .join(broadcast(dim), "k")
-        .select(col("k"), col("rn"), col("y"),
-          aggregate(sequence(lit(0L), col("k") % 3), lit(0.0),
-            (acc, e) => acc + e.cast("double")).as("hof"))
-        .orderBy(col("k").asc).limit(500)
-        .write.format("noop").mode("overwrite").save()
-      base.select(col("k"), explode(sequence(lit(0L), col("k") % 3)).as("e"))
-        .groupBy("k").agg(min(md5(concat(lit("w:"), col("e").cast("string")))).as("m"))
-        .write.format("noop").mode("overwrite").save()
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  /** `v` to three decimals, printed as a plain JSON number: the short
+    * form of the budgeted stdout line. */
+  private def r3(v: Double): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(v).setScale(3, java.math.RoundingMode.HALF_UP)
+
+  /** The entries whose `"k":v` text fits in `budget` chars, in order;
+    * an entry that does not fit is skipped and later, shorter ones may
+    * still fit. */
+  private def fit[V](entries: Seq[(String, V)], budget: Int): LinkedHashMap[String, V] = {
+    val kept = LinkedHashMap[String, V]()
+    var used = 0
+    for ((k, v) <- entries) {
+      val len = json.writeValueAsString(k).length + json.writeValueAsString(v).length + 2
+      if (used + len <= budget) { kept(k) = v; used += len }
     }
-    spark.catalog.clearCache()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // Producers sort before their consumers: d_dup_clusters
-    // materializes the cluster labels that d_dedup_keep derives from
-    // (Dedup.keepList), so it runs first and its handle is reused —
-    // the keep-list is then timed as the INCREMENTAL anti-join, which
-    // is the production pattern (labels are always materialized before
-    // anyone asks for the deduplicated corpus). Verify/correctness
-    // always run the self-contained registry form.
-    val benchOrder = Map(
-      "d_dup_clusters" -> "d_dedup_keep~0", "d_dedup_keep" -> "d_dedup_keep~1")
-    var benchLabels: Option[org.apache.spark.sql.DataFrame] = None
-    val ragCurDir =
-      s"${sys.props("java.io.tmpdir")}/graft-ragcur-bench-${graft.queries.storeKey(sfDir)}"
-    var ragBuilt = false
-    val selected = SparkEntry.queries.toSeq
-      .sortBy { case (n, _) => benchOrder.getOrElse(n, n) }
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map {
-        case ("d_dup_clusters", fn0) => "d_dup_clusters" ->
-          { (s: SparkSession, dir: String) =>
-            val df = fn0(s, dir)
-            // capture only at the benchmark SF — the precompile pass
-            // at sf0.001 must never leak its labels into the timed run
-            if (dir == sfDir) benchLabels = Some(df)
-            df
-          }
-        case ("d_dedup_keep", fn0) => "d_dedup_keep" ->
-          { (s: SparkSession, dir: String) =>
-            benchLabels match {
-              case Some(labels) if dir == sfDir =>
-                import org.apache.spark.sql.functions.col
-                graft.ops.Dedup.keepList(labels,
-                    graft.sources.Tables.load(s, dir, "documents"))
-                  .select(col("doc_id"), col("n_chars"))
-              case _ => fn0(s, dir)
-            }
-          }
-        // RAG build/serve split (r19): the one-time curation + index
-        // build is paid in a RECORDED pre-step below (build_costs in
-        // bench_full.json); the timed repeats measure SERVING against
-        // the pre-built artifacts — the d_dedup_keep shared-handle
-        // convention. Precompile (dir != sfDir) and any run before
-        // the pre-step fall back to the self-contained registry form,
-        // which Verify/correctness always use.
-        case ("pipe_rag_e2e", fn0) => "pipe_rag_e2e" ->
-          { (s: SparkSession, dir: String) =>
-            if (dir == sfDir && ragBuilt)
-              graft.queries.TextQueries.ragServeFrom(s, dir, ragCurDir)
-            else fn0(s, dir)
-          }
-        case other => other
-      }
-    // Plan-precompile pass (still untimed): run every selected query
-    // once against the tiny sibling sf0.001 directory. The generated
-    // code for a plan does not embed data paths or sizes, so the
-    // Janino classes compiled here are byte-identical to the ones the
-    // timed sf run needs — the codegen cache (4096 entries, above)
-    // serves them back, and C2 has begun JITting the hot generated
-    // methods. This moves the one-time-per-plan-shape compile cost
-    // (measured ~20s across 95 plans, charged to first runs) out of
-    // the timed section, the same steady state a long-running Spark
-    // service reaches after its first batch: the timed "cold" numbers
-    // below measure data-proportional work on the benchmark SF, not
-    // JVM compilation. Disable with SPARK_GRAFT_NOPRECOMPILE=1 to
-    // recover the old fully-cold methodology.
-    val preDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-    val precompiled = !sys.env.contains("SPARK_GRAFT_NOPRECOMPILE") &&
-      preDir.isDirectory && preDir.getAbsolutePath != new java.io.File(sfDir).getAbsolutePath
-    if (precompiled)
-      for ((_, fn) <- selected) {
-        // NonFatal only: an OOM/VM error here must crash the run, not
-        // silently skew the timed section (timed run reports real
-        // per-query failures)
-        try fn(spark, preDir.getAbsolutePath).write.format("noop").mode("overwrite").save()
-        catch { case scala.util.control.NonFatal(_) => () }
-        Caches.releaseAll(blocking = true)
-        spark.catalog.clearCache()
-      }
+    kept
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = Runner.sfDir
+    val spark = GraftSession.create()
+    val selected = Runner.selected
     // stamped into both JSON artifacts so a reader of BENCH_r{N} knows
     // which timing contract produced "value" (see note below)
-    val methodology = if (precompiled) "precompiled" else "fully_cold"
+    val methodology =
+      if (Runner.warmup(spark, sfDir, selected)) "precompiled" else "fully_cold"
     // UNIFORM STORE-BUILD ACCOUNTING (r20, the r19 verdict's item 6):
     // persisted stores under java.io.tmpdir survive across JVM runs
     // (buildIfAbsent markers), so a "cold" timed repeat could silently
     // measure a store warmed by a PREVIOUS bench/verify invocation.
     // Purge every store dir keyed to THIS dataset first; the recorded
-    // pre-step below then pays each store-backed query's first
-    // invocation (store build + one serve pass) into build_costs, so
-    // every timed repeat is provably serving-only — the pipe_rag_e2e
-    // convention extended to the whole serving family. Set
+    // pre-step below then pays each `build` query's first invocation
+    // (store build + one serve pass) into build_costs, so every timed
+    // repeat is provably serving-only. The purge assumes a single
+    // writer per dataset: a concurrent Verify on the SAME dataset can
+    // lose a store mid-build (the failure is logged, not fatal). Set
     // SPARK_GRAFT_KEEPSTORES=1 to skip the purge (dev loop).
     if (!sys.env.contains("SPARK_GRAFT_KEEPSTORES")) {
       val tmp = new java.io.File(sys.props("java.io.tmpdir"))
@@ -185,148 +61,74 @@ object Bench {
           System.err.println(s"[bench] store purge failed for ${f.getName}: ${e.getMessage}")
         }
     }
-    // every registry query whose plan construction calls a
-    // buildIfAbsent-style store builder (grep 'IfAbsent|graft-.*-' in
-    // queries/*.scala when adding one — an unlisted store-backed query
-    // is not wrong, its first timed repeat just pays the build and
-    // shows up in `noisy`)
-    val storeBacked = Seq(
-      "g_hll_indexed", "g_hll_cube", "g_hll_rebuilt", "g_hll_ingested",
-      "e_semdedup_served", "e_ivfpq_indexed", "e_ann_serve_batch",
-      "e_ivfpq_appended", "e_ann_takedown", "e_ann_filtered",
-      "e_ivfpq_indexed_trained", "e_opq_indexed",
-      "t_lang_classify_indexed", "t_line_dedup_indexed", "t_line_dedup_takedown",
-      "t_bpe_encode_indexed", "t_bpe_export_roundtrip",
-      "t_unigram_encode_indexed", "t_unigram_export_roundtrip",
-      "t_quality_filter_indexed",
-      "d_delta_index_keep", "d_delta_index_small", "d_delta_index_takedown",
-      "d_store_pinned_read", "d_delta_index_r2", "d_delta_index_appended")
-    // RAG pre-step: pay curation + index build once, OUTSIDE the
-    // timers but RECORDED (build_costs) — the headline pipe_rag_e2e
-    // number then measures warm serving, with the one-time cost a
-    // separate artifact field instead of noise inside the first repeat
-    val buildCosts = scala.collection.mutable.LinkedHashMap[String, Double]()
-    if (selected.exists(_._1 == "pipe_rag_e2e")) {
-      val t0 = System.nanoTime()
-      try {
-        graft.queries.TextQueries.ragBuild(spark, sfDir, ragCurDir)
-        ragBuilt = true
-        buildCosts("pipe_rag_e2e") = (System.nanoTime() - t0) / 1e9
-      } catch { case scala.util.control.NonFatal(e) =>
-        // fall back to the self-contained form; the timed run will
-        // surface the real failure if there is one
-        System.err.println(s"[bench] rag build pre-step failed: ${e.getMessage}")
-      }
-      Caches.releaseAll(blocking = true)
-      spark.catalog.clearCache()
-    }
-    // the recorded store-build pass (see the purge note above): one
-    // full first invocation per store-backed query — build + one
-    // serve — into build_costs; the timed repeats below then measure
+    // the recorded store-build pass: one full first invocation per
+    // `build` query — build + one serve — OUTSIDE the timers but
+    // RECORDED in build_costs; the timed repeats below then measure
     // steady-state serving against an existing store, which is the
-    // production shape these queries exist to demonstrate
-    for ((name, fn) <- selected if storeBacked.contains(name)) {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        buildCosts(name) = (System.nanoTime() - t0) / 1e9
-      } catch { case scala.util.control.NonFatal(e) =>
+    // production shape these queries exist to demonstrate, with the
+    // one-time cost a separate artifact field instead of noise inside
+    // the first repeat
+    val buildCosts = LinkedHashMap[String, Double]()
+    for (q <- selected if q.build)
+      Runner.time(spark, q.fn(spark, sfDir)) match {
+        case Right(t) => buildCosts(q.name) = t
         // the timed run will surface the real failure if there is one
-        System.err.println(s"[bench] store pre-step failed for $name: ${e.getMessage}")
+        case Left(e) =>
+          System.err.println(s"[bench] store pre-step failed for ${q.name}: ${e.getMessage}")
       }
-      Caches.releaseAll(blocking = true)
-      spark.catalog.clearCache()
-    }
-    // SPARK_GRAFT_ONLY=comma-list restricts to named queries (dev knob).
     // SPARK_GRAFT_REPEAT=n runs each query n times. REPORTING CONTRACT:
     // "value"/"queries" are the first-run-at-benchmark-SF times —
-    // after the untimed plan-precompile pass above, so they measure
-    // data-proportional work (as DuckDB's single-shot runs do; its
-    // planner cost is milliseconds, while Spark's one-time Janino
+    // after the untimed plan-precompile pass (Runner.warmup), so they
+    // measure data-proportional work (as DuckDB's single-shot runs do;
+    // its planner cost is milliseconds, while Spark's one-time Janino
     // compile was ~40% of round-6's total and is a per-plan-shape
-    // constant, not a per-byte cost). (Semantic
-    // note for cross-round comparison: round-4 and earlier artifacts
-    // reported the per-query MIN as "value"; round 5 switched the
-    // headline to cold — r4's "value" is comparable to r5+'s
-    // "warm_total", not to "value".) The per-query MINIMUM over the n
-    // repeats is reported separately as "warm_total"/"warm_queries":
-    // the JVM charges one-time Janino codegen compilation + C2 JIT
-    // (~0.3-1s per unique plan) to the first execution, so the min
-    // isolates steady-state throughput (standard JVM-benchmarking
-    // practice) without redefining the headline number. Per-query
-    // spread (all repeat times) goes to bench_full.json, and queries
-    // whose repeats disagree badly are called out in stdout "noisy" —
-    // so environmental noise is distinguishable from real regression.
-    // Default 5: the five-run protocol SCALE.md uses for regression
-    // adjudication is now the artifact itself — warm_queries IS the
-    // per-query min-of-5, emitted next to the cold first-run series,
-    // so cross-round comparisons read one file instead of re-running
-    // the drift investigation (rounds 9 and 10 both paid that cost).
+    // constant, not a per-byte cost). (Semantic note for cross-round
+    // comparison: round-4 and earlier artifacts reported the per-query
+    // MIN as "value"; round 5 switched the headline to cold — r4's
+    // "value" is comparable to r5+'s "warm_total", not to "value".)
+    // The per-query MINIMUM over the n repeats is reported separately
+    // as "warm_total"/"warm_queries": the JVM charges one-time Janino
+    // codegen compilation + C2 JIT (~0.3-1s per unique plan) to the
+    // first execution, so the min isolates steady-state throughput
+    // (standard JVM-benchmarking practice) without redefining the
+    // headline number. Per-query spread (all repeat times) goes to
+    // bench_full.json, and queries whose repeats disagree badly are
+    // called out in stdout "noisy" — so environmental noise is
+    // distinguishable from real regression. Default 5: the five-run
+    // protocol SCALE.md uses for regression adjudication is the
+    // artifact itself — warm_queries IS the per-query min-of-5,
+    // emitted next to the cold first-run series, so cross-round
+    // comparisons read one file instead of re-running the drift
+    // investigation (rounds 9 and 10 both paid that cost).
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "5").toInt
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    val results = selected.map { case (name, fn) =>
+    val errors = LinkedHashMap[String, String]()
+    val results = selected.map { q =>
       val times = (1 to repeat).map { _ =>
-        // pay the previous run's GC debt OUTSIDE the timer: allocation
-        // churn left by query N-1 otherwise lands as a collection
-        // pause inside query N's measurement (observed as a 6x
-        // round-over-round "regression" of an unchanged 6-sum agg)
-        System.gc()
-        val t0 = System.nanoTime()
-        val dt = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+        Runner.time(spark, q.fn(spark, sfDir)).fold({ e =>
+          errors(q.name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
           -1.0
-        }
-        // queries register their reused-subplan persists with
-        // graft.Caches (harness-owned lifecycle); release them, then
-        // clearCache as the backstop so caches never accumulate across
-        // the 70+ query run (each repeat re-materializes its own
-        // persists — no cross-run reuse)
-        Caches.releaseAll(blocking = true)
-        spark.catalog.clearCache()
-        dt
+        }, identity)
       }
-      name -> (if (times.contains(-1.0)) (-1.0, -1.0, times) else (times.head, times.min, times))
+      q.name -> (if (times.contains(-1.0)) (-1.0, -1.0, times) else (times.head, times.min, times))
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    val fullErrJson = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
     val total = results.collect { case (_, (v, _, _)) if v >= 0 => v }.sum
     val warmTotal = results.collect { case (_, (_, w, _)) if w >= 0 => w }.sum
-    // Full per-query detail (full precision) goes to a file; the ONE
-    // stdout JSON line must survive the driver's 2000-char output-tail
-    // capture, so its queries dict lists slowest-first and stops at a
-    // character budget ("queries_elided" counts the fast ones cut;
-    // bench_full.json always has all of them).
-    val fullQs = results.map { case (k, (v, _, _)) => s"${q(k)}:$v" }.mkString("{", ",", "}")
-    val fullWarm = results.map { case (k, (_, w, _)) => s"${q(k)}:$w" }.mkString("{", ",", "}")
-    val fullAll = results.map { case (k, (_, _, ts)) =>
-      s"${q(k)}:${ts.mkString("[", ",", "]")}" }.mkString("{", ",", "}")
-    val buildJson = buildCosts.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
     // DRIFT-CONTROL MERGE (r19): tools/drift.py persists its DuckDB
     // control measurement to drift_control.json; folding it in HERE
     // makes the adjudication fields clobber-proof — every bench run
     // re-emits control_total/control_queries verbatim and recomputes
     // ratio_queries/family_ratio against its own fresh warm times
     // (a stale ratio vs a new run would adjudicate nothing).
-    val controlJson: String = {
+    val control: Seq[(String, Any)] = {
       val f = new java.io.File("drift_control.json")
-      if (!f.isFile) "" else try {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val node = om.readTree(f)
-        val cq = node.get("control_queries")
-        val control = scala.collection.mutable.LinkedHashMap[String, Double]()
-        if (cq != null) cq.fields().forEachRemaining { e =>
-          control(e.getKey) = e.getValue.asDouble()
-        }
-        val warmByName = results.collect {
-          case (n, (_, w, _)) if w >= 0 => n -> w
-        }.toMap
-        val ratios = control.toSeq.collect {
+      if (!f.isFile) Nil else try {
+        val node = json.readTree(f)
+        val cq = LinkedHashMap[String, Double]()
+        Option(node.get("control_queries")).foreach(_.fields().forEachRemaining { e =>
+          cq(e.getKey) = e.getValue.asDouble()
+        })
+        val warmByName = results.collect { case (n, (_, w, _)) if w >= 0 => n -> w }.toMap
+        val ratios = cq.toSeq.collect {
           case (n, c) if c > 0 && warmByName.contains(n) =>
             n -> math.round(warmByName(n) / c * 1000) / 1000.0
         }
@@ -340,66 +142,65 @@ object Bench {
             else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
           math.round(m * 1000) / 1000.0
         }
-        val famJson = fams.toSeq.sortBy(_._1).map { case (fm, rs) =>
-          s"${q(fm)}:${median(rs.map(_._2))}" }.mkString("{", ",", "}")
-        val ratioJson = ratios.map { case (n, r) => s"${q(n)}:$r" }.mkString("{", ",", "}")
-        val cqJson = control.map { case (n, c) => s"${q(n)}:$c" }.mkString("{", ",", "}")
         def str(k: String) = Option(node.get(k)).map(_.asText()).getOrElse("")
-        s""","control_total":${Option(node.get("control_total")).map(_.asDouble()).getOrElse(0.0)},"control_queries":$cqJson,"ratio_queries":$ratioJson,"family_ratio":$famJson,"control_engine":${q(str("control_engine"))},"control_version":${q(str("control_version"))},"control_threads":${Option(node.get("control_threads")).map(_.asInt()).getOrElse(0)},"control_sf":${q(str("control_sf"))}"""
+        Seq(
+          "control_total" -> Option(node.get("control_total")).map(_.asDouble()).getOrElse(0.0),
+          "control_queries" -> cq,
+          "ratio_queries" -> LinkedHashMap(ratios: _*),
+          "family_ratio" -> LinkedHashMap(fams.toSeq.sortBy(_._1).map { case (fm, rs) =>
+            fm -> median(rs.map(_._2).toSeq) }: _*),
+          "control_engine" -> str("control_engine"),
+          "control_version" -> str("control_version"),
+          "control_threads" -> Option(node.get("control_threads")).map(_.asInt()).getOrElse(0),
+          "control_sf" -> str("control_sf"))
       } catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] drift_control.json merge failed: ${e.getMessage}")
-        ""
+        Nil
       }
     }
-    val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","methodology":"$methodology","repeat":$repeat,"queries":$fullQs,"warm_total":$warmTotal,"warm_queries":$fullWarm,"all_times":$fullAll,"build_costs":$buildJson,"failed":${errors.size},"errors":$fullErrJson,"sf":"$sfDir"$controlJson}"""
-    try {
-      val w = new java.io.PrintWriter("bench_full.json")
-      try w.println(fullLine) finally w.close()
-    } catch { case e: Throwable =>
+    // Full per-query detail (full precision) goes to a file; the ONE
+    // stdout JSON line must survive the driver's 2000-char output-tail
+    // capture (below).
+    val full = LinkedHashMap[String, Any](
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "methodology" -> methodology, "repeat" -> repeat,
+      "queries" -> LinkedHashMap(results.map { case (k, (v, _, _)) => k -> v }: _*),
+      "warm_total" -> warmTotal,
+      "warm_queries" -> LinkedHashMap(results.map { case (k, (_, w, _)) => k -> w }: _*),
+      "all_times" -> LinkedHashMap(results.map { case (k, (_, _, ts)) => k -> ts }: _*),
+      "build_costs" -> buildCosts, "failed" -> errors.size, "errors" -> errors,
+      "sf" -> sfDir) ++ control
+    try json.writeValue(new java.io.File("bench_full.json"), full)
+    catch { case e: Throwable =>
       // stderr doesn't pollute the stdout JSON contract
       System.err.println(s"[bench] bench_full.json write failed: ${e.getMessage}")
     }
     // errors share the stdout budget and are themselves capped (each
     // entry is up to ~200 chars; 8+ failures would otherwise blow the
     // tail capture exactly when the diagnostics matter most)
-    val errEntries = errors.toSeq.map { case (k, v) => s"${q(k)}:${q(v)}" }
-    val (errKept, _) = errEntries.foldLeft((Vector.empty[String], 0)) {
-      case ((acc, len), e) =>
-        if (len + e.length + 1 <= 600) (acc :+ e, len + e.length + 1) else (acc, len)
-    }
-    val errJson = errKept.mkString("{", ",", "}")
-    val errElided = errEntries.size - errKept.size
-    // explicit locale: the default-locale format would emit comma
-    // decimals (invalid JSON) under e.g. de_DE
-    def f3(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val entries = results.sortBy(-_._2._1).map { case (k, (v, _, _)) =>
-      s"${q(k)}:${f3(v)}" }
+    val errKept = fit(errors.toSeq, 600)
     // repeat-disagreement callouts: a query whose repeats span more
     // than 50% of its min AND 0.3s absolute is environmental noise or
     // a warmup artifact, not plan cost — reported as [min,max] so a
     // reader can tell a noisy measurement from a real regression
-    val noisy = results.collect {
+    val noisy = fit(results.collect {
       case (k, (v, _, ts)) if v >= 0 && ts.size > 1 &&
         (ts.max - ts.min) > math.max(0.3, 0.5 * ts.min) =>
-        s"${q(k)}:[${f3(ts.min)},${f3(ts.max)}]"
-    }
-    val noisyJson = {
-      val (keep, _) = noisy.foldLeft((Vector.empty[String], 0)) {
-        case ((acc, len), e) =>
-          if (len + e.length + 1 <= 300) (acc :+ e, len + e.length + 1) else (acc, len)
-      }
-      keep.mkString("{", ",", "}")
-    }
-    val budget = 1600 - errJson.length - noisyJson.length
-    val (kept, used) = entries.foldLeft((Vector.empty[String], 0)) {
-      case ((acc, len), e) =>
-        if (len + e.length + 1 <= budget) (acc :+ e, len + e.length + 1) else (acc, len)
-    }
-    val elided = entries.size - kept.size
-    val warmFmt = f3(warmTotal)
-    val buildOut = buildCosts.map { case (k, v) => s"${q(k)}:${f3(v)}" }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","methodology":"$methodology","repeat":$repeat,"queries":${kept.mkString("{", ",", "}")},"queries_elided":$elided,"warm_total":$warmFmt,"build_costs":$buildOut,"noisy":$noisyJson,"failed":${errors.size},"errors":$errJson,"errors_elided":$errElided,"sf":"$sfDir"}""")
+        k -> Seq(r3(ts.min), r3(ts.max))
+    }, 300)
+    // the stdout queries dict lists slowest-first and stops at a
+    // character budget ("queries_elided" counts the fast ones cut;
+    // bench_full.json always has all of them)
+    val kept = fit(results.sortBy(-_._2._1).map { case (k, (v, _, _)) => k -> r3(v) },
+      1600 - json.writeValueAsString(errKept).length - json.writeValueAsString(noisy).length)
+    println(json.writeValueAsString(LinkedHashMap[String, Any](
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "methodology" -> methodology, "repeat" -> repeat,
+      "queries" -> kept, "queries_elided" -> (results.size - kept.size),
+      "warm_total" -> r3(warmTotal),
+      "build_costs" -> buildCosts.map { case (k, v) => k -> r3(v) },
+      "noisy" -> noisy, "failed" -> errors.size, "errors" -> errKept,
+      "errors_elided" -> (errors.size - errKept.size), "sf" -> sfDir)))
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

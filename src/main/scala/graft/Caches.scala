@@ -41,8 +41,7 @@ object Caches {
     * (2) UNLIKE [[owned]] frames, a checkpointed frame is permanently
     * unusable after [[releaseAll]] — the truncated lineage cannot
     * recompute dropped blocks, so a handle must NEVER be reused
-    * across a release boundary (the d_dup_clusters cross-query
-    * shared-handle pattern must stay on plain persists). */
+    * across a release boundary. */
   def checkpointed(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
     // register the checkpoint's OWN RDD (the LogicalRDD leaf), not a

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: run ONE registered query (args: name [sfDir [repeats]])
   * with a listener that prints per-job wall time, stage/task counts and
@@ -14,36 +13,31 @@ object ProfileQ {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val repeats = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config(graft.sources.Tables.conf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
-    final case class J(start: Long, desc: String,
+    final case class J(start: Long, desc: String, stageIds: Seq[Int],
                        var end: Long = 0L, var stages: Int = 0, var tasks: Int = 0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     // exact stage -> job mapping via SparkListenerJobStart.stageIds
     // (the old form attributed a completed stage to an arbitrary
-    // unfinished job — iteration-order-dependent under overlap)
+    // unfinished job — iteration-order-dependent under overlap); a
+    // job's entries are dropped when it ends, so the map holds only
+    // running jobs' stages
     val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val d = Option(e.properties.getProperty("spark.job.description"))
           .orElse(Option(e.properties.getProperty("callSite.short"))).getOrElse("?")
-        jobs.put(e.jobId, J(e.time, d)); order.add(e.jobId)
+        jobs.put(e.jobId, J(e.time, d, e.stageIds)); order.add(e.jobId)
         e.stageIds.foreach(sid => stageJob.put(sid, e.jobId))
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        val j = jobs.get(e.jobId); if (j != null) j.end = e.time
+        val j = jobs.get(e.jobId)
+        if (j != null) {
+          j.end = e.time
+          j.stageIds.foreach(sid => stageJob.remove(sid, e.jobId))
+        }
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val jid = stageJob.getOrDefault(e.stageInfo.stageId, -1)
@@ -55,12 +49,7 @@ object ProfileQ {
     val fn = SparkEntry.queries(name)
     for (r <- 1 to repeats) {
       jobs.clear(); order.clear()
-      System.gc()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      Caches.releaseAll(blocking = true)
-      spark.catalog.clearCache()
+      val dt = Runner.time(spark, fn(spark, sfDir)).fold(e => throw e, identity)
       println(f"== repeat $r: $name total ${dt}%.3f s, ${jobs.size} jobs ==")
       if (r == repeats) {
         val it = order.iterator()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-slope bench: times the dedup / ANN / text-pipeline query
   * family at two corpus scales (1× = the SF dir's own documents/
   * embeddings; N× = a [[ScaleGen]] output dir) and reports sec and the
@@ -234,12 +232,11 @@ object ScaleBench {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val bigDir = if (args.length > 1) args(1) else "/root/repo/scaledata/x10"
     val factor = if (args.length > 2) args(2).toDouble else 10.0
-    // dev knob (like Bench's SPARK_GRAFT_ONLY): restrict the family —
-    // e.g. the x100 second-decade run curates out the shingle-join
-    // pair whose spill exceeds this box's disk at 50M shingle rows
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val preFixture = only.fold(Family)(o => Family.filter(o.contains))
-    // SCALE-CLASS ENFORCEMENT (SparkEntry.scaleOverrides): fixture
+    // Runner.only restricts the family — e.g. the
+    // x100 second-decade run curates out the shingle-join pair whose
+    // spill exceeds this box's disk at 50M shingle rows
+    val preFixture = Runner.only.fold(Family)(o => Family.filter(o.contains))
+    // SCALE-CLASS ENFORCEMENT (each query's `Q.scale`): fixture
     // forms are excluded from decade sweeps past their documented
     // wall — LOUDLY (never a silent cap), with an explicit dev
     // override for re-measuring a wall on purpose. factor is parsed
@@ -255,55 +252,17 @@ object ScaleBench {
       println(s"[scalebench] EXCLUDED past their documented fixture wall at x$factor: " +
         excluded.map(n => s"$n (${SparkEntry.scaleClasses(n)})").mkString(", ") +
         " — set SPARK_GRAFT_INCLUDE_FIXTURES=1 to re-measure a wall deliberately")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config(graft.sources.Tables.conf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed: session/codegen warmup + per-plan precompile at sf0.001
-    spark.range(0, 1000).selectExpr("md5(cast(id as string)) AS h", "id % 7 AS k")
-      .groupBy("k").count().write.format("noop").mode("overwrite").save()
-    val preDir = new java.io.File(new java.io.File(baseDir).getParentFile, "sf0.001")
-    for (n <- family) {
-      try SparkEntry.queries(n)(spark, preDir.getAbsolutePath)
-        .write.format("noop").mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(_) => () }
-      spark.catalog.clearCache()
-    }
-    def timeAt(dir: String): Map[String, (Double, Double)] = {
-      // same label sharing as Bench: d_dup_clusters (earlier in
-      // Family) materializes the labels, d_dedup_keep is timed as the
-      // incremental Dedup.keepList anti-join over them — the slope
-      // then measures the end product's own cost, not clustering twice
-      var labels: Option[org.apache.spark.sql.DataFrame] = None
-      def run(n: String): org.apache.spark.sql.DataFrame = n match {
-        case "d_dup_clusters" =>
-          val df = SparkEntry.queries(n)(spark, dir); labels = Some(df); df
-        case "d_dedup_keep" if labels.isDefined =>
-          import org.apache.spark.sql.functions.col
-          graft.ops.Dedup.keepList(labels.get,
-              graft.sources.Tables.load(spark, dir, "documents"))
-            .select(col("doc_id"), col("n_chars"))
-        case _ => SparkEntry.queries(n)(spark, dir)
-      }
-      family.map { n =>
-        val ts = (1 to 2).map { _ =>
-          System.gc()
-          val t0 = System.nanoTime()
-          run(n).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          dt
-        }
-        n -> (ts.head, ts.min)
+    val spark = GraftSession.create()
+    val byName = SparkEntry.allQueries.map(q => q.name -> q).toMap
+    val qs = family.map(byName)
+    Runner.warmup(spark, baseDir, qs)
+    def timed(df: => org.apache.spark.sql.DataFrame): Double =
+      Runner.time(spark, df).fold(e => throw e, identity)
+    def timeAt(dir: String): Map[String, (Double, Double)] =
+      qs.map { q =>
+        val ts = (1 to 2).map(_ => timed(q.fn(spark, dir)))
+        q.name -> (ts.head, ts.min)
       }.toMap
-    }
     val t1 = timeAt(baseDir)
     val tN = timeAt(bigDir)
     // ---- flagship at REFERENCE SHAPE (datasets.py:218-225: batches of
@@ -318,15 +277,8 @@ object ScaleBench {
       val ev = spark.range(0, users.toLong * 36)
         .selectExpr("id div 36 AS user_id", "CAST(id % 36 AS DOUBLE) AS tsd",
           "id % 36 AS event_id", "CAST((id * 37) % 199 AS DOUBLE) / 2.0 AS value")
-      (1 to 2).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        graft.ops.Fold.foldTypedConvGrid(spark, ev, "user_id", "tsd", "event_id", "value", w)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
-      }.min
+      (1 to 2).map(_ => timed(graft.ops.Fold.foldTypedConvGrid(
+        spark, ev, "user_id", "tsd", "event_id", "value", w))).min
     }
     refShape(16, 4) // untimed: JIT the fold path at both branch shapes
     val ref16 = refShape(16, 32)

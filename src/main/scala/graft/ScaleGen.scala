@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-slope corpus generator: materializes an N× `documents` +
@@ -53,12 +52,7 @@ object ScaleGen {
       if (args.length > 3 && args(3).nonEmpty) args(3).split(",").map(_.trim).toSet
       else Set("documents", "embeddings")
     val offArg: Option[Long] = if (args.length > 4) Some(args(4).toLong) else None
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config(graft.sources.Tables.conf)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val off = offArg.getOrElse(10000000L)
     val mode = if (args.length > 5 && args(5).nonEmpty) args(5) else "copy"
     require(mode == "copy" || mode == "crawl", s"mode must be copy|crawl, got $mode")

@@ -49,43 +49,8 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map(q => q.name -> q.fn).toMap
 
-  /** SCALE-CLASS registry (r19): which graded forms ship at 100 TB
-    * and which are SEMANTIC FIXTURES kept for their oracle value. A
-    * user picking a query by name reads this; ScaleBench enforces it
-    * (fixture forms are excluded from decade sweeps past their
-    * documented wall — a loud exclusion, never a silent cap);
-    * `tools/check_coverage.py` cross-checks it against COVERAGE.md;
-    * Verify dumps the full map as `scale_class.json`.
-    *
-    * Vocabulary: `linear` (data-proportional — the default for every
-    * query not listed here), `fixture@x<N>` (correct at every graded
-    * SF but superlinear by construction; measured through the x<N>
-    * decade and excluded beyond it). Walls are MEASURED, not argued:
-    * SCALE.md records each one. */
-  val scaleOverrides: Map[String, String] = Map(
-    // fixed K=8 while N grows: per-cluster pair work is (N/K)^2 by
-    // construction — 141 s / slope 29.9 at x100 (SCALE.md r18);
-    // the production forms are e_semdedup_kscaled (x100) and
-    // e_semdedup_bucketed/_probed (every decade)
-    "e_semdedup_keep" -> "fixture@x10",
-    // exact two-level hierarchy: O(N^1.5) assignment — linear-class
-    // through x100 (18.9 s), 1275 s / slope 51 at x1000 (SCALE.md
-    // r18); past x100 the graded linear route is e_semdedup_bucketed
-    "e_semdedup_kscaled" -> "fixture@x100",
-    // both embed the exact hierarchy as recall ground truth, so they
-    // inherit its wall; the production query they calibrate
-    // (e_semdedup_probed) is linear at every decade
-    "e_semdedup_recall_curve" -> "fixture@x100",
-    "e_semdedup_opq" -> "fixture@x100",
-    "e_semdedup_opq_probed" -> "fixture@x100")
-
-  /** The full per-query scale-class map (default `linear`). */
-  def scaleClasses: Map[String, String] = {
-    val unknown = scaleOverrides.keySet.diff(allQueries.map(_.name).toSet)
-    require(unknown.isEmpty,
-      s"scaleOverrides name(s) not in the registry: ${unknown.mkString(", ")}")
-    allQueries.map(q => q.name -> scaleOverrides.getOrElse(q.name, "linear")).toMap
-  }
+  /** The full per-query scale-class map ([[Q]]'s `scale`). */
+  def scaleClasses: Map[String, String] = allQueries.map(q => q.name -> q.scale).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

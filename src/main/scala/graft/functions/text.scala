@@ -124,14 +124,6 @@ object text {
         i => concat_ws(" ", (0 until k).map(o => element_at(toks, i + lit(o + 1))): _*)))
   }
 
-  /** One MinHash signature component: `min(md5(seed || ':' || shingle))`
-    * over a document's shingle set. md5 output is uniformly distributed
-    * hex, so the min over salted hashes is a valid MinHash permutation.
-    * Returns an expression over an exploded `shingle` column — use under
-    * `groupBy(doc).agg(...)`. */
-  def minhashAgg(shingle: Column, seed: Int): Column =
-    min(md5(concat(lit(s"$seed:"), shingle)))
-
   /** SimHash over 16 md5-hex-digit bits: for a token's md5 hex and bit
     * b, the b-th hex digit's high bit votes +1/-1; document bit b is
     * the sign of the vote sum. Takes the PRE-COMPUTED md5 hex (compute

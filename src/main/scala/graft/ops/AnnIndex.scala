@@ -138,7 +138,7 @@ object AnnIndex {
                            fingerprint: String, k: Int = 8,
                            p: Pq.Params = Pq.Params())
                           (mkR: => Array[Array[Double]]): Unit =
-    oncePerFingerprint(spark, dir, s"opqivfpq_k$k", fingerprint) {
+    Stores.oncePerFingerprint(spark, dir, s"opqivfpq_k$k", fingerprint) {
       buildRotated(emb, dir, mkR, k, p)
     }
 
@@ -275,7 +275,7 @@ object AnnIndex {
   def buildTakedownIfAbsent(spark: SparkSession, emb: DataFrame, removedIds: DataFrame,
                             dir: String, k: Int = 8, p: Pq.Params = Pq.Params(),
                             fingerprint: String): Unit =
-    oncePerFingerprint(spark, dir, "built_td", fingerprint) {
+    Stores.oncePerFingerprint(spark, dir, "built_td", fingerprint) {
       build(emb, dir, k, p)
       takedown(spark, removedIds, dir)
     }
@@ -328,34 +328,6 @@ object AnnIndex {
     s"${fp.getLong(0)}_${fp.getLong(1)}_${fp.getLong(2)}"
   }
 
-  /** Run `work` exactly once per (dir, kind, [[BuildVersion]],
-    * fingerprint). When the CURRENT marker is absent the dir is
-    * cleared first — that removes stale data AND stale markers of
-    * prior fingerprints, so an older corpus state can never be served
-    * off its leftover marker after the data flip-flops. The marker is
-    * written only after `work` completes: a crash restarts from an
-    * empty dir. */
-  /** Public marker-lifecycle entry for OTHER persisted artifacts
-    * (e.g. the per-group sketch store): run `work` exactly once per
-    * (dir, fingerprint) with the same crash-self-heal / stale-marker
-    * clearing semantics as the index builds. */
-  def oncePerSketchStore(spark: SparkSession, dir: String, fp: String)(work: => Unit): Unit =
-    oncePerFingerprint(spark, dir, "sketches", fp)(work)
-
-  private[ops] def oncePerFingerprint(spark: SparkSession, dir: String,
-                                      kind: String, fp: String,
-                                      version: Int = BuildVersion)(work: => Unit): Unit =
-    synchronized {
-      val marker = new org.apache.hadoop.fs.Path(
-        s"$dir/_${kind}_v${version}_$fp")
-      val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(marker)) {
-        fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        work
-        fs.create(marker, true).close()
-      }
-    }
-
   /** Build-base-then-append exactly ONCE per corpus fingerprint — the
     * graded incremental-maintenance flow. The idempotency unit is the
     * whole build+append sequence: a half-applied append is
@@ -368,7 +340,7 @@ object AnnIndex {
                           delta: DataFrame, dir: String, k: Int = 8,
                           p: Pq.Params = Pq.Params(),
                           fingerprint: Option[String] = None): Unit =
-    oncePerFingerprint(spark, dir, "built_append",
+    Stores.oncePerFingerprint(spark, dir, "built_append",
       fingerprint.getOrElse(dataFingerprint(base.unionAll(delta)))) {
       build(base, dir, k, p)
       append(spark, delta, dir, p)
@@ -443,7 +415,7 @@ object AnnIndex {
                     k: Int = 8, p: Pq.Params = Pq.Params(),
                     fingerprint: Option[String] = None,
                     cells: Option[DataFrame] = None): Unit =
-    oncePerFingerprint(spark, dir, if (cells.isDefined) "built_tr" else "built",
+    Stores.oncePerFingerprint(spark, dir, if (cells.isDefined) "built_tr" else "built",
       fingerprint.getOrElse(dataFingerprint(emb))) {
       build(emb, dir, k, p, cells)
     }

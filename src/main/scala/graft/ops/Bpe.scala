@@ -292,7 +292,7 @@ object Bpe {
   }
 
   /** Persist the trained dictionary exactly ONCE per corpus
-    * fingerprint (the shared [[AnnIndex.oncePerFingerprint]] marker
+    * fingerprint (the shared [[Stores.oncePerFingerprint]] marker
     * lifecycle — the same serving contract as the ANN index and the
     * dedup store): the tokenizer's trained artifact. At 100 TB the
     * training chain runs once per corpus version; every later encode
@@ -304,7 +304,7 @@ object Bpe {
   def buildDictIfAbsent(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
                         textCol: Column, dir: String, iters: Int,
                         fingerprint: String): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, s"bpedict_i$iters", fingerprint) {
+    Stores.oncePerFingerprint(spark, dir, s"bpedict_i$iters", fingerprint) {
       val t = trainedDictFull(docs, textCol, iters)
       t.result.write.mode("overwrite").parquet(s"$dir/dict")
       t.unpersistAll()
@@ -358,7 +358,7 @@ object Bpe {
   def exportArtifactsIfAbsent(spark: org.apache.spark.sql.SparkSession,
                               docs: DataFrame, textCol: Column, dir: String,
                               iters: Int, fingerprint: String): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, s"bpeart_i$iters", fingerprint) {
+    Stores.oncePerFingerprint(spark, dir, s"bpeart_i$iters", fingerprint) {
       val (merges, dictCf) = trainedWithMergesFull(docs, textCol, iters)
       exportArtifacts(spark, merges, dictCf.result, dir)
       dictCf.unpersistAll()

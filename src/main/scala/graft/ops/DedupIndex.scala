@@ -111,7 +111,7 @@ object DedupIndex {
                     textCol: Column, idCol: Column,
                     shingleK: Int = 3, seeds: Int = 4, bands: Int = 4,
                     fingerprint: String): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, "dedup", fingerprint, BuildVersion) {
+    Stores.oncePerFingerprint(spark, dir, "dedup", fingerprint, BuildVersion) {
       build(docs, dir, textCol, idCol, shingleK, seeds, bands)
     }
 
@@ -243,7 +243,7 @@ object DedupIndex {
                             dir: String, textCol: Column, idCol: Column,
                             shingleK: Int = 3, seeds: Int = 4, bands: Int = 4,
                             fingerprint: String): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, "dedup_td", fingerprint, BuildVersion) {
+    Stores.oncePerFingerprint(spark, dir, "dedup_td", fingerprint, BuildVersion) {
       build(corpus, dir, textCol, idCol, shingleK, seeds, bands)
       takedown(removed, dir, textCol, idCol)
     }
@@ -263,7 +263,7 @@ object DedupIndex {
     // matchMin/maxBucket shape WHICH delta rows the store absorbed, so
     // they are part of the store's identity: changing either must
     // rebuild, not silently reuse a store keyed only by the data
-    AnnIndex.oncePerFingerprint(spark, dir, "dedup_app",
+    Stores.oncePerFingerprint(spark, dir, "dedup_app",
       s"$fingerprint|mm=$matchMin|cap=$maxBucket", BuildVersion) {
       build(corpus, dir, textCol, idCol, shingleK, seeds, bands)
       append(deltaKeep(spark, delta, dir, textCol, idCol, shingleK, seeds, bands,
@@ -353,7 +353,7 @@ object DedupIndex {
                                  delta: DataFrame, dir: String,
                                  textCol: Column, idCol: Column,
                                  fingerprint: String): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, "dedup_pin", fingerprint, BuildVersion) {
+    Stores.oncePerFingerprint(spark, dir, "dedup_pin", fingerprint, BuildVersion) {
       build(base, dir, textCol, idCol)
       compact(spark, dir)
       append(deltaKeep(spark, delta, dir, textCol, idCol), dir, textCol, idCol)

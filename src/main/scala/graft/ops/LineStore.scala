@@ -66,11 +66,11 @@ object LineStore {
     CompactSwap.readVersion(spark, dir, "counts", v)
 
   /** [[build]] once per (dir, corpus fingerprint) — the shared marker
-    * lifecycle ([[AnnIndex.oncePerFingerprint]]). */
+    * lifecycle ([[Stores.oncePerFingerprint]]). */
   def buildIfAbsent(spark: SparkSession, docs: DataFrame, dir: String,
                     textCol: Column, idCol: Column, sep: String = "\n",
                     fingerprint: String): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, "linestore", fingerprint, BuildVersion) {
+    Stores.oncePerFingerprint(spark, dir, "linestore", fingerprint, BuildVersion) {
       build(docs, dir, textCol, idCol, sep)
     }
 
@@ -147,7 +147,7 @@ object LineStore {
   def buildTakedownIfAbsent(spark: SparkSession, docs: DataFrame, removed: DataFrame,
                             dir: String, textCol: Column, idCol: Column,
                             sep: String = "\n", fingerprint: String): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, "linestore_td", fingerprint, BuildVersion) {
+    Stores.oncePerFingerprint(spark, dir, "linestore_td", fingerprint, BuildVersion) {
       build(docs, dir, textCol, idCol, sep)
       takedown(removed, dir, textCol, idCol, sep)
     }

@@ -204,7 +204,7 @@ object Logistic {
   }
 
   /** Persist the trained weight vector exactly ONCE per corpus
-    * fingerprint (the shared [[AnnIndex.oncePerFingerprint]] marker
+    * fingerprint (the shared [[Stores.oncePerFingerprint]] marker
     * lifecycle): the quality model's serving artifact — p doubles in
     * a one-row parquet, the smallest store in the serving family.
     * At 100 TB the 2·steps training passes run once per corpus
@@ -213,7 +213,7 @@ object Logistic {
   def buildWeightsIfAbsent(spark: org.apache.spark.sql.SparkSession,
                            feat: DataFrame, p: Int, steps: Int, lr: Double,
                            dir: String, fingerprint: String): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, s"logit_p${p}_s$steps", fingerprint) {
+    Stores.oncePerFingerprint(spark, dir, s"logit_p${p}_s$steps", fingerprint) {
       val w = trainWeights(feat, p, steps, lr)
       spark.createDataFrame(
         spark.sparkContext.parallelize(Seq(Row(w)), 1),
@@ -363,7 +363,7 @@ object Logistic {
   def buildOvrWeightsIfAbsent(spark: org.apache.spark.sql.SparkSession,
                               feat: DataFrame, p: Int, classes: Int, steps: Int,
                               lr: Double, dir: String, fingerprint: String): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir,
+    Stores.oncePerFingerprint(spark, dir,
       s"ovr_p${p}_c${classes}_s$steps", fingerprint) {
       val w = trainOvrWeights(feat, p, classes, steps, lr)
       spark.createDataFrame(

@@ -69,8 +69,4 @@ object Raster {
   def decodeU16(code: Column, scale: Double): Column =
     when(code === lit(FillCode), lit(null).cast("double"))
       .otherwise(code.cast("double") * lit(scale))
-
-  /** Number of cells in a blob of `nVars` interleaved uint16s. */
-  def nCells(blob: Column, nVars: Int): Column =
-    (length(blob) / lit(2 * nVars)).cast("long")
 }

@@ -181,7 +181,7 @@ object SemDedupStore {
                     fingerprint: String, k1: Int = DefaultK1,
                     cbar: Long = DefaultCbar, dim: Int = 64,
                     opq: Boolean = false): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir,
+    Stores.oncePerFingerprint(spark, dir,
       if (opq) "semdedup_opq" else "semdedup", fingerprint,
       BuildVersion) {
       build(emb, dir, k1, cbar, dim, opq)

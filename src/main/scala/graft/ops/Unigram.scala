@@ -230,7 +230,7 @@ object Unigram {
                           textCol: Column, dir: String, rounds: Int,
                           fingerprint: String, maxPieceLen: Int = 4,
                           maxWordLen: Int = 8): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, s"unigramart_r$rounds", fingerprint) {
+    Stores.oncePerFingerprint(spark, dir, s"unigramart_r$rounds", fingerprint) {
       val (_, cnts, caches) = refinedCounts(docs, textCol, rounds, maxPieceLen, maxWordLen)
       exportPieces(spark, cnts, s"$dir/unigram_pieces.tsv")
       caches.foreach(_.unpersist(false))
@@ -313,7 +313,7 @@ object Unigram {
     Bpe.decodeWithVocab(ids, pieceVocab(segs))
 
   /** Persist the round-`rounds` segmentation cache exactly ONCE per
-    * corpus fingerprint (the shared [[AnnIndex.oncePerFingerprint]]
+    * corpus fingerprint (the shared [[Stores.oncePerFingerprint]]
     * marker lifecycle — the serving contract of the ANN index, dedup
     * store, BPE dict, and sketch store): the unigram tokenizer's
     * trained artifact. Training runs once per corpus version; every
@@ -324,7 +324,7 @@ object Unigram {
                          textCol: Column, dir: String, rounds: Int,
                          fingerprint: String, maxPieceLen: Int = 4,
                          maxWordLen: Int = 8): Unit =
-    AnnIndex.oncePerFingerprint(spark, dir, s"unigram_r$rounds", fingerprint) {
+    Stores.oncePerFingerprint(spark, dir, s"unigram_r$rounds", fingerprint) {
       val segs = segmentFull(docs, textCol, rounds, maxPieceLen, maxWordLen)
       segs.result.write.mode("overwrite").parquet(s"$dir/segs")
       segs.unpersistAll()

@@ -539,7 +539,7 @@ object MiscQueries {
       (s, d) => {
         val ev = T(s, d, "events")
         val dir = s"${sys.props("java.io.tmpdir")}/graft-hll-${storeKey(d)}"
-        graft.ops.AnnIndex.oncePerSketchStore(s, dir,
+        graft.ops.Stores.oncePerFingerprint(s, dir, "sketches",
           graft.ops.AnnIndex.tableFingerprint(s, s"$d/events.parquet")) {
           ev.groupBy(col("event_type"))
             .agg(hll_sketch_agg(col("user_id").cast("string"), lit(12)).as("sk"))
@@ -556,7 +556,7 @@ object MiscQueries {
               col("n_exact").cast("double") * lit(0.05)).as("within_bound"))
       },
       Some("""SELECT count(DISTINCT user_id) AS n_exact, TRUE AS within_bound
-             |FROM events WHERE event_type IN ('click', 'view')""".stripMargin)),
+             |FROM events WHERE event_type IN ('click', 'view')""".stripMargin), build = true),
 
     // HIERARCHY ROLLUP over the sketch store — the pre-aggregated-
     // cube contract that justifies persisting sketches at all: the
@@ -577,7 +577,7 @@ object MiscQueries {
       (s, d) => {
         val docs = T(s, d, "documents")
         val dir = s"${sys.props("java.io.tmpdir")}/graft-hllcube-${storeKey(d)}"
-        graft.ops.AnnIndex.oncePerSketchStore(s, dir,
+        graft.ops.Stores.oncePerFingerprint(s, dir, "sketches",
           graft.ops.AnnIndex.tableFingerprint(s, s"$d/documents.parquet")) {
           docs.groupBy(col("lang"), col("source"))
             .agg(hll_sketch_agg(md5(col("text")), lit(12)).as("sk"))
@@ -601,7 +601,7 @@ object MiscQueries {
               col("n_exact").cast("double") * lit(0.05)).as("within_bound"))
       },
       Some("""SELECT lang, source, count(DISTINCT md5(text)) AS n_exact, TRUE AS within_bound
-             |FROM documents GROUP BY ROLLUP (lang, source)""".stripMargin)),
+             |FROM documents GROUP BY ROLLUP (lang, source)""".stripMargin), build = true),
 
     // the sketch store's ERASURE story, graded — the measured verb
     // behind the recorded impossibility: HLL registers cannot
@@ -626,14 +626,14 @@ object MiscQueries {
         val ev = T(s, d, "events")
         val fp = graft.ops.AnnIndex.tableFingerprint(s, s"$d/events.parquet")
         val dirA = s"${sys.props("java.io.tmpdir")}/graft-hllreb-${storeKey(d)}"
-        graft.ops.AnnIndex.oncePerSketchStore(s, dirA, fp) {
+        graft.ops.Stores.oncePerFingerprint(s, dirA, "sketches", fp) {
           ev.groupBy(col("event_type"))
             .agg(hll_sketch_agg(col("user_id").cast("string"), lit(12)).as("sk"))
             .write.mode("overwrite").parquet(s"$dirA/sketches")
           graft.ops.Sketches.takedownGroup(s, dirA, col("event_type") === "click")
         }
         val dirB = s"${sys.props("java.io.tmpdir")}/graft-hllreb2-${storeKey(d)}"
-        graft.ops.AnnIndex.oncePerSketchStore(s, dirB, fp) {
+        graft.ops.Stores.oncePerFingerprint(s, dirB, "sketches", fp) {
           ev.where(col("event_type") =!= "click").groupBy(col("event_type"))
             .agg(hll_sketch_agg(col("user_id").cast("string"), lit(12)).as("sk"))
             .write.mode("overwrite").parquet(s"$dirB/sketches")
@@ -660,7 +660,7 @@ object MiscQueries {
       Some("""SELECT event_type, count(DISTINCT user_id) AS n_exact,
              |  TRUE AS within_bound, TRUE AS parity, CAST(0 AS BIGINT) AS sym_diff
              |FROM events WHERE event_type <> 'click'
-             |GROUP BY ROLLUP (event_type)""".stripMargin)),
+             |GROUP BY ROLLUP (event_type)""".stripMargin), build = true),
 
     // the INGESTED store: the corpus arrives as three batches
     // (doc_id mod 3 — a deterministic stand-in for arrival order)
@@ -676,7 +676,7 @@ object MiscQueries {
       (s, d) => {
         val docs = T(s, d, "documents")
         val dir = s"${sys.props("java.io.tmpdir")}/graft-hllingest-${storeKey(d)}"
-        graft.ops.AnnIndex.oncePerSketchStore(s, dir,
+        graft.ops.Stores.oncePerFingerprint(s, dir, "sketches",
           graft.ops.AnnIndex.tableFingerprint(s, s"$d/documents.parquet")) {
           for (b <- 0 to 2)
             graft.ops.Sketches.ingestBatch(
@@ -695,7 +695,7 @@ object MiscQueries {
               col("n_exact").cast("double") * lit(0.05)).as("within_bound"))
       },
       Some("""SELECT lang, source, count(DISTINCT md5(text)) AS n_exact, TRUE AS within_bound
-             |FROM documents GROUP BY ROLLUP (lang, source)""".stripMargin)),
+             |FROM documents GROUP BY ROLLUP (lang, source)""".stripMargin), build = true),
 
     // approx_percentile (Greenwald-Khanna sketch): same contract — the
     // sketch value stays out of the hash; the graded row checks the

@@ -786,7 +786,12 @@ object SimilarityQueries {
               |             WHERE (floor((${cosSql("a.ve", "b.ve")}) * 1000000 + 0.5e0)
               |                    / 1000000.0e0) >= 0.40)
               |SELECT vec_id FROM embeddings
-              |WHERE vec_id NOT IN (SELECT vec_id FROM sdropped)""".stripMargin)),
+              |WHERE vec_id NOT IN (SELECT vec_id FROM sdropped)""".stripMargin),
+      // fixed K=8 while N grows: per-cluster pair work is (N/K)^2 by
+      // construction — 141 s / slope 29.9 at x100 (SCALE.md r18);
+      // the production forms are e_semdedup_kscaled (x100) and
+      // e_semdedup_bucketed/_probed (every decade)
+      scale = "fixture@x10"),
 
     // SemDeDup at the PRODUCTION cluster count — the paper's own
     // configuration (Abbas et al. 2023 §3: K chosen so clusters stay
@@ -826,7 +831,11 @@ object SimilarityQueries {
       },
       Some(s"""${semdedupExactCtes("")}
               |SELECT vec_id FROM embeddings
-              |WHERE vec_id NOT IN (SELECT vec_id FROM xdrop)""".stripMargin)),
+              |WHERE vec_id NOT IN (SELECT vec_id FROM xdrop)""".stripMargin),
+      // exact two-level hierarchy: O(N^1.5) assignment — linear-class
+      // through x100 (18.9 s), 1275 s / slope 51 at x1000 (SCALE.md
+      // r18); past x100 the graded linear route is e_semdedup_bucketed
+      scale = "fixture@x100"),
 
     // SemDeDup BEYOND the exact-hierarchy decade — the shape that
     // stays LINEAR at every measured scale. The two-level exact
@@ -949,7 +958,11 @@ object SimilarityQueries {
                  |  (SELECT count(*) FROM dr$r),
                  |  (SELECT count(*) FROM dr$r WHERE vec_id IN (SELECT vec_id FROM xxdrop))"""
                 .stripMargin).mkString("\n")}""".stripMargin
-      }),
+      },
+      // embeds the exact hierarchy as recall ground truth, so it
+      // inherits its wall; the production query it calibrates
+      // (e_semdedup_probed) is linear at every decade
+      scale = "fixture@x100"),
 
     // SemDeDup with an OPQ-LEARNED residual basis — the r19 advisor
     // construction: the residual hyperplane split above is
@@ -989,7 +1002,9 @@ object SimilarityQueries {
            |  (SELECT count(*) FROM dr0 WHERE vec_id IN (SELECT vec_id FROM xxdrop))
            |    AS overlap_unrot,
            |  TRUE AS qerr_improved, TRUE AS orthogonal, TRUE AS recall_lift""".stripMargin
-      }),
+      },
+      // same exact-hierarchy ground truth as e_semdedup_recall_curve
+      scale = "fixture@x100"),
 
     // the TWO recall knobs COMPOSED — learned basis x multi-probe:
     // the r19 surface graded each independently (e_semdedup_probed
@@ -1025,7 +1040,9 @@ object SimilarityQueries {
            |  (SELECT count(*) FROM dr1 WHERE vec_id IN (SELECT vec_id FROM xxdrop))
            |    AS overlap_unrot,
            |  TRUE AS qerr_improved, TRUE AS orthogonal, TRUE AS recall_lift""".stripMargin
-      }),
+      },
+      // same exact-hierarchy ground truth as e_semdedup_recall_curve
+      scale = "fixture@x100"),
 
     // SemDeDup SERVED from the persisted store — the incremental
     // 100 TB shape (what d_delta_index_keep is to exact/MinHash
@@ -1094,7 +1111,7 @@ object SimilarityQueries {
            |SELECT vec_id FROM embeddings
            |WHERE vec_id % 10 = 9
            |  AND vec_id NOT IN (SELECT vec_id FROM vdrop)""".stripMargin
-      }),
+      }, build = true),
 
     // PRODUCT QUANTIZATION + asymmetric distance (Jégou et al. 2011):
     // the embedding-COMPRESSION path of a 100 TB vector store. The
@@ -1423,7 +1440,7 @@ object SimilarityQueries {
           emb.where(col("vec_id") === 0).select(col("ve").as("qv")),
           nprobe = 1, limit = 10, p = P)
       },
-      Some(ivfpqSql(nprobe = 1))),
+      Some(ivfpqSql(nprobe = 1)), build = true),
 
     // the FRESH-SERVING primitive graded: AnnIndex.searchBatch is
     // what serveStream runs per micro-batch — multi-query capable,
@@ -1452,7 +1469,7 @@ object SimilarityQueries {
               |SELECT CAST(0 AS BIGINT) AS query_id,
               |  CAST(row_number() OVER (ORDER BY ad2 ASC, vec_id ASC) AS BIGINT) AS rk,
               |  vec_id, ad2
-              |FROM body""".stripMargin)),
+              |FROM body""".stripMargin), build = true),
 
     // INCREMENTAL index maintenance — the other half of the serving
     // story: build the persisted index over MOST of the corpus, then
@@ -1481,7 +1498,7 @@ object SimilarityQueries {
           emb.where(col("vec_id") === 0).select(col("ve").as("qv")),
           nprobe = 1, limit = 10, p = P)
       },
-      Some(ivfpqSql(nprobe = 1))),
+      Some(ivfpqSql(nprobe = 1)), build = true),
 
     // TAKEDOWN — the index's erasure verb graded end to end: build
     // the persisted index, tombstone the vec_id % 7 == 3 slice
@@ -1509,7 +1526,7 @@ object SimilarityQueries {
           emb.where(col("vec_id") === 0).select(col("ve").as("qv")),
           nprobe = 1, limit = 10, p = P)
       },
-      Some(ivfpqSql(nprobe = 1, excludePred = "vec_id % 7 <> 3"))),
+      Some(ivfpqSql(nprobe = 1, excludePred = "vec_id % 7 <> 3")), build = true),
 
     // FILTERED search — the metadata-predicate serving shape every
     // production vector store needs ("top-k among docs matching
@@ -1533,7 +1550,7 @@ object SimilarityQueries {
           nprobe = 1, limit = 10, p = P,
           allow = Some(emb.where(col("vec_id") % 2 === 0).select(col("vec_id"))))
       },
-      Some(ivfpqSql(nprobe = 1, excludePred = "vec_id % 2 = 0"))),
+      Some(ivfpqSql(nprobe = 1, excludePred = "vec_id % 2 = 0")), build = true),
 
     // the persisted x trained matrix cell: build the MATERIALIZED
     // index over k-means-trained centroids (meta carries the trained
@@ -1554,7 +1571,7 @@ object SimilarityQueries {
           emb.where(col("vec_id") === 0).select(col("ve").as("qv")),
           nprobe = 1, limit = 10, p = P)
       },
-      Some(trainedIvfpqSql(2, 1))),
+      Some(trainedIvfpqSql(2, 1)), build = true),
 
     // IVFADC over a TRAINED coarse quantizer — the full composition
     // every IVF query's "swap the seed for trained centroids" note
@@ -1878,7 +1895,7 @@ object SimilarityQueries {
           .select(col("method"), col("k"),
             (col("hits") >= PqRecallBound).as("within_bound"))
       },
-      Some("SELECT 'opq_ivfpq' AS method, 10 AS k, TRUE AS within_bound")),
+      Some("SELECT 'opq_ivfpq' AS method, 10 AS k, TRUE AS within_bound"), build = true),
 
     // FULL-VECTOR k-means to (fixed-point) convergence — the coarse-
     // quantizer training e_ivf_train's single re-mean points at: two

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 object Tables {
 
   /** Session configs required to read the test lake. Apply to every
-    * SparkSession builder (Verify, Bench, tests). */
+    * session ([[graft.GraftSession]] does). */
   val conf: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     // native engine expressions (graft_dot, ...) — see graft.expressions

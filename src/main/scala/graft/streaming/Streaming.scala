@@ -44,13 +44,6 @@ object Streaming {
       .where(col("n") >= minCount)
       .select(col(key), col("window.start").as("wstart"), col("n"))
 
-  /** ST3 source-substitution half: priority dedup between a primary
-    * and fallback source keyed by (key, slot) — MSG4 beats MSG2 when
-    * both arrived (datasets.py:86-89). Works identically on streams
-    * (dedup within watermark) and batches. */
-  def preferPrimary(events: DataFrame, keys: Seq[String], priority: org.apache.spark.sql.Column): DataFrame =
-    graft.ops.Sequences.priorityDedup(events, keys, priority, col("event_id"))
-
   /** Streaming ingest dedup: exact-fingerprint first-wins dedup with
     * BOUNDED state — the streaming half of [[graft.ops.Dedup]]'s exact
     * path. `dropDuplicatesWithinWatermark` keeps a fingerprint in the

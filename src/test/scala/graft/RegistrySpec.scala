@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry-level invariants: names, oracles, and the r19 scale-class
-  * annotation (SparkEntry.scaleOverrides) that tells a user which
-  * graded forms ship at 100 TB and which are semantic fixtures.
+/** Registry-level invariants: names, oracles, the r19 scale-class
+  * annotation (`Q.scale`) that tells a user which graded forms ship at
+  * 100 TB and which are semantic fixtures, the `Q.build` store
+  * declarations, and the driver's flagship smoke.
   */
 class RegistrySpec extends AnyFunSuite {
 
@@ -17,7 +18,7 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("scale classes: closed vocabulary, overrides name real queries, full coverage") {
-    val classes = SparkEntry.scaleClasses // throws on an unknown override name
+    val classes = SparkEntry.scaleClasses
     assert(classes.keySet == SparkEntry.allQueries.map(_.name).toSet,
       "scaleClasses must cover exactly the registry")
     val vocab = "linear|flat|fixture@x\\d+".r
@@ -49,5 +50,35 @@ class RegistrySpec extends AnyFunSuite {
       assert(wall >= 10.0,
         s"$n: a wall below x10 would exclude it from even the first decade sweep " +
           "— drop it from the Family instead")
+  }
+
+  test("store declarations: a query creates a graft-* store dir iff it declares build") {
+    // each query runs once at sf0.001 with that dataset's stores
+    // purged first, so a store shared by several queries is created
+    // by each of them; a store-backed query without `build` would
+    // charge its store build to Bench's first timed repeat
+    val spark = TestSpark.spark
+    val d = "/root/testdata/sf0.001"
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    val key = graft.queries.storeKey(d)
+    def stores(): Set[String] = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isDirectory && f.getName.startsWith("graft-")).map(_.getName).toSet
+    val wrong = SparkEntry.allQueries.flatMap { q =>
+      for (n <- stores() if n.endsWith(key))
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp, n))
+      val before = stores()
+      Runner.time(spark, q.fn(spark, d)) match {
+        case Left(e) => Some(s"${q.name} failed: ${e.getMessage}")
+        case Right(_) =>
+          val created = stores() -- before
+          if (created.nonEmpty == q.build) None
+          else Some(s"${q.name}: build = ${q.build}, created ${created.mkString("{", ", ", "}")}")
+      }
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
+
+  test("flagship entry() returns rows (the driver's smoke check)") {
+    assert(SparkEntry.entry(TestSpark.spark).count() > 0)
   }
 }

@@ -3,16 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite (Spark session startup
-  * dominates test wall-time otherwise). */
+  * dominates test wall-time otherwise). Pinned to 4 cores whatever the
+  * host, so partition-dependent plan and budget assertions see the
+  * same layout everywhere. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config(sources.Tables.conf)
-      .getOrCreate()
+    val s = GraftSession.create(cpus = "4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

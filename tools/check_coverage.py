@@ -23,17 +23,21 @@ unmapped = sorted(names - mapped)
 stale = sorted(mapped - names)
 print(f"{len(names)} registered queries, {len(mapped)} q:` rows in {COV}")
 
-# Scale-class cross-check (r19): SparkEntry.scaleOverrides is the
-# machine-readable fixture registry (every other query defaults to
-# `linear`, so the field structurally exists for all). Validate that
-# (a) every override names a registered query, (b) COVERAGE.md's
-# "Scale classes" table lists exactly the override set, (c) the
-# vocabulary is closed.
-entry_src = open("src/main/scala/graft/SparkEntry.scala").read()
-m = re.search(r"val scaleOverrides[^=]*=\s*Map\((.*?)def scaleClasses",
-              entry_src, re.S)
-overrides = dict(re.findall(r'"([a-z0-9_]+)"\s*->\s*"([a-z0-9@x]+)"',
-                            m.group(1) if m else ""))
+# Scale-class cross-check (r19): the `scale = "..."` field of each Q
+# record is the machine-readable fixture registry (every other query
+# defaults to `linear`, so the field structurally exists for all).
+# Each field is attributed to the nearest preceding `Q("name"` in its
+# source file. Validate that (a) every override names a registered
+# query, (b) COVERAGE.md's "Scale classes" table lists exactly the
+# override set, (c) the vocabulary is closed.
+overrides = {}
+for f in sorted(glob.glob(SRC)):
+    current = None
+    for m in re.finditer(r'Q\("([a-z0-9_]+)"|\bscale\s*=\s*"([^"]*)"', open(f).read()):
+        if m.group(1):
+            current = m.group(1)
+        elif current:
+            overrides[current] = m.group(2)
 bad_vocab = {k: v for k, v in overrides.items()
              if not re.fullmatch(r"linear|flat|fixture@x\d+", v)}
 ghost = sorted(set(overrides) - names)
