@@ -167,62 +167,31 @@ object AnnIndex {
     * write. */
   def append(spark: SparkSession, newEmb: DataFrame, dir: String,
              p: Pq.Params = Pq.Params(), tag: Option[String] = None): Unit = {
-    // writer exclusion vs a concurrent [[compact]] (fast-fail side —
-    // the store-family convention): a refused batch stays un-marked
-    // and replays cleanly; one that slipped past the check has its
-    // files reconciled by CompactSwap, never retired.
-    val cm = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val cfs = cm.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(cm))
-      throw new IllegalStateException(
-        s"ANN index $dir is compacting ($cm present); retry the append after it completes")
+    CompactSwap.requireNotCompacting(spark, dir, "ANN index", "append")
     val meta = spark.read.parquet(s"$dir/meta")
     val assigned = Pq.ivfAssignedWith(newEmb, meta.select(col("cells")))
       .select(col("vec_id"), col("cell"),
         zip_with(col("ve"), col("cv"), (x, c) => x - c).as("ve"))
-    val codes = Pq.encoded(assigned, meta.select(col("cbs")), p, extra = Seq("cell"))
-    tag match {
-      // tagged: a torn-batch replay republishes the same cell=*/gb-tag
-      // files instead of appending duplicate code rows — which WOULD
-      // change results (a doubled vec occupies two top-k slots)
-      case Some(t) => CompactSwap.appendExactlyOnce(codes, codesPath(spark, dir), t,
-        (d, tmp) => d.write.mode("overwrite").partitionBy("cell").parquet(tmp))
-      case None =>
-        codes.write.mode("append").partitionBy("cell").parquet(codesPath(spark, dir))
-    }
+    CompactSwap.appendTo(Pq.encoded(assigned, meta.select(col("cbs")), p, extra = Seq("cell")),
+      codesPath(spark, dir), tag, "cell")
   }
 
   /** Streaming INGEST for the persisted index — the encode-on-arrival
     * half of the streaming story ([[searchStream]] is the query
     * half): every micro-batch of new vectors (vec_id, ve) appends via
     * [[append]], so the index absorbs a live feed with delta-sized
-    * scans against the frozen quantizers. Each batch is guarded by a
-    * batch-id marker: a RESTARTED batch (processed fully but the
-    * checkpoint didn't advance — the common failure) is skipped
-    * instead of double-appended, and the residual window — a crash
-    * INSIDE or after an append with the marker unwritten — is closed
-    * by the TAGGED append ([[CompactSwap.appendExactlyOnce]]): the
-    * replay republishes the batch's per-cell files under the same
-    * deterministic names, so the codes table never carries a doubled
-    * batch. */
+    * scans against the frozen quantizers, exactly once per batch
+    * ([[Stores.oncePerBatch]]). */
   def appendStream(spark: SparkSession, vectors: DataFrame, dir: String,
                    p: Pq.Params = Pq.Params(),
                    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    // markers are namespaced by CHECKPOINT identity, not batchId
-    // alone: a stream restarted with a fresh checkpoint restarts
-    // batchIds at 0, and bare-batchId markers from the old run would
-    // silently swallow the new run's first batches
-    val ckptTag = java.lang.Integer.toHexString(checkpoint.hashCode)
     vectors.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$dir/_appended_${ckptTag}_batch_$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          append(spark, batch, dir, p, tag = Some(s"${ckptTag}_b$batchId"))
-          fs.create(marker, true).close()
+        Stores.oncePerBatch(batch, batchId, dir, "appended", checkpoint) { tag =>
+          append(spark, batch, dir, p, tag = Some(tag))
         }
+        ()
       }
       .start()
   }
@@ -256,16 +225,8 @@ object AnnIndex {
     * id genuinely returns (new consent), compact first. */
   def takedown(spark: SparkSession, ids: DataFrame, dir: String,
                tag: Option[String] = None): Unit = {
-    val cm = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val cfs = cm.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (cfs.exists(cm))
-      throw new IllegalStateException(
-        s"ANN index $dir is compacting ($cm present); retry the takedown after it completes")
-    val t = ids.select(col("vec_id")).distinct()
-    tag match {
-      case Some(tg) => CompactSwap.appendExactlyOnce(t, s"$dir/tomb", tg)
-      case None => t.write.mode("append").parquet(s"$dir/tomb")
-    }
+    CompactSwap.requireNotCompacting(spark, dir, "ANN index", "takedown")
+    CompactSwap.appendTo(ids.select(col("vec_id")).distinct(), s"$dir/tomb", tag)
   }
 
   /** Build-then-takedown exactly once per corpus fingerprint — the
@@ -368,36 +329,22 @@ object AnnIndex {
     * the meta table is not rewritten. */
   def compact(spark: SparkSession, dir: String,
               maxRecordsPerFile: Long = 1L << 20): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(marker, true).close()
     // one shuffle by cell so each partition writes one run of files;
     // maxRecordsPerFile caps file size without a per-cell coalesce(1)
     // driver loop (cells can be arbitrarily large at 100 TB).
     // CompactSwap carries the cell=N partition layout through the
     // manifest/basePath/reconcile protocol, so a concurrent append's
     // files land in the right cell dir instead of being retired.
-    // Takedown tombstones fold here (the DedupIndex.compact
-    // convention): codes rewrite MINUS the tombstone snapshot, then
-    // exactly the snapshotted tombstone files are deleted — late
-    // takedowns survive for the next compact, a crash between fold
-    // and delete re-folds idempotently.
-    val (tombFiles, tomb) = CompactSwap.snapshotFlat(spark, s"$dir/tomb")
-    try {
-      // no broadcast hint, no distinct: the fold is the ONE operation
-      // guaranteed to meet the largest accumulated tombstone backlog
-      // (a bulk-erasure wave), exactly where a forced broadcast would
-      // OOM the driver — the planner broadcasts small backlogs and
-      // degrades to a shuffle for huge ones (the probe-path rule);
-      // anti-join semantics need no dedup of the right side
+    // Takedown tombstones fold here: codes rewrite MINUS the
+    // tombstone snapshot.
+    CompactSwap.compacting(spark, dir, "tomb") { case Seq(tomb) =>
       CompactSwap.compactVersioned(spark, dir, "codes",
         df => tomb.fold(df)(t =>
             df.join(t, Seq("vec_id"), "left_anti"))
           .repartition(col("cell")),
         (df, tmp) => df.write.option("maxRecordsPerFile", maxRecordsPerFile)
           .partitionBy("cell").parquet(tmp))
-      tombFiles.foreach(f => fs.delete(f, false))
-    } finally fs.delete(marker, false)
+    }
   }
 
   /** [[build]] only when no CURRENT index for this corpus exists —

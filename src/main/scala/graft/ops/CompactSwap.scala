@@ -3,46 +3,31 @@ package graft.ops
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The shared compaction discipline of the persisted stores (sketch
-  * store, dedup store): rewrite a parquet table dir through an
-  * explicit MANIFEST snapshot, swap it in with two renames, and
-  * RECONCILE any file a concurrent append landed after the snapshot
-  * listing — so a writer that slipped past a check-then-act exclusion
-  * gate can never have its rows silently retired (the round-16
-  * advice race, closed once here for every store).
+/** The maintenance protocol every persisted store shares (DedupIndex,
+  * AnnIndex, LineStore, SemDedupStore and the Sketches HLL store):
   *
-  * Protocol per table `cur`:
-  *  1. list `cur`'s data files; write the names to
-  *     `{cur}_compact_snapshot`;
-  *  2. rewrite EXACTLY those files (the caller's `rewrite` plan) into
-  *     `{cur}_compact_tmp`;
-  *  3. rename cur -> `{cur}_compact_old`, tmp -> cur; mark
-  *     `{cur}_compact_promoted`;
-  *  4. move every data file in old that is NOT in the manifest — a
-  *     concurrent append the snapshot missed — into the new cur
-  *     (unique part-file names make this collision-free, and both
-  *     stores' tables are row-preserving under extra files: the
-  *     sketch store merges rows at READ time, the dedup store is a
-  *     plain row set);
-  *  5. delete old, manifest, promoted marker.
+  *  - [[requireNotCompacting]]: the writer gate every append/takedown
+  *    verb checks first;
+  *  - [[compacting]]: the `_compacting` marker held across a compact,
+  *    plus the tombstone handshake (snapshot → fold → delete);
+  *  - [[compactVersioned]]: the zero-window versioned rewrite the fold
+  *    runs per table;
+  *  - [[appendTo]]: the tag-routed append of every writer verb that
+  *    takes a stream batch tag ([[appendExactlyOnce]] for stream
+  *    batches, a plain append otherwise).
   *
-  * Crash recovery (run before a new rewrite): the persisted manifest
-  * + promoted marker disambiguate every state —
-  *  - promoted: old's manifest files are merged-already (delete),
-  *    the rest are orphan appends (reconcile into cur);
-  *  - not promoted: nothing was published — restore every retired
-  *    file into cur (which may already hold files an append committed
-  *    into a recreated dir) and drop tmp.
-  * An append whose commit straddles the retire rename fails loudly on
-  * its own (its _temporary dir moves out from under the committer),
-  * leaving the batch un-marked for a clean replay.
+  * The stores share this protocol, not a shape: each keeps its own
+  * fold body, table layout and read-side anti-joins. The per-batch
+  * stream marker that supplies the append tags lives beside the
+  * build-once marker in [[Stores.oncePerBatch]].
   */
 object CompactSwap {
 
   /** Data files under `p` RECURSIVELY as (status, path relative to
     * `p`) — partitioned tables keep their `key=value/part-…` layout
-    * through the manifest and the reconcile moves. Hidden dirs/files
-    * (`_temporary`, markers, `.crc`) are skipped at every level. */
+    * through the manifests and the late-append copies. Hidden
+    * dirs/files (`_temporary`, markers, `.crc`) are skipped at every
+    * level. */
   private def dataFiles(fs: FileSystem, p: Path): Seq[(FileStatus, String)] = {
     def walk(d: Path, prefix: String): Seq[(FileStatus, String)] =
       if (!fs.exists(d)) Seq.empty
@@ -55,101 +40,84 @@ object CompactSwap {
     walk(p, "")
   }
 
-  /** Move `f` to `destRoot/rel`, creating parent dirs (partition
-    * subdirs) as needed. */
-  private def moveInto(fs: FileSystem, f: Path, destRoot: Path, rel: String): Unit = {
-    val dest = new Path(destRoot, rel)
-    fs.mkdirs(dest.getParent)
-    require(fs.rename(f, dest), s"compact: could not reconcile $f into $dest")
-  }
-
   private def readManifest(fs: FileSystem, p: Path): Set[String] = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSet
     finally in.close()
   }
 
-  /** Recover a crashed swap of `cur`, then rewrite it through the
-    * snapshot/swap/reconcile protocol. `rewrite` maps the
-    * snapshot-file frame to the compacted frame; `write` persists it
-    * to the tmp path (owning format options like maxRecordsPerFile
-    * and partitionBy). Hive-partitioned tables are supported: the
-    * manifest carries paths relative to `cur`, the snapshot read uses
-    * `basePath` so partition columns survive reading explicit leaf
-    * files, and reconciled files keep their `key=value/` subpath.
-    * No-op when `cur` has no data files. The caller owns any
-    * store-level writer-exclusion marker. */
-  def rewriteTable(spark: SparkSession, cur: Path,
-                   rewrite: DataFrame => DataFrame,
-                   write: (DataFrame, String) => Unit): Unit = {
-    val fs = cur.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(cur.getParent, cur.getName + "_compact_tmp")
-    val old = new Path(cur.getParent, cur.getName + "_compact_old")
-    val manifest = new Path(cur.getParent, cur.getName + "_compact_snapshot")
-    val promoted = new Path(cur.getParent, cur.getName + "_compact_promoted")
-    // ---- recovery of a prior crashed swap ----
-    if (fs.exists(manifest)) {
-      val snap = readManifest(fs, manifest)
-      if (fs.exists(promoted)) {
-        dataFiles(fs, old).foreach { case (f, rel) =>
-          if (snap(rel)) fs.delete(f.getPath, false)
-          else moveInto(fs, f.getPath, cur, rel)
-        }
-        fs.delete(old, true)
-      } else if (fs.exists(old)) {
-        dataFiles(fs, old).foreach { case (f, rel) => moveInto(fs, f.getPath, cur, rel) }
-        fs.delete(old, true)
-      }
-      fs.delete(tmp, true)
-      fs.delete(manifest, false); fs.delete(promoted, false)
-    } else {
-      // legacy crash shapes (pre-manifest): cur gone -> old is it
-      if (!fs.exists(cur) && fs.exists(old))
-        require(fs.rename(old, cur), s"compact: could not recover $old")
-      fs.delete(tmp, true); fs.delete(old, true)
-    }
-    // ---- the rewrite proper ----
-    val snapFiles = dataFiles(fs, cur)
-    // refuse to fold a TORN or IN-FLIGHT tagged publish (gb- files
-    // whose `_published` sidecar is absent): folding a partial batch
-    // would freeze the partial state as anonymous part files, and the
-    // stream's replay would then re-publish the batch IN FULL on top
-    // of it (the additive double-count this machinery exists to
-    // prevent). Conservative by design: a live append that slipped
-    // past the `_compacting` fast-fail mid-publish also trips this —
-    // failing the (administrative, retryable) compact is strictly
-    // safer than folding a partial batch.
-    val tornTags = snapFiles.map(_._2.split('/').last)
-      .flatMap { n => val m = TaggedName.matcher(n)
-        if (m.matches()) Some(m.group(1)) else None }
-      .distinct
-      .filterNot(t => fs.exists(new Path(cur.getParent,
-        s"_published_${baseTableName(cur.getName)}_$t")))
-    require(tornTags.isEmpty,
-      s"compact: table $cur holds tagged batch files with no _published sidecar " +
-        s"(tags: ${tornTags.mkString(", ")}) — a tagged publish is torn or in flight. " +
-        "If the ingest stream is live, retry the compact in a moment; if it crashed, " +
-        "restart it so the replay completes the publish, then compact")
-    if (snapFiles.nonEmpty) {
-      val out = fs.create(manifest, true)
-      try out.write(snapFiles.map(_._2).mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      val snapNames = snapFiles.map(_._2).toSet
-      write(rewrite(spark.read.option("basePath", cur.toString)
-          .parquet(snapFiles.map(_._1.getPath.toString): _*)),
-        tmp.toString)
-      require(fs.rename(cur, old), s"compact: could not retire $cur")
-      if (!fs.rename(tmp, cur)) {
-        dataFiles(fs, old).foreach { case (f, rel) => moveInto(fs, f.getPath, cur, rel) }
-        fs.delete(old, true); fs.delete(manifest, false)
-        throw new IllegalStateException(
-          s"compact: could not promote $tmp; original $cur restored")
-      }
-      fs.create(promoted, true).close()
-      dataFiles(fs, old).filterNot(p => snapNames(p._2))
-        .foreach { case (f, rel) => moveInto(fs, f.getPath, cur, rel) }
-      fs.delete(old, true)
-      fs.delete(manifest, false); fs.delete(promoted, false)
+  // ---- writer gate and compact marker ------------------------------
+
+  private def compactingMarker(dir: String): Path = new Path(s"$dir/_compacting")
+
+  /** Writer gate: refuse `verb` on `store` (its kind, for the message)
+    * while a [[compacting]] call holds `dir`. The check is
+    * check-then-act, so it is only the FAST-FAIL side of writer
+    * exclusion: a refused stream batch stays un-marked and replays
+    * cleanly once the compact is done, and an append that passed the
+    * check before the marker went up has its files copied into the
+    * new version by [[compactVersioned]], never retired. A marker
+    * left by a crashed compact keeps writers refused until the next
+    * compact call clears it (the conservative side of the race). One
+    * `fs.exists` per call. */
+  def requireNotCompacting(spark: SparkSession, dir: String, store: String,
+                           verb: String): Unit = {
+    val marker = compactingMarker(dir)
+    if (marker.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(marker))
+      throw new IllegalStateException(
+        s"$store $dir is compacting ($marker present); retry the $verb after it completes")
+  }
+
+  /** Run a store compact: raise the `_compacting` marker in `dir`,
+    * snapshot each tombstone side table `tombs` (flat dirs under
+    * `dir`, [[snapshotFlat]]), hand their frames (None when empty) to
+    * `fold` — which anti-joins them into its [[compactVersioned]]
+    * rewrites — then delete EXACTLY the snapshotted tombstone files,
+    * and lower the marker whether or not `fold` throws. A stale
+    * marker from a crashed compact is this call's to clear: it
+    * rewrites the store the marker guarded.
+    *
+    * Tombstone handshake: a takedown that lands DURING the fold
+    * survives for the next compact, and a crash between the fold and
+    * the delete merely re-folds (anti-join deletion is idempotent; a
+    * torn tombstone publish folds partially and completes on replay,
+    * harmless for the same reason). Fold bodies anti-join with no
+    * broadcast hint and no distinct: the fold is the one operation
+    * guaranteed to meet the largest accumulated backlog (a
+    * bulk-erasure wave), exactly where a forced broadcast would OOM
+    * the driver — the planner broadcasts small backlogs and degrades
+    * to a shuffle for huge ones, and anti-join semantics need no
+    * dedup of the right side. */
+  def compacting(spark: SparkSession, dir: String, tombs: String*)
+                (fold: Seq[Option[DataFrame]] => Unit): Unit = {
+    val marker = compactingMarker(dir)
+    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(marker, true).close()
+    try {
+      val snaps = tombs.map(t => snapshotFlat(spark, s"$dir/$t"))
+      fold(snaps.map(_._2))
+      snaps.foreach(_._1.foreach(fs.delete(_, false)))
+    } finally fs.delete(marker, false)
+  }
+
+  /** The stores' one write path into table dir `cur`. Tagged (a
+    * stream batch's `<ckptTag>_b<batchId>` from
+    * [[Stores.oncePerBatch]]) it publishes through
+    * [[appendExactlyOnce]], so a batch replayed after a crash between
+    * its store appends and its batch marker lands exactly once —
+    * which matters most for ADDITIVE tables (the line store's count
+    * partials feed a `>= minDocs` threshold, and a doubled ANN code
+    * row occupies two top-k slots); union-idempotent (HLL) and
+    * row-set tables gain the same replay hygiene. Untagged it is a
+    * plain parquet append. `partitionBy` applies to both. */
+  def appendTo(df: DataFrame, cur: String, tag: Option[String],
+               partitionBy: String*): Unit = {
+    def writer(d: DataFrame) =
+      if (partitionBy.isEmpty) d.write else d.write.partitionBy(partitionBy: _*)
+    tag match {
+      case Some(t) =>
+        appendExactlyOnce(df, cur, t, (d, p) => writer(d).mode("overwrite").parquet(p))
+      case None => writer(df).mode("append").parquet(cur)
     }
   }
 
@@ -160,18 +128,15 @@ object CompactSwap {
     * composite stream batch that crashed between its store appends
     * and its idempotency marker therefore REPLAYS to the identical
     * store state instead of double-appending (the torn-batch window
-    * the marker protocol alone leaves open). This matters most for
-    * ADDITIVE tables — the line store's per-batch count partials feed
-    * a `>= minDocs` threshold, so a doubled partial flips scrub
-    * decisions; union-idempotent (HLL) and row-set tables tolerate
-    * plain append-mode duplicates, but gain the same replay hygiene.
+    * the marker protocol alone leaves open; [[appendTo]] says which
+    * tables that matters for).
     *
     * A `_published_<table>_<tag>` sidecar in the STORE dir (outside
-    * the table, so [[rewriteTable]] never touches it) records that
+    * the table, so a compact never touches it) records that
     * the tag's files were fully published. When the sidecar exists
     * but no tagged files remain, a compaction has FOLDED the batch
     * into anonymous part files — the replay skips republishing
-    * instead of re-introducing the batch. [[rewriteTable]] refuses to
+    * instead of re-introducing the batch. [[compactVersioned]] refuses to
     * fold a tag whose sidecar is ABSENT, so only complete publishes
     * ever fold. Publication states are otherwise self-healing: no
     * sidecar + partial tagged files (a crash mid-publish) is cleaned
@@ -181,7 +146,7 @@ object CompactSwap {
     * — the same accumulation convention as the streams' batch marker
     * files, folded (files) or carried (sidecars, zero-byte) by
     * compaction. Deliberately no untag-on-commit step: renaming
-    * published files after the marker raced [[rewriteTable]]'s
+    * published files after the marker raced the compact's late-append
     * reconcile (a finalize between snapshot and reconcile made the
     * renamed file look like a missed concurrent append and
     * double-counted the batch).
@@ -286,11 +251,11 @@ object CompactSwap {
 
   // ---- versioned tables: zero-window serving compaction ----------
   //
-  // [[rewriteTable]]'s two-rename swap has a brief window where the
-  // table dir is absent, and it MOVES the files a live reader may
-  // have pinned (a stream-static join lists files at stream start; a
-  // batch probe at plan time) — both recorded as sequencing rules.
-  // The versioned layout closes both: the table lives at
+  // An in-place two-rename swap has a brief window where the table
+  // dir is absent, and it MOVES the files a live reader may have
+  // pinned (a stream-static join lists files at stream start; a
+  // batch probe at plan time). The versioned layout closes both:
+  // the table lives at
   // `<table>_v<N>`, a compact WRITES `<table>_v<N+1>` beside it and
   // promotes it by creating ONE sentinel file ([[VersionSentinel]])
   // inside — readers resolving before the create see v<N>, after it
@@ -443,10 +408,10 @@ object CompactSwap {
     * (unsentineled) version dirs, fold the current version's
     * snapshot through `rewrite`/`write` into the next version dir,
     * COPY late-append files across, promote via the sentinel, then
-    * GC versions older than `keep` behind the new current. The
-    * caller owns the `_compacting` writer gate and any side-table
-    * (tombstone) handshake. Same torn-tag refusal as
-    * [[rewriteTable]]. Returns the promoted version number.
+    * GC versions older than `keep` behind the new current. Stores
+    * call it from inside [[compacting]], which holds the writer gate
+    * and runs the tombstone handshake around every table's rewrite.
+    * Returns the promoted version number.
     *
     * Concurrent-append contract: every ordering ends with the rows
     * present EXACTLY ONCE, with bounded visibility. An append that
@@ -480,7 +445,15 @@ object CompactSwap {
         s"compactVersioned: no complete version of $table under $dir — build first"))
     val cur = versionPath(dir, table, curV)
     val snapFiles = dataFiles(fs, cur)
-    // refuse a torn/in-flight tagged publish (rewriteTable's rule)
+    // refuse to fold a TORN or IN-FLIGHT tagged publish (gb- files
+    // whose `_published` sidecar is absent): folding a partial batch
+    // would freeze the partial state as anonymous part files, and the
+    // stream's replay would then re-publish the batch IN FULL on top
+    // of it (the additive double-count appendExactlyOnce exists to
+    // prevent). Conservative by design: a live append that slipped
+    // past the writer gate mid-publish also trips this — failing the
+    // (administrative, retryable) compact is strictly safer than
+    // folding a partial batch.
     val tornTags = snapFiles.map(_._2.split('/').last)
       .flatMap { n => val m = TaggedName.matcher(n)
         if (m.matches()) Some(m.group(1)) else None }
@@ -583,7 +556,7 @@ object CompactSwap {
     * .parquet`, with tags drawn from [[TagCharset]] (no '-', so the
     * parse is unambiguous and foreign files named `part-…`/`b…_1`
     * can never be mistaken for a tagged publish and wedge the
-    * [[rewriteTable]] torn check). */
+    * [[compactVersioned]] torn check). */
   private val TagCharset = "[A-Za-z0-9_]+"
   private val TaggedName =
     java.util.regex.Pattern.compile(s"gb-($TagCharset)-\\d+\\.parquet")
@@ -605,13 +578,9 @@ object CompactSwap {
   }
 
   /** Snapshot a FLAT side table's data files plus a frame reading
-    * exactly them — the tombstone-fold handshake of the stores'
-    * takedown verb: the caller anti-joins the frame into a
-    * main-table rewrite, then deletes exactly these files, so a
-    * tombstone appended DURING the fold survives for the next
-    * compact and a crash between fold and delete merely re-folds
-    * (anti-join deletion is idempotent). (Nil, None) when the table
-    * is absent or empty.
+    * exactly them — the tombstone read of every probe, and the
+    * snapshot half of [[compacting]]'s handshake. (Nil, None) when
+    * the table is absent or empty.
     *
     * SEQUENCING (applies to BATCH probes, not only streams): the
     * returned frame pins this exact file list, and a concurrent

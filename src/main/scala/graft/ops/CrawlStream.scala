@@ -26,12 +26,12 @@ import org.apache.spark.sql.functions._
   *      only the KEPT docs' sketches (its contract).
   *
   * One checkpoint-namespaced marker per batch makes a COMMITTED
-  * batch's replay a no-op (the [[DedupIndex.ingestStream]]
-  * convention), and the TORN window the marker alone leaves open — a
-  * crash after a store append but before the marker — is closed on
-  * BOTH sides: the batch PINS each store's as-of-start file listing
-  * before its first probe ([[CompactSwap.pinAsOf]], r19 — the
-  * version-aware replay handle), so the replayed batch recomputes
+  * batch's replay a no-op ([[Stores.oncePerBatch]]), and the TORN
+  * window the marker alone leaves open — a crash after a store
+  * append but before the marker — is closed on BOTH sides: the
+  * batch PINS each store's as-of-start file listing before its
+  * first probe ([[CompactSwap.pinAsOf]], r19 — the version-aware
+  * replay handle), so the replayed batch recomputes
   * against exactly the files attempt 1 read (the kept set equals the
   * first attempt's instead of self-matching to empty), and the
   * tagged appends ([[CompactSwap.appendExactlyOnce]]) re-publish the
@@ -66,34 +66,21 @@ object CrawlStream {
              shingleK: Int = 3, seeds: Int = 4, bands: Int = 4,
              matchMin: Int = 3, maxBucket: Int = Int.MaxValue)
             (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val ckptTag = java.lang.Integer.toHexString(checkpoint.hashCode)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$lineDir/_crawled_${ckptTag}_batch_$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
+        val committed = Stores.oncePerBatch(batch, batchId, lineDir, "crawled", checkpoint) { tag =>
           // materialize the extraction once: it feeds the line scrub,
           // the line-store append, and (through the scrub) the dedup
           // probe — and severing lineage here also protects every
           // downstream read from the store appends below
           val extracted = extract(batch).localCheckpoint()
-          val tag = s"${ckptTag}_b$batchId"
           try {
-            // VERSION-AWARE as-of pins, taken BEFORE the first probe
-            // (r19, closing the SURVEY §16.22 divergence rule): the
-            // batch records each store's exact file listing, and a
-            // torn-batch replay recomputes against the PINNED
-            // listing — bit-equal to attempt 1 even if a compact
-            // folded the stores between crash and restart (the
-            // versioned compact retains retired files for `keep`
-            // generations; the old excludeTag reconstruction
-            // diverged there because a fold anonymizes the tag's
-            // files). Idempotent: a replay finds attempt 1's pin and
-            // reads exactly what attempt 1 read. Tombstone reads
-            // stay FRESH by contract (takedowns are not stream
-            // batches and must suppress immediately).
+            // as-of pins, taken BEFORE the first probe: a torn-batch
+            // replay finds attempt 1's pin (pinAsOf is idempotent) and
+            // recomputes against exactly the files attempt 1 read.
+            // Tombstone reads stay FRESH by contract (takedowns are
+            // not stream batches and must suppress immediately).
             CompactSwap.pinAsOf(spark, lineDir, Seq("counts"), tag, tag)
             CompactSwap.pinAsOf(spark, dedupDir, Seq("fp", "bands"), tag, tag)
             val scrubbed = gate(LineStore.scrubDelta(spark, extracted, lineDir,
@@ -105,21 +92,18 @@ object CrawlStream {
               .localCheckpoint()
             try {
               sink(kept, batchId)
-              // tagged appends: a replay after a crash anywhere in
-              // the append->marker window lands each store's partial
-              // exactly once (CompactSwap.appendExactlyOnce) — the
-              // line store's ADDITIVE counts would otherwise double
-              // toward the minDocs threshold
               LineStore.append(extracted, lineDir, col("text"), col(idCol), sep,
                 tag = Some(tag))
               DedupIndex.append(kept, dedupDir, col("text"), col(idCol),
                 shingleK, seeds, bands, tag = Some(tag))
             } finally kept.unpersist()
           } finally extracted.unpersist()
-          fs.create(marker, true).close()
-          // the marker commits the batch — its as-of pins are dead
-          // weight now (a crash between marker and here leaves
-          // harmless orphans: bytes of file names)
+        }
+        // the marker commits the batch — its as-of pins are dead
+        // weight now (a crash between marker and here leaves
+        // harmless orphans: bytes of file names)
+        if (committed) {
+          val tag = Stores.batchTag(checkpoint, batchId)
           CompactSwap.dropPin(spark, lineDir, tag)
           CompactSwap.dropPin(spark, dedupDir, tag)
         }

@@ -124,27 +124,15 @@ object DedupIndex {
     * the appended store is row-identical to a one-shot [[build]] over
     * corpus ∪ kept (spec-asserted). Cost: one delta-sized scan and
     * two appends — the store is never rewritten. */
-  /** `tag` (the streams pass `<ckptTag>_b<batchId>`) routes both table
-    * writes through [[CompactSwap.appendExactlyOnce]] so a replay
-    * after a crash in the append→marker window lands once. Unlike the
-    * line store, a plain-append replay here is DECISION-harmless
+  /** `tag` routes both table writes ([[CompactSwap.appendTo]]). Unlike
+    * the line store, a plain-append replay here is DECISION-harmless
     * (fp probes are semi/anti-joins and a doubled band row only
     * duplicates a bucket member), but exactly-once keeps the fp
     * table's stays-distinct invariant and the bucket caps honest. */
   def append(kept: DataFrame, dir: String, textCol: Column, idCol: Column,
              shingleK: Int = 3, seeds: Int = 4, bands: Int = 4,
              tag: Option[String] = None): Unit = {
-    // writer exclusion vs a concurrent [[compact]] (fast-fail side —
-    // the Sketches.requireNotCompacting convention): failing here
-    // leaves the batch's idempotency marker unwritten, so the replay
-    // ingests cleanly after compaction. The correctness side (an
-    // append that passed this check before the marker went up) is
-    // CompactSwap's manifest+reconcile in [[compact]].
-    val cm = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val cfs = cm.getFileSystem(kept.sparkSession.sparkContext.hadoopConfiguration)
-    if (cfs.exists(cm))
-      throw new IllegalStateException(
-        s"dedup store $dir is compacting ($cm present); retry the append after it completes")
+    CompactSwap.requireNotCompacting(kept.sparkSession, dir, "dedup store", "append")
     // `kept` normally comes from [[deltaKeep]], whose plan READS the
     // very tables written below — and the first write invalidates any
     // cached/unevaluated form of that plan (Spark recaches by path),
@@ -157,15 +145,9 @@ object DedupIndex {
     val k = kept.localCheckpoint()
     try {
       val fp = k.select(text.fingerprint(textCol).as("fp")).distinct()
-      val bands2 = bandRows(k, textCol, idCol, shingleK, seeds, bands)
-      tag match {
-        case Some(t) =>
-          CompactSwap.appendExactlyOnce(fp, tablePath(k.sparkSession, dir, "fp"), t)
-          CompactSwap.appendExactlyOnce(bands2, tablePath(k.sparkSession, dir, "bands"), t)
-        case None =>
-          fp.write.mode("append").parquet(tablePath(k.sparkSession, dir, "fp"))
-          bands2.write.mode("append").parquet(tablePath(k.sparkSession, dir, "bands"))
-      }
+      CompactSwap.appendTo(fp, tablePath(k.sparkSession, dir, "fp"), tag)
+      CompactSwap.appendTo(bandRows(k, textCol, idCol, shingleK, seeds, bands),
+        tablePath(k.sparkSession, dir, "bands"), tag)
     } finally k.unpersist()
   }
 
@@ -216,21 +198,10 @@ object DedupIndex {
     * ids. */
   def takedown(docs: DataFrame, dir: String, textCol: Column, idCol: Column,
                tag: Option[String] = None): Unit = {
-    val cm = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val cfs = cm.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-    if (cfs.exists(cm))
-      throw new IllegalStateException(
-        s"dedup store $dir is compacting ($cm present); retry the takedown after it completes")
-    val fp = docs.select(text.fingerprint(textCol).as("fp")).distinct()
-    val ids = docs.select(idCol.as("doc_id")).distinct()
-    tag match {
-      case Some(t) =>
-        CompactSwap.appendExactlyOnce(fp, s"$dir/tomb_fp", t)
-        CompactSwap.appendExactlyOnce(ids, s"$dir/tomb_doc", t)
-      case None =>
-        fp.write.mode("append").parquet(s"$dir/tomb_fp")
-        ids.write.mode("append").parquet(s"$dir/tomb_doc")
-    }
+    CompactSwap.requireNotCompacting(docs.sparkSession, dir, "dedup store", "takedown")
+    CompactSwap.appendTo(docs.select(text.fingerprint(textCol).as("fp")).distinct(),
+      s"$dir/tomb_fp", tag)
+    CompactSwap.appendTo(docs.select(idCol.as("doc_id")).distinct(), s"$dir/tomb_doc", tag)
   }
 
   /** Build-then-takedown exactly once per corpus fingerprint — the
@@ -278,9 +249,8 @@ object DedupIndex {
     * sketches are appended so LATER batches dedup against them too.
     * foreachBatch is the right Spark shape here: the probe joins need
     * the store's CURRENT files (a stream-static join would freeze the
-    * file listing at query start), and batch-id markers namespaced by
-    * checkpoint identity make replayed batches idempotent — the
-    * [[AnnIndex.appendStream]] convention. Within one micro-batch,
+    * file listing at query start), and [[Stores.oncePerBatch]] makes
+    * replayed batches idempotent. Within one micro-batch,
     * batch-internal duplicates are NOT collapsed (same contract as
     * [[deltaKeep]]); order across batches is the arrival order, so
     * the keep-set is deterministic per batch sequence. */
@@ -316,19 +286,12 @@ object DedupIndex {
                    shingleK: Int = 3, seeds: Int = 4, bands: Int = 4,
                    matchMin: Int = 3, maxBucket: Int = Int.MaxValue)
                   (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val ckptTag = java.lang.Integer.toHexString(checkpoint.hashCode)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$dir/_ingested_${ckptTag}_batch_$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          val tag = s"${ckptTag}_b$batchId"
+        Stores.oncePerBatch(batch, batchId, dir, "ingested", checkpoint) { tag =>
           // the batch is read twice (keep + append) and the kept frame
-          // feeds both the sink and the store — persist once;
-          // excludeTag makes a torn-batch replay probe the store AS OF
-          // batch start instead of its own first-attempt sketches
+          // feeds both the sink and the store — persist once
           val kept = deltaKeep(spark, batch, dir, textCol, idCol,
             shingleK, seeds, bands, matchMin, maxBucket,
             excludeTag = Some(tag)).persist()
@@ -337,8 +300,8 @@ object DedupIndex {
             append(kept, dir, textCol, idCol, shingleK, seeds, bands,
               tag = Some(tag))
           } finally kept.unpersist()
-          fs.create(marker, true).close()
         }
+        ()
       }
       .start()
   }
@@ -372,20 +335,12 @@ object DedupIndex {
     * probe planned just before the compact keeps reading its pinned
     * old-version files; [[fpVersion]]/[[readTableVersion]] pin "the
     * store as of compact N" for reproducible runs until the version
-    * GC (one compact later) retires it. A `_compacting` marker is
-    * held across BOTH table promotions; [[append]] refuses under it
-    * (fast-fail), and an append that slipped past the check has its
-    * files copied across, never retired — both tables are plain row
-    * sets, so carried-over files are row-preserving. */
-  /** Tombstones ([[takedown]]) fold here physically: each main table
-    * rewrites MINUS a snapshot of its tombstone table, and exactly
-    * the snapshotted tombstone files are deleted afterward — a
-    * takedown that lands DURING the compact survives for the next
-    * one, and a crash between the fold and the tombstone delete
-    * re-folds harmlessly (the anti-join is idempotent). A torn
-    * tombstone publish folds partially and completes on replay, also
-    * harmless for the same reason — tombstone effect is a row-set
-    * anti-join, not additive.
+    * GC (one compact later) retires it. One [[CompactSwap.compacting]]
+    * gate is held across BOTH table promotions; an append that
+    * slipped past it has its files copied across, never retired —
+    * both tables are plain row sets, so carried-over files are
+    * row-preserving. Tombstones ([[takedown]]) fold here physically:
+    * each main table rewrites MINUS its tombstone table's snapshot.
     *
     * ERASURE-FINALITY RULE (recorded): an [[append]] that slipped
     * past the `_compacting` fast-fail mid-compact has its files
@@ -401,20 +356,10 @@ object DedupIndex {
     * tombstones cover any concurrently-ingested copy. */
   def compact(spark: SparkSession, dir: String,
               maxRecordsPerFile: Long = 1L << 20): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(marker, true).close()
-    val (fpTombFiles, fpTomb) = CompactSwap.snapshotFlat(spark, s"$dir/tomb_fp")
-    val (docTombFiles, docTomb) = CompactSwap.snapshotFlat(spark, s"$dir/tomb_doc")
-    try {
+    CompactSwap.compacting(spark, dir, "tomb_fp", "tomb_doc") { case Seq(fpTomb, docTomb) =>
       for (t <- Seq("fp", "bands"))
         CompactSwap.compactVersioned(spark, dir, t,
           df => {
-            // no broadcast hint, no distinct (the probe-path rule,
-            // and the fold is where the LARGEST backlog lands): the
-            // planner broadcasts small tombstone tables and degrades
-            // to a shuffle for a bulk-erasure wave; anti-join
-            // semantics need no dedup of the right side
             val live =
               if (t == "bands") docTomb.fold(df)(td =>
                 df.join(td, Seq("doc_id"), "left_anti"))
@@ -424,8 +369,7 @@ object DedupIndex {
             else live.repartition(col("fp"))
           },
           (df, tmp) => df.write.option("maxRecordsPerFile", maxRecordsPerFile).parquet(tmp))
-      (fpTombFiles ++ docTombFiles).foreach(f => fs.delete(f, false))
-    } finally fs.delete(marker, false)
+    }
   }
 
   /** [[deltaKeep]]'s result plus its operational side-channel (the

@@ -76,30 +76,13 @@ object LineStore {
 
   /** Fold a batch's line profile into the store: ONE batch-sized
     * aggregate appended as new partial rows — the store is never
-    * rewritten (see the disjoint-batch contract above).
-    *
-    * `tag` (the streams pass `<ckptTag>_b<batchId>`) routes the write
-    * through [[CompactSwap.appendExactlyOnce]]: partials land under
-    * deterministic per-batch file names, so a batch replayed after a
-    * crash between this append and its idempotency marker lands
-    * EXACTLY once. This store is where that matters most — counts
-    * are ADDITIVE against the `>= minDocs` scrub threshold, so a
-    * plain append-mode replay would double a batch's partial and
-    * flip future scrub decisions. */
+    * rewritten (see the disjoint-batch contract above). `tag` routes
+    * the write ([[CompactSwap.appendTo]]). */
   def append(batch: DataFrame, dir: String, textCol: Column, idCol: Column,
              sep: String = "\n", tag: Option[String] = None): Unit = {
-    val cm = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val cfs = cm.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    if (cfs.exists(cm))
-      throw new IllegalStateException(
-        s"line store $dir is compacting ($cm present); retry the append after it completes")
-    val partial = lineCounts(batch, textCol, idCol, sep)
-    tag match {
-      case Some(t) => CompactSwap.appendExactlyOnce(partial,
-        countsPath(batch.sparkSession, dir), t)
-      case None => partial.write.mode("append")
-        .parquet(countsPath(batch.sparkSession, dir))
-    }
+    CompactSwap.requireNotCompacting(batch.sparkSession, dir, "line store", "append")
+    CompactSwap.appendTo(lineCounts(batch, textCol, idCol, sep),
+      countsPath(batch.sparkSession, dir), tag)
   }
 
   /** TAKEDOWN — the fifth store verb (build → scrub → append →
@@ -121,19 +104,10 @@ object LineStore {
     * ingested (spec-pinned against a store rebuilt without them). */
   def takedown(docs: DataFrame, dir: String, textCol: Column, idCol: Column,
                sep: String = "\n", tag: Option[String] = None): Unit = {
-    val cm = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val cfs = cm.getFileSystem(docs.sparkSession.sparkContext.hadoopConfiguration)
-    if (cfs.exists(cm))
-      throw new IllegalStateException(
-        s"line store $dir is compacting ($cm present); retry the takedown after it completes")
-    val negative = lineCounts(docs, textCol, idCol, sep)
-      .select(col("line"), (-col("n_docs")).as("n_docs"))
-    tag match {
-      case Some(t) => CompactSwap.appendExactlyOnce(negative,
-        countsPath(docs.sparkSession, dir), t)
-      case None => negative.write.mode("append")
-        .parquet(countsPath(docs.sparkSession, dir))
-    }
+    CompactSwap.requireNotCompacting(docs.sparkSession, dir, "line store", "takedown")
+    CompactSwap.appendTo(lineCounts(docs, textCol, idCol, sep)
+        .select(col("line"), (-col("n_docs")).as("n_docs")),
+      countsPath(docs.sparkSession, dir), tag)
   }
 
   /** Build-then-takedown exactly once per corpus fingerprint — the
@@ -153,12 +127,11 @@ object LineStore {
     }
 
   /** Merge per-batch partials to one row per line — the same
-    * [[CompactSwap]] protocol as every other store (manifest
-    * snapshot, late-append reconcile, crash recovery; `_compacting`
-    * fast-fail gate on [[append]]). [[takedown]]'s negative partials
-    * fold here too: a line whose summed count reaches exactly 0 (all
-    * contributing docs taken down) is physically dropped — 0 is
-    * identity for the `>= minDocs >= 2` scrub threshold. A sum
+    * [[CompactSwap]] protocol as every other store. [[takedown]]'s
+    * negative partials fold here too: a line whose summed count
+    * reaches exactly 0 (all contributing docs taken down) is
+    * physically dropped — 0 is identity for the `>= minDocs >= 2`
+    * scrub threshold. A sum
     * BELOW 0 is a contract violation (a double takedown — easy to
     * produce by retrying after a driver failure on the untagged
     * path) and fails the compact LOUDLY: folding it away would
@@ -167,21 +140,19 @@ object LineStore {
     * move is to stop and make the operator reconcile (re-append the
     * over-subtracted partials, or rebuild). */
   def compact(spark: SparkSession, dir: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(marker, true).close()
-    try CompactSwap.compactVersioned(spark, dir, "counts",
-      df => df.groupBy(col("line")).agg(sum(col("n_docs")).as("n_docs"))
-        // in-plan assertion, not a pre-scan: assert_true is NULL on
-        // success, so the coalesce keeps the filter shape while any
-        // negative sum aborts the rewrite BEFORE the swap renames
-        .where(coalesce(assert_true(col("n_docs") >= 0,
-            concat(lit("LineStore: line count went NEGATIVE during compact " +
-              "(double takedown? re-append the over-subtracted partials " +
-              "or rebuild) for line: "), col("line"))), lit(true)) &&
-          col("n_docs") > 0),
-      (df, tmp) => df.write.parquet(tmp))
-    finally fs.delete(marker, false)
+    CompactSwap.compacting(spark, dir) { _ =>
+      CompactSwap.compactVersioned(spark, dir, "counts",
+        df => df.groupBy(col("line")).agg(sum(col("n_docs")).as("n_docs"))
+          // in-plan assertion, not a pre-scan: assert_true is NULL on
+          // success, so the coalesce keeps the filter shape while any
+          // negative sum aborts the rewrite BEFORE the swap renames
+          .where(coalesce(assert_true(col("n_docs") >= 0,
+              concat(lit("LineStore: line count went NEGATIVE during compact " +
+                "(double takedown? re-append the over-subtracted partials " +
+                "or rebuild) for line: "), col("line"))), lit(true)) &&
+            col("n_docs") > 0),
+        (df, tmp) => df.write.parquet(tmp))
+    }
   }
 
   /** Scrub a crawl batch against the store ∪ the batch itself: a line
@@ -249,9 +220,8 @@ object LineStore {
     * needed (scrub is read-only); STREAMING ingest is: each
     * micro-batch scrubs against the store AS OF its batch start, the
     * cleaned rows flow to `sink`, and the batch's line profile
-    * appends so later batches see it — checkpoint-namespaced batch
-    * markers make replays idempotent (the [[DedupIndex.ingestStream]]
-    * convention; same disjoint-batch contract). */
+    * appends so later batches see it, exactly once per batch
+    * ([[Stores.oncePerBatch]]; same disjoint-batch contract). */
   /** READ-SIDE serving loop (r19) — the [[AnnIndex.serveStream]]
     * symmetric for the line store: scrub a stream of doc batches
     * against the persisted counts WITHOUT absorbing their line
@@ -275,31 +245,22 @@ object LineStore {
                   textCol: Column, idCol: Column, checkpoint: String,
                   sep: String = "\n", minDocs: Int = 2)
                  (sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val ckptTag = java.lang.Integer.toHexString(checkpoint.hashCode)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$dir/_scrubbed_${ckptTag}_batch_$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          val tag = s"${ckptTag}_b$batchId"
+        Stores.oncePerBatch(batch, batchId, dir, "scrubbed", checkpoint) { tag =>
           // the scrub plan reads the very table append() writes — sever
           // lineage first so the sink and the append see the same
-          // as-of-batch-start answer (the DedupIndex.append lesson);
-          // excludeTag makes a torn-batch REPLAY recompute against the
-          // same as-of-start store, not its own first attempt
+          // as-of-batch-start answer (the DedupIndex.append lesson)
           val cleaned = scrubDelta(spark, batch, dir, textCol, idCol, sep, minDocs,
               excludeTag = Some(tag))
             .localCheckpoint()
           try {
             sink(cleaned, batchId)
-            // tagged: a replay after a crash in the append->marker
-            // window lands the partial exactly once
             append(batch, dir, textCol, idCol, sep, tag = Some(tag))
           } finally cleaned.unpersist()
-          fs.create(marker, true).close()
         }
+        ()
       }
       .start()
   }

@@ -35,11 +35,6 @@ object Multimodal {
   final case class Decoded(id: Long, width: Int, height: Int, channels: Int,
                            format: String, byteLen: Int, checksum: Long)
 
-  /** Attach a synthetic binary payload to any table (md5 bytes of the
-    * text column) — stands in for real image bytes in tests/queries. */
-  def withPayload(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(col(idCol).cast("long").as("id"), unhex(md5(col(textCol))).as("payload"))
-
   private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
   private def be32(b: Array[Byte], i: Int): Int =
     (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
@@ -433,16 +428,6 @@ object Multimodal {
     val c = (payload(2) & 0xff) % 3 + 1
     val fmt = if ((payload(3) & 1) == 0) "png" else "jpeg"
     Decoded(id, w, h, c, fmt, payload.length, checksumOf(payload))
-  }
-
-  /** Partition-batched decode: the Scala analog of `mapInPandas` —
-    * one iterator pass per partition, constant memory, no per-row
-    * driver involvement. This is where a vectorized codec batch
-    * (e.g. arrow batches into a native decoder) would slot in. */
-  def decodeAll(spark: SparkSession, media: DataFrame): Dataset[Decoded] = {
-    import spark.implicits._
-    media.select(col("id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it => it.map { case (id, bytes) => decode(id, bytes) } }
   }
 
   // ---- real pixel decode (JDK ImageIO) ------------------------------

@@ -301,56 +301,42 @@ object SemDedupStore {
     * assign THROUGH THIS quantizer (the centroids themselves are
     * never retrained by append — the standard IVF serving contract;
     * a drifted corpus warrants a rebuild). `tag` routes the write
-    * through [[CompactSwap.appendExactlyOnce]] so a stream replay
-    * lands once. */
+    * ([[CompactSwap.appendTo]]). */
   def append(spark: SparkSession, kept: DataFrame, dir: String,
              tag: Option[String] = None): Unit = {
+    CompactSwap.requireNotCompacting(spark, dir, "semdedup store", "append")
     requireStore(spark, dir)
     val (b, dim) = readMeta(spark, dir)
     val rot = readRotation(spark, dir)
     val rows = Pq.ivfAssignedWith(kept, storedCentroids(spark, dir))
       .select(col("cell"), fineBucket(b, dim, rot), col("vec_id"), col("ve"))
-    val cur = CompactSwap.currentTablePath(spark, dir, "codes")
-    tag match {
-      case Some(t) => CompactSwap.appendExactlyOnce(rows, cur, t)
-      case None => rows.write.mode("append").parquet(cur)
-    }
+    CompactSwap.appendTo(rows, CompactSwap.currentTablePath(spark, dir, "codes"), tag)
   }
 
   /** Absorb loop — the [[DedupIndex.ingestStream]] symmetry: each
     * micro-batch of (vec_id, ve) rows is probed ([[deltaKeep]] at
     * `radius`), the KEPT rows go to `sink` AND are [[append]]ed so
-    * the next batch dedups against them too. Exactly-once across
-    * replays: a per-batch marker skips a completed batch wholesale;
-    * a TORN batch (crash between append and marker) replays with
-    * `excludeTag` — the probe sees the store AS OF batch start, not
-    * its own first-attempt codes (which would anti-join the kept set
-    * to empty), and the tagged re-append lands once
-    * ([[CompactSwap.appendExactlyOnce]]). Restart within keep
-    * compacts — the excludeTag reconstruction reads the current
-    * version's files (the DedupIndex §16.22 operational rule). */
+    * the next batch dedups against them too, exactly once per batch
+    * ([[Stores.oncePerBatch]]). Restart within keep compacts — the
+    * excludeTag reconstruction reads the current version's files
+    * (the DedupIndex §16.22 operational rule). */
   def ingestStream(spark: SparkSession, vecs: DataFrame, dir: String,
                    checkpoint: String, radius: Int = 1,
                    thr: Double = 0.40)
                   (sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val ckptTag = java.lang.Integer.toHexString(checkpoint.hashCode)
     vecs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"$dir/_ingested_${ckptTag}_batch_$batchId")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker) && !batch.isEmpty) {
-          val tag = s"${ckptTag}_b$batchId"
+        Stores.oncePerBatch(batch, batchId, dir, "ingested", checkpoint) { tag =>
           val kept = deltaKeep(spark, batch, dir, radius, thr,
             excludeTag = Some(tag)).persist()
           try {
             sink(kept, batchId)
             append(spark, kept, dir, tag = Some(tag))
           } finally kept.unpersist()
-          fs.create(marker, true).close()
         }
+        ()
       }
       .start()
   }
@@ -359,6 +345,7 @@ object SemDedupStore {
     * anti-joined by every [[deltaKeep]] until a [[compact]] folds
     * them into the codes table physically. */
   def takedown(spark: SparkSession, removed: DataFrame, dir: String): Unit = {
+    CompactSwap.requireNotCompacting(spark, dir, "semdedup store", "takedown")
     requireStore(spark, dir)
     removed.select(col("vec_id"))
       .write.mode("append").parquet(s"$dir/tombstones")
@@ -382,20 +369,15 @@ object SemDedupStore {
   /** Physically drop tombstoned rows: one [[CompactSwap]] versioned
     * rewrite of the codes table (zero read-availability window — a
     * live serving loop resolves the promoted version on its next
-    * batch), then EXACTLY the snapshotted tombstone files are
-    * deleted — a takedown that lands DURING the compact survives for
-    * the next one (the DedupIndex.compact contract; deleting the
-    * whole dir here would silently lose it). */
+    * batch) under the shared writer gate and tombstone handshake
+    * ([[CompactSwap.compacting]]). */
   def compact(spark: SparkSession, dir: String): Unit = {
     requireStore(spark, dir)
-    val (tombFiles, tombs) =
-      CompactSwap.snapshotFlat(spark, s"$dir/tombstones")
-    CompactSwap.compactVersioned(spark, dir, "codes",
-      df => tombs.fold(df)(t =>
-        df.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti")),
-      (df, p) => df.write.mode("overwrite").parquet(p))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (f <- tombFiles) fs.delete(f, false)
+    CompactSwap.compacting(spark, dir, "tombstones") { case Seq(tombs) =>
+      CompactSwap.compactVersioned(spark, dir, "codes",
+        df => tombs.fold(df)(t =>
+          df.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti")),
+        (df, p) => df.write.mode("overwrite").parquet(p))
+    }
   }
 }

@@ -57,47 +57,20 @@ object Sketches {
     * associative and commutative, so the estimate side merges all of
     * a group's rows with `hll_union_agg` at read time and a month of
     * appends needs no compaction for correctness (re-sketch into a
-    * fresh dir when file counts matter — the
-    * [[DedupIndex.compact]] discipline). */
+    * fresh dir when file counts matter — [[compact]]). */
   def ingestBatch(batch: DataFrame, dir: String, keys: Seq[String],
                   itemCol: Column, lgK: Int = 12): Unit = {
-    requireNotCompacting(batch.sparkSession, dir)
+    CompactSwap.requireNotCompacting(batch.sparkSession, dir, "sketch store", "ingest")
     batch.groupBy(keys.map(col): _*)
       .agg(hll_sketch_agg(itemCol, lit(lgK)).as("sk"))
       .write.mode("append")
       .parquet(CompactSwap.currentTablePath(batch.sparkSession, dir, "sketches"))
   }
 
-  /** Writer-exclusion gate: refuse to append while [[compact]] holds
-    * the store. This check is check-then-act (an append that passed
-    * it can still be in flight when a compact starts), so it is only
-    * the FAST-FAIL side; the correctness side lives in [[compact]]
-    * itself, whose manifest-snapshot + post-promote reconcile
-    * preserves any file a concurrent append lands, and whose retire
-    * rename makes a mid-commit append fail loudly (batch un-marked →
-    * clean replay). Failing here keeps the batch UN-marked too, so
-    * the stream's restart replays it once the compaction is done.
-    * A marker left by a crashed compact keeps ingest refused until
-    * the next [[compact]] call self-heals the store (the conservative
-    * side of the race). */
-  private def requireNotCompacting(spark: org.apache.spark.sql.SparkSession,
-                                   dir: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker))
-      throw new IllegalStateException(
-        s"sketch store $dir is compacting ($marker present); " +
-          "retry the ingest after compaction completes")
-  }
-
-  /** STREAMING sketch-store maintenance — the [[DedupIndex
-    * .ingestStream]] convention carried to the approx family: each
-    * micro-batch [[ingestBatch]]es under a checkpoint-namespaced
-    * per-batch marker, so a batch replayed after a crash between the
-    * append and the checkpoint commit cannot double its sketches
-    * into the store (idempotent by marker, exactly like the dedup
-    * store's ingest). Emissions equal sequential [[ingestBatch]]
-    * calls over the same batch sequence — spec-pinned. */
+  /** STREAMING sketch-store maintenance: each micro-batch
+    * [[ingestBatch]]es exactly once ([[ingestBatchOnce]]). Emissions
+    * equal sequential [[ingestBatch]] calls over the same batch
+    * sequence — spec-pinned. */
   def ingestStream(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
                    dir: String, keys: Seq[String], itemCol: Column,
                    checkpoint: String, lgK: Int = 12)
@@ -110,69 +83,40 @@ object Sketches {
       }
       .start()
 
-  /** The marker-guarded micro-batch body of [[ingestStream]]: append
-    * the batch's sketches unless this (checkpoint, batchId) already
-    * did — a batch REPLAYED after a crash between the append and the
-    * checkpoint commit is a no-op. Returns whether the append ran. */
+  /** The micro-batch body of [[ingestStream]]: append the batch's
+    * sketches unless this (checkpoint, batchId) already did
+    * ([[Stores.oncePerBatch]]). Returns whether the append ran. The
+    * append is untagged: a torn-batch replay re-appends, harmless
+    * HERE because HLL rows are union-idempotent (a doubled sketch row
+    * merges to the same registers). */
   def ingestBatchOnce(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
                       dir: String, keys: Seq[String], itemCol: Column,
-                      checkpoint: String, batchId: Long, lgK: Int = 12): Boolean = {
-    val ckptTag = java.lang.Integer.toHexString(checkpoint.hashCode)
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$dir/_ingested_${ckptTag}_batch_$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val run = !fs.exists(marker) && !batch.isEmpty
-    if (run) {
-      // torn-window note: a crash between this append and the marker
-      // replays the append — harmless HERE because HLL rows are
-      // union-idempotent (a doubled sketch row merges to the same
-      // registers); additive stores route through
-      // CompactSwap.appendExactlyOnce instead (LineStore.append tag)
+                      checkpoint: String, batchId: Long, lgK: Int = 12): Boolean =
+    Stores.oncePerBatch(batch, batchId, dir, "ingested", checkpoint) { _ =>
       ingestBatch(batch, dir, keys, itemCol, lgK)
-      fs.create(marker, true).close()
     }
-    run
-  }
 
   /** Store COMPACTION: every ingested batch appends a file set, and a
     * month of micro-batches turns the store scan into thousands of
     * small-file opens. Unlike the dedup store's row-preserving
     * rewrite, sketches MERGE: each group's appended rows union to ONE
     * row (`hll_union_agg` — kilobytes per group), so compaction also
-    * bounds the store's ROW count at the group count. Same swap
-    * discipline as [[DedupIndex.compact]]: rewrite into a fresh dir,
-    * two renames, a crash inside the window self-heals on the next
-    * call. Estimates before == after up to HLL's representation
-    * caveat (union order — spec-pinned per group). Batch markers
-    * survive compaction (they live beside `sketches/`), so replayed
-    * batches stay no-ops. A `_compacting` exclusion marker is held
-    * for the duration; [[ingestBatch]] refuses to append under it
-    * (see [[requireNotCompacting]]).
-    *
-    * The exclusion gate is check-then-act, so an append that passed
-    * the check BEFORE the marker went up can still land files while
-    * the rewrite runs. Those rows are never lost: the rewrite goes
-    * through [[CompactSwap.compactVersioned]] — snapshot, next-
-    * version write, COPY-based late-append reconcile, sentinel
-    * promotion, crash purge — so every concurrent-append ordering
-    * ends with the rows present exactly once, and a reader resolving
-    * mid-compact sees the old or the new version, never neither
-    * (the zero-window property shared with the row stores). */
+    * bounds the store's ROW count at the group count. Same protocol
+    * as every store ([[CompactSwap.compacting]] around
+    * [[CompactSwap.compactVersioned]]): [[ingestBatch]] refuses under
+    * the gate, a concurrent append's rows are never lost, and a
+    * reader resolving mid-compact sees the old or the new version,
+    * never neither. Estimates before == after up to HLL's
+    * representation caveat (union order — spec-pinned per group).
+    * Batch markers survive compaction (they live beside
+    * `sketches/`), so replayed batches stay no-ops. */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
-              keys: Seq[String]): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // writer exclusion (fast-fail side): ingestBatch refuses to
-    // append while this marker is up. A stale marker from a crashed
-    // compact is ours to clear — this call rebuilds the store it
-    // guarded. The correctness side (manifest snapshot + late-append
-    // reconcile + crash recovery) lives in [[CompactSwap]].
-    fs.create(marker, true).close()
-    try CompactSwap.compactVersioned(spark, dir, "sketches",
-      df => df.groupBy(keys.map(col): _*).agg(hll_union_agg(col("sk")).as("sk")),
-      (df, tmp) => df.write.parquet(tmp))
-    finally fs.delete(marker, false)
-  }
+              keys: Seq[String]): Unit =
+    CompactSwap.compacting(spark, dir) { _ =>
+      CompactSwap.compactVersioned(spark, dir, "sketches",
+        df => df.groupBy(keys.map(col): _*).agg(hll_union_agg(col("sk")).as("sk")),
+        (df, tmp) => df.write.parquet(tmp))
+    }
 
   /** GROUP-level takedown — the one erasure the sketch store CAN do
     * exactly, and the graded half of its erasure story
@@ -186,10 +130,7 @@ object Sketches {
     * recorded impossibility: inside one group's sketch the erased
     * rows' hashes may BE the register maxima. */
   def takedownGroup(spark: org.apache.spark.sql.SparkSession, dir: String,
-                    removed: Column): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$dir/_compacting")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(marker, true).close()
+                    removed: Column): Unit =
     // not(coalesce(removed, false)), NOT where(!removed): under SQL
     // three-valued logic a NULL-keyed group row (legal in groupBy —
     // rollup subtotals and NULL data keys both produce them) makes
@@ -197,11 +138,11 @@ object Sketches {
     // survivor row — a takedown of one group would erase every
     // NULL-keyed group too. NULL-on-the-predicate means "not the
     // removed group", so those rows are retained.
-    try CompactSwap.compactVersioned(spark, dir, "sketches",
-      df => df.where(not(coalesce(removed, lit(false)))),
-      (df, tmp) => df.write.parquet(tmp))
-    finally fs.delete(marker, false)
-  }
+    CompactSwap.compacting(spark, dir) { _ =>
+      CompactSwap.compactVersioned(spark, dir, "sketches",
+        df => df.where(not(coalesce(removed, lit(false)))),
+        (df, tmp) => df.write.parquet(tmp))
+    }
 
   /** Distinct-count estimates over an ingested store, one row per
     * rollup level of `keys`: reads ONLY the group-sized sketch rows

@@ -374,105 +374,29 @@ object Hdf5 {
   final case class Uint16Grid(name: String, t: Int, h: Int, w: Int, data: Array[Short])
 
   /** Read a single-3d-uint16-dataset HDF5 file of the shape this
-    * object writes (superblock v0, v1 headers, chunked + deflate) —
-    * the read-back path for the reference's submission files, so a
-    * pipeline can audit/score its own sink output without libhdf5.
-    * Walks superblock → root symbol table → dataset object header →
-    * chunk B-tree (any depth) from the public spec; every structure is
-    * signature-checked and violations throw (never a silent zero).
-    * `Hdf5Spec` cross-checks this reader against the independently
-    * written spec parser on identical bytes. */
+    * object writes (one chunked + deflate dataset) — the read-back
+    * path for the reference's submission files, so a pipeline can
+    * audit/score its own sink output without libhdf5. The container
+    * walk is [[Hdf5Nc]]'s (every structure signature-checked,
+    * violations throw — never a silent zero); this layer only checks
+    * the submission shape: exactly one dataset, rank 3, little-endian
+    * unsigned 16-bit, deflate-filtered. `Hdf5Spec` cross-checks it
+    * against the independently written spec parser on identical
+    * bytes. */
   def readUint16(bytes: Array[Byte]): Uint16Grid = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def u8(a: Long): Int = bytes(a.toInt) & 0xFF
-    def u16(a: Long): Int = bb.getShort(a.toInt) & 0xFFFF
-    def u32(a: Long): Long = bb.getInt(a.toInt) & 0xFFFFFFFFL
-    def u64(a: Long): Long = bb.getLong(a.toInt)
-    def ascii(a: Long, n: Int): String = new String(bytes, a.toInt, n, "US-ASCII")
     def fail(msg: String): Nothing = throw new IllegalArgumentException(s"not a graft HDF5 file: $msg")
-
-    if (bytes.length < 64 || !bytes.take(8).sameElements(
-      Array[Byte](0x89.toByte, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n'))) fail("bad signature")
-    if (u8(8) != 0) fail(s"superblock v${u8(8)}, need v0")
-    if (u8(13) != 8 || u8(14) != 8) fail("need 8-byte offsets/lengths")
-    // root symbol-table entry at 56: name off, OH addr, cache type, reserved,
-    // scratch = cached {btree, heap}
-    val rootOh = u64(56 + 8)
-    if (u32(56 + 16) != 1) fail("root cache type != 1")
-    val btAddr = u64(56 + 24); val heapAddr = u64(56 + 32)
-
-    // group B-tree leaf → first SNOD → first (only) symbol
-    if (ascii(btAddr, 4) != "TREE" || u8(btAddr + 4) != 0) fail("group B-tree")
-    if (u16(btAddr + 6) < 1) fail("empty group")
-    val snod = u64(btAddr + 24 + 8)
-    if (ascii(snod, 4) != "SNOD") fail("symbol node")
-    if (u16(snod + 6) != 1) fail(s"${u16(snod + 6)} datasets, need exactly 1")
-    val nameOff = u64(snod + 8); val dsOh = u64(snod + 16)
-    if (ascii(heapAddr, 4) != "HEAP") fail("local heap")
-    val heapData = u64(heapAddr + 24)
-    var q = heapData + nameOff
-    val nm = new StringBuilder
-    while (u8(q) != 0) { nm.append(u8(q).toChar); q += 1 }
-
-    // dataset object header: need dataspace, datatype, layout; filter
-    // pipeline optional-but-expected (deflate)
-    if (u8(dsOh) != 1) fail("dataset OH version")
-    var dims: Seq[Long] = null; var chunkBt = -1L; var deflated = false
-    var p = dsOh + 16; var m = 0; val nMsgs = u16(dsOh + 2)
-    while (m < nMsgs) {
-      val typ = u16(p); val sz = u16(p + 2); val body = p + 8
-      typ match {
-        case 0x0001 =>
-          if (u8(body) != 1 || u8(body + 1) != 3) fail("need rank-3 v1 dataspace")
-          dims = Seq(u64(body + 8), u64(body + 16), u64(body + 24))
-        case 0x0003 =>
-          if (u8(body) != 0x10 || u8(body + 1) != 0 || u32(body + 4) != 2)
-            fail("need LE unsigned 2-byte fixed-point datatype")
-        case 0x000B =>
-          if (u16(body + 8) != 1) fail(s"filter id ${u16(body + 8)}, only deflate supported")
-          deflated = true
-        case 0x0008 =>
-          if (u8(body) != 3 || u8(body + 1) != 2) fail("need v3 chunked layout")
-          chunkBt = u64(body + 3)
-        case _ =>
-      }
-      p += 8 + sz; m += 1
+    if (!Hdf5Nc.isHdf5(bytes)) fail("bad signature")
+    val ds = Hdf5Nc.parse(bytes) match {
+      case Seq(d) => d
+      case dss => fail(s"${dss.size} datasets, need exactly 1")
     }
-    if (dims == null || chunkBt < 0) fail("missing dataspace/layout message")
-    if (!deflated) fail("missing deflate filter pipeline")
-    val Seq(t, h, w) = dims
-    require(t * h * w <= Int.MaxValue, s"grid ${t}x${h}x$w too large for one array")
-    val out = new Array[Short]((t * h * w).toInt)
-    val slice = (h * w).toInt
-    val keySize = 8 + 8 * 4 // size, mask, 4 offsets (rank 3 + element dim)
-
-    def walk(node: Long): Unit = {
-      if (ascii(node, 4) != "TREE" || u8(node + 4) != 1) fail("chunk B-tree node")
-      val level = u8(node + 5); val n = u16(node + 6)
-      var c = 0
-      while (c < n) {
-        val kp = node + 24 + c * (keySize + 8)
-        val child = u64(kp + keySize)
-        if (level > 0) walk(child)
-        else {
-          val csize = u32(kp).toInt
-          if (u32(kp + 4) != 0) fail("partially-applied filter mask")
-          val tOff = u64(kp + 8)
-          val inf = new java.util.zip.Inflater()
-          inf.setInput(bytes, child.toInt, csize)
-          val raw = new Array[Byte](slice * 2)
-          val got = inf.inflate(raw)
-          if (got != raw.length || !inf.finished()) fail(s"chunk at $child is not one full slice")
-          inf.end()
-          val cb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-          var i = 0
-          while (i < slice) { out(tOff.toInt * slice + i) = cb.getShort(); i += 1 }
-        }
-        c += 1
-      }
-    }
-    walk(chunkBt)
-    Uint16Grid(nm.toString, t.toInt, h.toInt, w.toInt, out)
+    if (ds.dims.length != 3) fail(s"rank-${ds.dims.length} dataspace, need rank 3")
+    if (ds.dtype != Hdf5Nc.Dtype(0, 2, signed = false, littleEndian = true))
+      fail("need LE unsigned 2-byte fixed-point datatype")
+    if (ds.layoutClass != 2 || !ds.filters.contains(1)) fail("missing deflate filter pipeline")
+    val Seq(t, h, w) = ds.dims
+    Uint16Grid(ds.path, t.toInt, h.toInt, w.toInt,
+      Hdf5Nc.readData(bytes, ds).map(_.toInt.toShort))
   }
 
   /** `binaryFile` scan over `.h5` files → the repo-standard long table

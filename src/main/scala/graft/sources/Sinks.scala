@@ -2,37 +2,12 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.scalars
 
-/** S8: partitioned encode sink — the Spark form of the reference's
-  * per-(region, day) uint16 gzip HDF5 submission writer
-  * (weather4cast/datasets.py:455-459, scaling table 379-384).
-  *
-  * Values are encoded back to quantized integers (N2) and written as
-  * gzip parquet partitioned by the given keys — partition pruning on
-  * read replaces the reference's hand-built per-day paths.
+/** S8: the Spark form of the reference's per-(region, day) uint16
+  * gzip HDF5 submission writer (weather4cast/datasets.py:455-459,
+  * scaling table 379-384).
   */
 object Sinks {
-
-  /** Encode `valueCol` via inverse min-max scaling + quantize, write
-    * partitioned gzip parquet. `partitionCols` become directory-level
-    * partition columns (Hive layout). */
-  def writeEncoded(df: DataFrame, out: String, valueCol: String,
-                   lo: Double, hi: Double, partitionCols: Seq[String]): Unit =
-    df.withColumn(valueCol + "_enc",
-        scalars.minmaxEncode(col(valueCol), lo, hi))
-      .drop(valueCol)
-      .write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .option("compression", "gzip")
-      .parquet(out)
-
-  /** Round-trip read: decode back to the value domain. */
-  def readEncoded(spark: org.apache.spark.sql.SparkSession, path: String,
-                  valueCol: String, lo: Double, hi: Double): DataFrame =
-    spark.read.parquet(path)
-      .withColumn(valueCol, scalars.minmaxDecode(col(valueCol + "_enc").cast("double"), lo, hi))
-      .drop(valueCol + "_enc")
 
   /** Hadoop `Configuration` is not `Serializable`; this wrapper ships
     * the DRIVER's session configuration (including `spark.hadoop.*`

@@ -44,23 +44,6 @@ object Streaming {
       .where(col("n") >= minCount)
       .select(col(key), col("window.start").as("wstart"), col("n"))
 
-  /** Streaming ingest dedup: exact-fingerprint first-wins dedup with
-    * BOUNDED state — the streaming half of [[graft.ops.Dedup]]'s exact
-    * path. `dropDuplicatesWithinWatermark` keeps a fingerprint in the
-    * state store only until the watermark passes it, so state is
-    * O(docs per watermark window), not O(corpus) — the property that
-    * lets an ingest pipeline run for months. A batch frame takes the
-    * plain-dropDuplicates branch (Spark rejects the watermark-bounded
-    * operator outside streaming), which is its batch semantics anyway
-    * — test-asserted against the MemoryStream execution. */
-  def streamingDedup(docs: DataFrame, textCol: org.apache.spark.sql.Column,
-                     tsCol: String, watermark: String): DataFrame = {
-    val fp = docs.withColumn("fingerprint", graft.functions.text.fingerprint(textCol))
-    if (docs.isStreaming)
-      fp.withWatermark(tsCol, watermark).dropDuplicatesWithinWatermark("fingerprint")
-    else fp.dropDuplicates("fingerprint")
-  }
-
   /** Streaming sessionization — the custom-state operator behind
     * [[graft.ops.Sequences.sessionize]]'s batch plan, as
     * `flatMapGroupsWithState` with an EVENT-TIME timeout: per key the

@@ -84,50 +84,6 @@ class FileStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streamingDedup over a file source: state survives a checkpoint restart") {
-    val watch = Files.createTempDirectory("graft-watch-dd")
-    val cp = Files.createTempDirectory("graft-cp-dd")
-    val got = new scala.collection.mutable.ArrayBuffer[(Long, Long)] // (batchPhase, doc_id)
-    def start(phase: Long) = {
-      val docs = fileStream(watch).select($"id".as("doc_id"),
-        concat(lit("text-"), ($"sec" % 1000).cast("string")).as("text"), $"ts")
-      Streaming.streamingDedup(docs, $"text", "ts", "1 hour")
-        .writeStream.option("checkpointLocation", cp.toString)
-        .outputMode("append")
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-          val ids = b.select("doc_id").collect().map(_.getLong(0))
-          got.synchronized { got ++= ids.map((phase, _)) }
-          ()
-        }.start()
-    }
-    // phase 1: docs 1,2,3 — 2 duplicates 1 (same text key 100).
-    // All timestamps inside one watermark window (span << 1h), so no
-    // fingerprint state can expire before phase 2 probes it.
-    drip(watch, 1, Seq((1L, 10100L), (2L, 11100L), (3L, 12200L)))
-    val q1 = start(1)
-    try { q1.processAllAvailable() } finally q1.stop()
-    // phase 2 AFTER restart: doc 4 duplicates doc 1 across the restart
-    // boundary — droppable ONLY from recovered state store contents;
-    // doc 5 is new. All inside the 1h watermark window.
-    drip(watch, 2, Seq((4L, 13100L), (5L, 14300L)))
-    val q2 = start(2)
-    try { q2.processAllAvailable() } finally q2.stop()
-    val phase1 = got.synchronized(got.filter(_._1 == 1).map(_._2).toSet)
-    val phase2 = got.synchronized(got.filter(_._1 == 2).map(_._2).toSet)
-    assert(phase1 == Set(1L, 3L), s"phase 1 emitted $phase1")
-    assert(phase2 == Set(5L), s"phase 2 emitted $phase2 — " +
-      "doc 4 surviving means dedup state was lost across the restart")
-    // batch twin over the union: same three survivors
-    val batch = Seq((1L, 10100L), (2L, 11100L), (3L, 12200L), (4L, 13100L), (5L, 14300L))
-      .toDF("doc_id", "sec")
-      .withColumn("text", concat(lit("text-"), ($"sec" % 1000).cast("string")))
-      .withColumn("ts", timestamp_seconds($"sec"))
-    // batch dropDuplicates keeps an arbitrary row per distinct text, so
-    // survivor IDENTITY differs from arrival-order streaming; the
-    // distinct-count is the engine-independent parity
-    assert(Streaming.streamingDedup(batch, $"text", "ts", "1 hour").count() == 3L)
-  }
-
   test("sessionizeStream over a file source: open session closes correctly after restart") {
     val watch = Files.createTempDirectory("graft-watch-ss")
     val cp = Files.createTempDirectory("graft-cp-ss")

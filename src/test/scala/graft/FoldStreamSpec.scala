@@ -137,29 +137,6 @@ class FoldStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming dedup: duplicate fingerprints collapse across micro-batches, state watermark-bounded") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)]
-    val docs = mem.toDF().toDF("doc_id", "text", "sec")
-      .withColumn("ts", timestamp_seconds($"sec"))
-    val out = Streaming.streamingDedup(docs, $"text", "ts", "10 minutes")
-    val q = out.writeStream.format("memory").queryName("sdedup").outputMode("append").start()
-    try {
-      mem.addData((1L, "alpha beta", 100L), (2L, "alpha beta", 160L), (3L, "gamma delta", 200L))
-      q.processAllAvailable()
-      // second micro-batch: fingerprint of doc 1 is still inside the
-      // watermark window -> doc 4 must be dropped by stateful dedup
-      mem.addData((4L, "alpha beta", 260L), (5L, "epsilon zeta", 300L))
-      q.processAllAvailable()
-      val ids = spark.table("sdedup").select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(ids == Set(1L, 3L, 5L), s"got $ids")
-    } finally q.stop()
-    // the same transform on a batch frame degenerates to plain dedup
-    val batch = Seq((1L, "alpha beta", 100L), (2L, "alpha beta", 160L), (3L, "gamma delta", 200L))
-      .toDF("doc_id", "text", "sec").withColumn("ts", timestamp_seconds($"sec"))
-    assert(Streaming.streamingDedup(batch, $"text", "ts", "10 minutes").count() == 2L)
-  }
-
   test("X2 streaming TTL: idle key evicted at watermark, live key unchanged, return restarts") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp, Double)]
