@@ -1840,7 +1840,8 @@ object SimilarityQueries {
       (s, d) => {
         val e0 = T(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("ve"))
-        val (rf, _, traj) = graft.ops.Pq.opqRefine(e0, opqWinnerR0(e0), P, rounds = 2)
+        val (rf, _, traj) =
+          graft.ops.Pq.opqRefine(e0, opqWinnerR0("e_opq_refined", e0), P, rounds = 2)
         val orth = (0 until Dim).forall(i => (0 until Dim).forall { j =>
           val dot = (0 until Dim).map(k => rf(i)(k) * rf(j)(k)).sum
           math.abs(dot - (if (i == j) 1.0 else 0.0)) < 1e-9
@@ -1877,7 +1878,7 @@ object SimilarityQueries {
         graft.ops.AnnIndex.buildRotatedIfAbsent(s, corpus, dir,
           graft.ops.AnnIndex.tableFingerprint(s, s"$d/embeddings.parquet"),
           k = 8, p = P) {
-          graft.ops.Pq.opqRefine(e0, opqWinnerR0(e0), P, rounds = 1)._1
+          graft.ops.Pq.opqRefine(e0, opqWinnerR0("e_opq_indexed", e0), P, rounds = 1)._1
         }
         val q1 = e0.where(col("vec_id") === 0).select(col("ve").as("qv"))
         val got = graft.ops.AnnIndex.searchRotated(s, dir, q1,
@@ -2074,8 +2075,10 @@ object SimilarityQueries {
     * arm, the seed-codebook quantization error in rotated space
     * (the panel's own qerr formula); winner by (qerr, t); the
     * winner's permutation+sign rotation as dim×dim. Four bounded
-    * driver folds — the a4 ridge collect class. */
-  private def opqWinnerR0(e0: org.apache.spark.sql.DataFrame): Array[Array[Double]] = {
+    * driver folds — the a4 ridge collect class. A fold still running
+    * after [[OpqArmTimeout]] fails `query` loudly instead of hanging. */
+  private def opqWinnerR0(query: String,
+                          e0: org.apache.spark.sql.DataFrame): Array[Array[Double]] = {
     def armQerr(t: Int): Long = {
       val permLit = typedlit(opqPerm(t).toIndexedSeq)
       val sgnLit = typedlit(opqSigns(t).toIndexedSeq)
@@ -2108,11 +2111,20 @@ object SimilarityQueries {
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(
           (0 until 4).map(t => scala.concurrent.Future((armQerr(t), t)))),
-        scala.concurrent.duration.Duration.Inf).min._2
+        OpqArmTimeout).min._2
+    } catch {
+      case e: java.util.concurrent.TimeoutException =>
+        pool.shutdownNow()
+        throw new IllegalStateException(
+          s"$query: the OPQ rotation-arm folds did not finish within $OpqArmTimeout", e)
     } finally pool.shutdown()
     Array.tabulate(Dim, Dim)((i, j) =>
       if (opqPerm(tWin)(i) - 1 == j) opqSigns(tWin)(i) else 0.0)
   }
+
+  /** Bound on [[opqWinnerR0]]'s four arm folds together: each is a
+    * few seconds at sf0.1, so only a hung job reaches it. */
+  private val OpqArmTimeout = scala.concurrent.duration.Duration(10, "minutes")
 
   /** Squared L2 as the SAME left-to-right fold DuckDB's list_sum
     * runs, so quantization sees bit-identical inputs on both sides —

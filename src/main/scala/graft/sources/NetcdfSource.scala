@@ -2,12 +2,15 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
+import scala.annotation.switch
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -32,7 +35,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * (e.g. catalogs over `path`/`var`/`t` or attr audits) skips the
   * payload decode (chunk walk + inflate) entirely and answers from
   * the file HEADER — the S1-catalog-over-S2-files pattern costs
-  * header reads, not data reads.
+  * header reads, not data reads. Scans compare by value, so a frame
+  * read twice in one plan is scanned once (exchange reuse), and files
+  * are opened with the session's Hadoop conf.
   */
 class NetcdfSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "netcdf"
@@ -95,6 +100,26 @@ private class NetcdfScanBuilder(options: Map[String, String])
 
 private class NetcdfScan(options: Map[String, String], required: StructType)
     extends Scan with Batch {
+  // value identity: a DataFrame used twice in one plan (a self-join,
+  // two aggregates of one frame) yields two scans of one catalog.
+  // BatchScanExec compares its Batch — this scan — so only value
+  // equality lets ReuseExchange and AQE stage reuse run the scan
+  // stage once. Same options (paths, vars) and same pruned schema
+  // means same rows; a header-only and a `raw` scan stay distinct.
+  private val identity =
+    (options.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }, required)
+  override def equals(other: Any): Boolean = other match {
+    case o: NetcdfScan => identity == o.identity
+    case _ => false
+  }
+  override def hashCode(): Int = identity.hashCode
+
+  // the session's conf: lists the files on the driver and, broadcast
+  // once per scan, opens them on the executors
+  @transient private lazy val hadoopConf = SparkSession.active.sessionState.newHadoopConf()
+  @transient private lazy val hadoopConfB =
+    SparkSession.active.sparkContext.broadcast(new SerializableHadoopConf(hadoopConf))
+
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -103,10 +128,9 @@ private class NetcdfScan(options: Map[String, String], required: StructType)
 
   override def planInputPartitions(): Array[InputPartition] = {
     // driver side: glob + expand directories, one partition per file
-    val conf = SparkSession.active.sessionState.newHadoopConf()
     val files = NetcdfSource.pathsOf(options).flatMap { p =>
       val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
+      val fs = hp.getFileSystem(hadoopConf)
       val matched = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty[FileStatus])
       require(matched.nonEmpty, s"netcdf source: no files match '$p'")
       matched.flatMap {
@@ -118,24 +142,25 @@ private class NetcdfScan(options: Map[String, String], required: StructType)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new NetcdfReaderFactory(NetcdfSource.varsOf(options), required.fieldNames)
+    new NetcdfReaderFactory(NetcdfSource.varsOf(options), required.fieldNames, hadoopConfB)
 }
 
 private case class NetcdfInputPartition(file: String) extends InputPartition
 
-private class NetcdfReaderFactory(vars: Seq[String], fieldNames: Array[String])
+private class NetcdfReaderFactory(vars: Seq[String], fieldNames: Array[String],
+                                  conf: Broadcast[SerializableHadoopConf])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new NetcdfPartitionReader(partition.asInstanceOf[NetcdfInputPartition].file, vars, fieldNames)
+    new NetcdfPartitionReader(partition.asInstanceOf[NetcdfInputPartition].file, vars,
+      fieldNames, conf.value.value)
 }
 
-private class NetcdfPartitionReader(file: String, vars: Seq[String], fieldNames: Array[String])
+private class NetcdfPartitionReader(file: String, vars: Seq[String], fieldNames: Array[String],
+                                    conf: Configuration)
     extends PartitionReader[InternalRow] {
-  // executor side: default Hadoop conf resolves file:// and plain-path
-  // URIs; cluster-specific FS conf rides spark.hadoop.* into executors
   private lazy val bytes: Array[Byte] = {
     val hp = new Path(file)
-    val fs = hp.getFileSystem(new Configuration())
+    val fs = hp.getFileSystem(conf)
     val in = fs.open(hp)
     try {
       val len = fs.getFileStatus(hp).getLen
@@ -149,35 +174,43 @@ private class NetcdfPartitionReader(file: String, vars: Seq[String], fieldNames:
   // from the header walk alone (no chunk decode / inflate)
   private val needData = fieldNames.contains("raw")
   private val pathU = UTF8String.fromString(file)
+  // the projection, resolved once: output slot i holds Schema field cols(i)
+  private val cols: Array[Int] = fieldNames.map(NetcdfSource.Schema.fieldIndex)
+
+  private def row(vnU: UTF8String, t: Long, y: Long, x: Long,
+                  raw: Double, lo: Double, hi: Double, f: Double): InternalRow = {
+    val vals = new Array[Any](cols.length)
+    var i = 0
+    while (i < cols.length) {
+      vals(i) = (cols(i): @switch) match {
+        case 0 => pathU
+        case 1 => vnU
+        case 2 => t
+        case 3 => y
+        case 4 => x
+        case 5 => raw
+        case 6 => lo
+        case 7 => hi
+        case 8 => f
+      }
+      i += 1
+    }
+    new GenericInternalRow(vals)
+  }
 
   private val rows: Iterator[InternalRow] = vars.iterator.flatMap { vn =>
     val vnU = UTF8String.fromString(vn)
-    val cells: Iterator[(Long, Long, Long, Double, Double, Double, Double)] =
-      if (needData) {
-        Netcdf.fileGridRows(file, bytes, vn)
-          .map { case (_, t, y, x, raw, lo, hi, f) => (t, y, x, raw, lo, hi, f) }
-      } else {
-        val (dims, lo, hi, f) = Netcdf.gridShape(file, bytes, vn)
-        val (t, h, w) = (dims._1, dims._2, dims._3)
-        for {
-          ti <- (0L until t).iterator
-          yi <- 0L until h
-          xi <- 0L until w
-        } yield (ti, yi, xi, 0.0, lo, hi, f)
+    if (needData)
+      Netcdf.fileGridRows(file, bytes, vn).map { case (_, t, y, x, raw, lo, hi, f) =>
+        row(vnU, t, y, x, raw, lo, hi, f)
       }
-    cells.map { case (t, y, x, raw, lo, hi, f) =>
-      InternalRow.fromSeq(fieldNames.toSeq.map {
-        case "path" => pathU
-        case "var" => vnU
-        case "t" => t
-        case "y" => y
-        case "x" => x
-        case "raw" => raw
-        case "valid_lo" => lo
-        case "valid_hi" => hi
-        case "fill_value" => f
-        case other => throw new IllegalArgumentException(s"unknown column '$other'")
-      })
+    else {
+      val ((t, h, w), lo, hi, f) = Netcdf.gridShape(file, bytes, vn)
+      for {
+        ti <- (0L until t).iterator
+        yi <- (0L until h).iterator
+        xi <- (0L until w).iterator
+      } yield row(vnU, ti, yi, xi, 0.0, lo, hi, f)
     }
   }
 

@@ -9,26 +9,6 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** Hadoop `Configuration` is not `Serializable`; this wrapper ships
-    * the DRIVER's session configuration (including `spark.hadoop.*`
-    * overrides — s3a credentials, endpoints) into the partition
-    * closure via Hadoop's own wire format. A bare
-    * `new Configuration()` on the executor would see only classpath
-    * XML and silently drop those session settings. */
-  private final class SerializableHadoopConf(
-      @transient var value: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      value = new org.apache.hadoop.conf.Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** HDF5-format compatibility sink: one `.h5` file per `fileKey`
     * value, each holding dataset `datasetName` = the key's frames as a
     * (T, h, w) uint16 array, chunked per t-slice by [[Hdf5]],

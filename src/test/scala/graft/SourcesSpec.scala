@@ -548,6 +548,90 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  /** Physical nodes of a (possibly adaptive) plan, through its query
+    * stages; a reused exchange is a leaf, so a reused scan counts once. */
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  private def netcdfScans(p: org.apache.spark.sql.execution.SparkPlan) =
+    Aqe.collect(p) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.table.name.startsWith("netcdf(") => b
+    }
+
+  test("format(netcdf): a self-join of one load scans the catalog once (exchange reuse)") {
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("graft_nc_reuse")
+    Seq("a.nc", "b.nc").foreach(n => java.nio.file.Files.write(dir.resolve(n), fix3))
+    val key = "spark.sql.exchange.reuse"
+    val prior = spark.conf.getOption(key)
+    try {
+      def run(): (Seq[String], org.apache.spark.sql.execution.SparkPlan) = {
+        val df = spark.read.format("netcdf").option("vars", "latitude,elevation")
+          .load(s"$dir/*.nc").select("path", "var", "t", "y", "x", "raw")
+        val q = df.as("a").join(df.as("b"), Seq("path", "var", "t", "y", "x"))
+          .select(col("path"), col("var"), col("t"), col("y"), col("x"), col("a.raw"), col("b.raw"))
+        val rows = q.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+        (rows, q.queryExecution.executedPlan)
+      }
+      val (rows, plan) = run()
+      assert(rows.length == 24, rows.length)
+      assert(Aqe.collect(plan) { case r: ReusedExchangeExec => r }.nonEmpty,
+        s"no ReusedExchangeExec in the final plan:\n$plan")
+      assert(netcdfScans(plan).size == 1, s"the catalog is scanned more than once:\n$plan")
+      spark.conf.set(key, "false")
+      val (plain, plainPlan) = run()
+      assert(netcdfScans(plainPlan).size == 2, "without reuse both sides scan")
+      assert(rows == plain, "exchange reuse changed the rows")
+    } finally {
+      prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
+    }
+  }
+
+  test("format(netcdf): scans compare by options and pruned schema, not by instance") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nc_eq")
+    java.nio.file.Files.write(dir.resolve("static.nc"), fix3)
+    try {
+      def scanOf(cols: String*) = {
+        val df = spark.read.format("netcdf").option("vars", "elevation")
+          .load(s"$dir/*.nc").select(cols.head, cols.tail: _*)
+        val scans = netcdfScans(df.queryExecution.executedPlan)
+        assert(scans.size == 1)
+        scans.head.scan
+      }
+      val header1 = scanOf("var", "t", "y", "x")
+      val header2 = scanOf("var", "t", "y", "x")
+      val data = scanOf("var", "t", "y", "x", "raw")
+      assert(header1 ne header2)
+      assert(header1 == header2 && header1.hashCode == header2.hashCode,
+        "two loads of one glob with one projection must compare equal")
+      assert(header1 != data, "a header-only scan must not stand in for a data scan")
+    } finally {
+      dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
+    }
+  }
+
+  test("format(netcdf): the reader opens files with the session's Hadoop conf") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nc_conf")
+    Seq("a.nc", "b.nc").foreach(n => java.nio.file.Files.write(dir.resolve(n), fix3))
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val prior = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+      spark.conf.set("fs.file.impl.disable.cache", "true")
+      val before = CountingLocalFs.opens.get()
+      val n = spark.read.format("netcdf").option("vars", "elevation")
+        .load(s"$dir/*.nc").select("raw").collect().length
+      assert(n == 12)
+      assert(CountingLocalFs.opens.get() - before >= 2,
+        "the netcdf reader did not open its files through the session's fs.file.impl")
+    } finally {
+      prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("NetCDF-4 container (superblock v2, OHDR, chunked+shuffle+deflate): edge chunks clipped, attrs decoded") {
     val dss = sources.Hdf5Nc.parse(nc4fix2)
     assert(dss.map(_.path) == Seq("rr"))
@@ -727,4 +811,17 @@ class SourcesSpec extends AnyFunSuite {
       sdir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(sdir)
     }
   }
+}
+
+/** `file://` that counts its opens: installed through a session's
+  * `fs.file.impl`, it shows which reads honour the session's conf. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    CountingLocalFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingLocalFs {
+  val opens = new java.util.concurrent.atomic.AtomicInteger
 }
