@@ -47,9 +47,9 @@ object Hdf5 {
     * ([[Hdf5Nc]] reads it back): v1 attribute messages `valid_range`
     * (2 float64) and `_FillValue` (1 float64) on the dataset header,
     * SIGNED 16-bit datatype (the classic twin stores NC_SHORT), so
-    * [[Netcdf.readGrid]] decodes a file from this writer cell-for-cell
-    * and attr-for-attr equal to its [[Netcdf.writeGrid3]] CDF-1 twin —
-    * asserted in SourcesSpec. */
+    * `spark.read.format("netcdf")` decodes a file from this writer
+    * cell-for-cell and attr-for-attr equal to its [[Netcdf.writeGrid3]]
+    * CDF-1 twin — asserted in SourcesSpec. */
   def writeGridNc(out: OutputStream, varName: String, t: Int, h: Int, w: Int,
                   data: Array[Double],
                   validRange: Option[(Double, Double)] = None,
@@ -376,7 +376,9 @@ object Hdf5 {
   /** Read a single-3d-uint16-dataset HDF5 file of the shape this
     * object writes (one chunked + deflate dataset) — the read-back
     * path for the reference's submission files, so a pipeline can
-    * audit/score its own sink output without libhdf5. The container
+    * audit/score its own sink output without libhdf5 (Spark reads
+    * the same files as a long grid through
+    * `spark.read.format("netcdf").option("var", "array")`). The container
     * walk is [[Hdf5Nc]]'s (every structure signature-checked,
     * violations throw — never a silent zero); this layer only checks
     * the submission shape: exactly one dataset, rank 3, little-endian
@@ -397,30 +399,5 @@ object Hdf5 {
     val Seq(t, h, w) = ds.dims
     Uint16Grid(ds.path, t.toInt, h.toInt, w.toInt,
       Hdf5Nc.readData(bytes, ds).map(_.toInt.toShort))
-  }
-
-  /** `binaryFile` scan over `.h5` files → the repo-standard long table
-    * `(path, t, y, x, raw)` with `raw` the uint16 value as a long —
-    * the exact read twin of [[Netcdf.readGrid]] and of the
-    * [[Sinks.writeHdf5Frames]] sink. One task per file, flatMap into
-    * rows, no shuffle; downstream pruning/agg is columnar. */
-  def readGrid(spark: org.apache.spark.sql.SparkSession, pathGlob: String): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(org.apache.spark.sql.functions.col("path"),
-        org.apache.spark.sql.functions.col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { files =>
-        files.flatMap { case (path, bytes) =>
-          val g = readUint16(bytes)
-          val slice = g.h * g.w
-          for (i <- (0 until g.t * slice).iterator) yield {
-            val ti = i / slice; val rem = i % slice
-            (path, ti.toLong, (rem / g.w).toLong, (rem % g.w).toLong,
-              (g.data(i) & 0xFFFF).toLong)
-          }
-        }
-      }
-      .toDF("path", "t", "y", "x", "raw")
   }
 }

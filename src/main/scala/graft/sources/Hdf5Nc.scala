@@ -28,11 +28,12 @@ import java.nio.{ByteBuffer, ByteOrder}
   *    netCDF-4's reference-typed bookkeeping attrs (DIMENSION_LIST,
   *    REFERENCE_LIST) are recorded without values, not errors.
   *
-  * Split exactly like [[Netcdf]]: this layer only DECODES — raw
-  * numeric payloads plus the attrs — and the numeric preprocessing
-  * stays in the column operators ([[Netcdf.decodedValue]]), so ONE
-  * codepath serves classic and HDF5-container `.nc` files alike
-  * ([[Netcdf.readGrid]] sniffs the magic and routes here).
+  * Split exactly like [[Netcdf]]: this layer only walks the container
+  * and DECODES — raw numeric payloads plus the attrs. The long-grid
+  * layout and attr checks are [[Netcdf.grid]]'s, which sniffs the
+  * magic and routes here, so classic and HDF5-container `.nc` files
+  * decode through one function; the numeric preprocessing stays in
+  * the column operators ([[Netcdf.decodedValue]]).
   * Fixture-tested in SourcesSpec against hand-built from-the-spec
   * bytes, the same doctrine as the CDF fixtures — a reader bug cannot
   * self-agree with its own writer.
@@ -66,53 +67,6 @@ object Hdf5Nc {
     * contract) or 0.0 when absent. */
   def readData(bytes: Array[Byte], ds: Dataset): Array[Double] =
     new Parser(bytes).readData(ds)
-
-  /** The [[Netcdf.readGrid]] row shape for one HDF5-container file:
-    * trailing two dims → (y, x), third-from-last → t, 1-/2-d padded. */
-  def gridRows(path: String, bytes: Array[Byte], varName: String)
-      : Iterator[(String, Long, Long, Long, Double, Double, Double, Double)] = {
-    val (ds, (_, h, w), lo, hi, fill) = gridMeta(path, bytes, varName)
-    val data = readData(bytes, ds)
-    for (i <- data.indices.iterator) yield {
-      val ti = i / (h * w).toInt; val rem = i % (h * w).toInt
-      (path, ti.toLong, (rem / w).toLong, (rem % w).toLong, data(i), lo, hi, fill)
-    }
-  }
-
-  /** Header-only twin of [[gridRows]]: (t, h, w) + decode attrs with
-    * NO payload read — the no-`raw` path of the netcdf connector's
-    * column pruning. */
-  def gridShape(path: String, bytes: Array[Byte], varName: String)
-      : ((Long, Long, Long), Double, Double, Double) = {
-    val (_, thw, lo, hi, fill) = gridMeta(path, bytes, varName)
-    (thw, lo, hi, fill)
-  }
-
-  private def gridMeta(path: String, bytes: Array[Byte], varName: String)
-      : (Dataset, (Long, Long, Long), Double, Double, Double) = {
-    val dss = parse(bytes)
-    val ds = dss.find(d => d.path == varName || d.path.endsWith("/" + varName))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$path has no dataset '$varName'; has ${dss.map(_.path).mkString(", ")}"))
-    val shape = ds.dims
-    val (t, h, w) = shape.reverse.padTo(3, 1L).take(3) match {
-      case Seq(wd, ht, tm) => (tm, ht, wd)
-    }
-    require(shape.product == t * h * w,
-      s"${ds.path}: rank-${shape.length} shape ${shape.mkString("x")} needs >3-d flattening")
-    val vr = ds.attrs.get("valid_range").map { a =>
-      require(a.values.length >= 2,
-        s"$path ${ds.path}: valid_range attr must carry >=2 numeric values, got ${a.values.length}")
-      a.values
-    }
-    val fill = ds.attrs.get("_FillValue").map { a =>
-      require(a.values.nonEmpty,
-        s"$path ${ds.path}: _FillValue attr must carry a numeric value")
-      a.values(0)
-    }
-    (ds, (t, h, w), vr.map(_(0)).getOrElse(Double.NaN),
-      vr.map(_(1)).getOrElse(Double.NaN), fill.getOrElse(Double.NaN))
-  }
 
   // ---- the spec walk ------------------------------------------------
 

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Pure-JVM classic NetCDF (CDF-1 / CDF-2) reader — the ingest twin of
@@ -12,22 +11,15 @@ import org.apache.spark.sql.functions._
   * Written from the public NetCDF Classic Format Specification
   * (magic `CDF\x01`/`CDF\x02`, big-endian, 4-byte-aligned tagged
   * lists); NetCDF-4 `.nc` files are HDF5 containers and route to
-  * [[Hdf5Nc]]'s generic spec-walk — [[readGrid]] sniffs the magic,
-  * so ONE API reads both on-disk generations.
+  * [[Hdf5Nc]]'s generic spec-walk — [[grid]] sniffs the magic, so ONE
+  * per-file decode serves both on-disk generations, and Spark reads
+  * them through `spark.read.format("netcdf")` ([[NetcdfSource]]).
   *
   * Split exactly like the reference: this layer only DECODES — raw
   * integer/float payloads plus the `valid_range`/`_FillValue` attrs —
   * and the numeric preprocessing (min-max scale N1, fill-to-NULL P3,
   * conditional mean-impute A1) stays in the existing column operators,
   * so one codepath serves parquet-packed and NetCDF inputs alike.
-  *
-  * Scale shape of [[readGrid]]: a `binaryFile` scan (one task per
-  * file, the same per-file working set the reference holds) followed
-  * by a flatMap into the repo-standard long table — embarrassingly
-  * parallel, no shuffle; all downstream pruning/aggregation runs on
-  * columnar rows. Imperative byte parsing sits in `mapPartitions` for
-  * the same reason [[graft.ops.Multimodal]]'s container sniffing does:
-  * a spec-driven cursor walk has no Catalyst equivalent.
   */
 object Netcdf {
 
@@ -59,7 +51,7 @@ object Netcdf {
   def parseHeader(bytes: Array[Byte]): Header = {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.BIG_ENDIAN)
     require(bytes.length >= 8 && bytes(0) == 'C' && bytes(1) == 'D' && bytes(2) == 'F',
-      "not a classic NetCDF file (missing CDF magic); for NetCDF-4/HDF5 containers use Hdf5Nc or readGrid, which routes by magic")
+      "not a classic NetCDF file (missing CDF magic); for NetCDF-4/HDF5 containers use Hdf5Nc or format(\"netcdf\"), which routes by magic")
     val version = bytes(3).toInt
     require(version == 1 || version == 2, s"unsupported CDF version $version")
     bb.position(4)
@@ -134,6 +126,10 @@ object Netcdf {
     val slice = v.sliceElems
     val nSlices = if (v.isRecord) hdr.numRecs else 1
     require(slice * nSlices <= Int.MaxValue, s"variable ${v.name} too large for one array")
+    val end = if (nSlices == 0) 0L
+              else v.begin + (nSlices - 1) * hdr.recSize + slice * typeSize(v.ncType)
+    require(end <= bytes.length,
+      s"variable ${v.name}: data ends at byte $end, past the ${bytes.length}-byte file (truncated?)")
     val out = new Array[Double]((slice * nSlices).toInt)
     var s = 0
     while (s < nSlices) {
@@ -155,115 +151,60 @@ object Netcdf {
     out
   }
 
-  /** S2 over NetCDF: scan `pathGlob` as binary files and emit the
-    * repo-standard long grid for `varName` — one row per cell:
-    * `(path, t, y, x, raw, valid_lo, valid_hi, fill_value)` with the
-    * trailing two dims mapped to (y, x), an optional third-from-last
-    * (or record) dim to t, and 1-/2-d variables zero-padded. `raw` is
-    * the unscaled stored value; feed it to the existing operators for
-    * the reference's preprocessing (P3 `raw == fill_value` mask, N1
-    * `(raw - lo) / (hi - lo)`, A1 mean-impute), e.g. via
-    * [[decodedValue]]. */
-  def readGrid(spark: SparkSession, pathGlob: String, varName: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { files =>
-        files.flatMap { case (path, bytes) =>
-          // one .nc API for both on-disk generations: NetCDF-4 files
-          // are HDF5 containers — sniff the magic and route to the
-          // generic HDF5 spec-walk; classic CDF-1/2 decodes here
-          if (Hdf5Nc.isHdf5(bytes)) Hdf5Nc.gridRows(path, bytes, varName)
-          else gridRowsClassic(path, bytes, varName)
-        }
+  /** One variable of one `.nc` file, either generation, as the long
+    * grid lays it out: the shape padded to (t, h, w) — trailing two
+    * dims → (y, x), third-from-last (or the record dim) → t — the
+    * decode attrs (NaN when absent), and `values()`, the row-major
+    * payload decode, which runs only when called: a projection
+    * without `raw` answers from the header alone. */
+  private[sources] final case class Grid(t: Long, h: Long, w: Long,
+                                         lo: Double, hi: Double, fill: Double,
+                                         values: () => Array[Double])
+
+  /** Sniff the magic once — NetCDF-4 files are HDF5 containers and
+    * walk through [[Hdf5Nc]], classic CDF-1/2 decode here — then check
+    * the shape and the `valid_range`/`_FillValue` attrs once for both
+    * generations. A payload decode that fails names the file. */
+  private[sources] def grid(path: String, bytes: Array[Byte], varName: String): Grid = {
+    // (name, shape, attr values by name, payload decode)
+    val (name, shape, attr, decode) =
+      if (Hdf5Nc.isHdf5(bytes)) {
+        val dss = Hdf5Nc.parse(bytes)
+        val ds = dss.find(d => d.path == varName || d.path.endsWith("/" + varName))
+          .getOrElse(throw new IllegalArgumentException(
+            s"$path has no variable '$varName'; has ${dss.map(_.path).mkString(", ")}"))
+        (ds.path, ds.dims, (k: String) => ds.attrs.get(k).map(_.values),
+          () => Hdf5Nc.readData(bytes, ds))
+      } else {
+        val hdr = parseHeader(bytes)
+        val v = hdr.vars.find(_.name == varName).getOrElse(
+          throw new IllegalArgumentException(
+            s"$path has no variable '$varName'; has ${hdr.vars.map(_.name).mkString(", ")}"))
+        (v.name, (if (v.isRecord) hdr.numRecs +: v.dims.tail.map(_.length)
+                  else v.dims.map(_.length)).map(_.toLong),
+          (k: String) => v.attrs.get(k).map(_.values), () => readVar(bytes, hdr, v))
       }
-      .toDF("path", "t", "y", "x", "raw", "valid_lo", "valid_hi", "fill_value")
-  }
-
-  /** Multi-variable S2 scan: the [[readGrid]] long grid plus a `var`
-    * column, ALL requested variables decoded in ONE `binaryFile` pass
-    * over the files — the reference's static file carries
-    * latitude/longitude (+ elevation beside it) and its products can
-    * carry several variables (datasets.py:129-162, 182-198); at fleet
-    * scale a V-variable read costs one scan, not V. The per-variable
-    * header re-parse is noise next to the payload decode. */
-  def readGrids(spark: SparkSession, pathGlob: String, varNames: Seq[String]): DataFrame = {
-    require(varNames.nonEmpty, "readGrids needs at least one variable name")
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .mapPartitions { files =>
-        files.flatMap { case (path, bytes) =>
-          varNames.iterator.flatMap { vn =>
-            val rows = if (Hdf5Nc.isHdf5(bytes)) Hdf5Nc.gridRows(path, bytes, vn)
-                       else gridRowsClassic(path, bytes, vn)
-            rows.map { case (p, t, y, x, raw, lo, hi, f) => (p, vn, t, y, x, raw, lo, hi, f) }
-          }
-        }
-      }
-      .toDF("path", "var", "t", "y", "x", "raw", "valid_lo", "valid_hi", "fill_value")
-  }
-
-  /** One file → long-grid rows for one variable, either `.nc`
-    * generation (shared by [[readGrid]]/[[readGrids]] and the
-    * `spark.read.format("netcdf")` connector). */
-  private[sources] def fileGridRows(path: String, bytes: Array[Byte], varName: String)
-      : Iterator[(String, Long, Long, Long, Double, Double, Double, Double)] =
-    if (Hdf5Nc.isHdf5(bytes)) Hdf5Nc.gridRows(path, bytes, varName)
-    else gridRowsClassic(path, bytes, varName)
-
-  /** Classic CDF-1/2 branch of [[readGrid]]. */
-  private def gridRowsClassic(path: String, bytes: Array[Byte], varName: String)
-      : Iterator[(String, Long, Long, Long, Double, Double, Double, Double)] = {
-    val hdr = parseHeader(bytes)
-    val (v, (_, h, w), lo, hi, fill) = classicMeta(path, hdr, varName)
-    val data = readVar(bytes, hdr, v)
-    for (i <- data.indices.iterator) yield {
-      val ti = i / (h * w).toInt; val rem = i % (h * w).toInt
-      (path, ti.toLong, (rem / w).toLong, (rem % w).toLong, data(i), lo, hi, fill)
-    }
-  }
-
-  /** Header-only (t, h, w) + decode attrs for one variable of either
-    * `.nc` generation, NO payload read — the no-`raw` path of the
-    * netcdf connector's column pruning. */
-  private[sources] def gridShape(path: String, bytes: Array[Byte], varName: String)
-      : ((Long, Long, Long), Double, Double, Double) =
-    if (Hdf5Nc.isHdf5(bytes)) Hdf5Nc.gridShape(path, bytes, varName)
-    else {
-      val (_, thw, lo, hi, fill) = classicMeta(path, parseHeader(bytes), varName)
-      (thw, lo, hi, fill)
-    }
-
-  private def classicMeta(path: String, hdr: Header, varName: String)
-      : (Var, (Long, Long, Long), Double, Double, Double) = {
-    val v = hdr.vars.find(_.name == varName).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path has no variable '$varName'; has ${hdr.vars.map(_.name).mkString(", ")}"))
-    val shape = (if (v.isRecord) hdr.numRecs +: v.dims.tail.map(_.length)
-                 else v.dims.map(_.length)).map(_.toLong)
     val (t, h, w) = shape.reverse.padTo(3, 1L).take(3) match {
       case Seq(wd, ht, tm) => (tm, ht, wd)
     }
     require(shape.product == t * h * w,
-      s"${v.name}: rank-${shape.length} shape ${shape.mkString("x")} needs >3-d flattening")
-    val vr = v.attrs.get("valid_range").map { a =>
-      require(a.values.length >= 2,
-        s"$path ${v.name}: valid_range attr must carry >=2 numeric values, " +
-          s"got ${a.values.length} (nc_type ${a.ncType}" +
-          (if (a.ncType == NcChar) ", char-typed attrs have none" else "") + ")")
-      a.values
+      s"$path $name: rank-${shape.length} shape ${shape.mkString("x")} needs >3-d flattening")
+    val vr = attr("valid_range").map { vs =>
+      require(vs.length >= 2,
+        s"$path $name: valid_range attr must carry >=2 numeric values, got ${vs.length}")
+      vs
     }
-    val fill = v.attrs.get("_FillValue").map { a =>
-      require(a.values.nonEmpty,
-        s"$path ${v.name}: _FillValue attr must carry a numeric value, " +
-          s"got none (nc_type ${a.ncType})")
-      a.values(0)
+    val fill = attr("_FillValue").map { vs =>
+      require(vs.nonEmpty, s"$path $name: _FillValue attr must carry a numeric value, got none")
+      vs(0)
     }
-    (v, (t, h, w), vr.map(_(0)).getOrElse(Double.NaN),
-      vr.map(_(1)).getOrElse(Double.NaN), fill.getOrElse(Double.NaN))
+    Grid(t, h, w, vr.fold(Double.NaN)(_(0)), vr.fold(Double.NaN)(_(1)),
+      fill.getOrElse(Double.NaN), () =>
+        try decode()
+        catch {
+          case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(s"$path $name: ${e.getMessage}", e)
+        })
   }
 
   /** The reference's preprocess as one column (datasets.py:58-71 minus
@@ -350,37 +291,4 @@ object Netcdf {
     } else data.foreach(o.writeDouble)
     b.writeTo(out)
   }
-
-  /** Per-key NetCDF sink, the `.nc` twin of
-    * [[Sinks.writeHdf5Frames]]: one `.nc` file per `fileKey` holding
-    * that key's (T, h, w) grid, written with the driver's Hadoop
-    * configuration via a task-attempt temp path + rename. Format
-    * fidelity matches the read side's two generations: classic CDF-1
-    * by default, or NetCDF-4 (HDF5 container with chunked+deflate
-    * int16 + attr messages, [[Hdf5.writeGridNc]]) with
-    * `netcdf4 = true` — [[readGrid]] sniffs and decodes either
-    * identically. Same distribution shape: one hash repartition on
-    * the key, sorted within partitions, one file's array in memory
-    * at a time. */
-  def writeFrames(df: DataFrame, outDir: String, fileKey: String,
-                  tCol: String, yCol: String, xCol: String, valueCol: String,
-                  h: Int, w: Int, varName: String = "data",
-                  validRange: Option[(Double, Double)] = None,
-                  fillValue: Option[Double] = None,
-                  netcdf4: Boolean = false): Unit =
-    Sinks.writeKeyedFiles(df, outDir, fileKey, tCol, yCol, xCol, valueCol, ".nc") {
-      (out, tDim, cells) =>
-        val arr = Array.fill(tDim * h * w)(fillValue.getOrElse(0.0))
-        cells.foreach { case (t, y, x, v) =>
-          require(y >= 0 && y < h && x >= 0 && x < w,
-            s"coordinate ($t,$y,$x) outside (*, $h, $w)")
-          arr(t * h * w + y * w + x) = v
-        }
-        if (netcdf4)
-          Hdf5.writeGridNc(out, varName, tDim, h, w, arr,
-            validRange = validRange, fillValue = fillValue)
-        else
-          writeGrid3(out, varName, tDim, h, w, arr,
-            validRange = validRange, fillValue = fillValue)
-    }
 }

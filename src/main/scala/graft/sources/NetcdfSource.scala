@@ -20,7 +20,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for `.nc` files (both generations — classic
-  * CDF and NetCDF-4/HDF5, routed by magic like [[Netcdf.readGrid]]):
+  * CDF and NetCDF-4/HDF5, routed by magic in [[Netcdf.grid]]) and the
+  * uint16 `.h5` submission files (`option("var", "array")`):
   *
   * {{{
   * spark.read.format("netcdf")
@@ -28,9 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   .load("/data/region=EU/&#42;.nc")   // globs and directories both work
   * }}}
   *
-  * Same long-grid schema as [[Netcdf.readGrids]]. One input partition
-  * per file — at fleet scale the scan parallelizes over files exactly
-  * like `binaryFile`, with no driver-side decode. Column pruning is
+  * One long-grid row per cell and variable (`path`, `var`, `t`, `y`,
+  * `x`, `raw`, `valid_lo`, `valid_hi`, `fill_value`). One input
+  * partition per file — at fleet scale the scan parallelizes over
+  * files, with no driver-side decode. Column pruning is
   * pushed into the decoder: a projection that never touches `raw`
   * (e.g. catalogs over `path`/`var`/`t` or attr audits) skips the
   * payload decode (chunk walk + inflate) entirely and answers from
@@ -71,11 +73,11 @@ object NetcdfSource {
 
   private[sources] def pathsOf(options: Map[String, String]): Seq[String] = {
     val opts = options.map { case (k, v) => k.toLowerCase(java.util.Locale.ROOT) -> v }
-    // DSv2 passes .load(p) as "path"; .load(p1, p2) as JSON "paths"
+    // DSv2 passes .load(p) as "path"; .load(p1, p2) as a JSON array
+    // "paths" (Jackson-written, so a comma or quote in a name is escaped)
     val single = opts.get("path").toSeq
-    val multi = opts.get("paths").toSeq.flatMap { js =>
-      js.stripPrefix("[").stripSuffix("]").split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-    }
+    val multi = opts.get("paths").toSeq.flatMap(js =>
+      new com.fasterxml.jackson.databind.ObjectMapper().readValue(js, classOf[Array[String]]))
     val all = (single ++ multi).filter(_.nonEmpty)
     require(all.nonEmpty, "the netcdf source needs a load path")
     all
@@ -177,45 +179,47 @@ private class NetcdfPartitionReader(file: String, vars: Seq[String], fieldNames:
   // the projection, resolved once: output slot i holds Schema field cols(i)
   private val cols: Array[Int] = fieldNames.map(NetcdfSource.Schema.fieldIndex)
 
-  private def row(vnU: UTF8String, t: Long, y: Long, x: Long,
-                  raw: Double, lo: Double, hi: Double, f: Double): InternalRow = {
-    val vals = new Array[Any](cols.length)
-    var i = 0
-    while (i < cols.length) {
-      vals(i) = (cols(i): @switch) match {
-        case 0 => pathU
-        case 1 => vnU
-        case 2 => t
-        case 3 => y
-        case 4 => x
-        case 5 => raw
-        case 6 => lo
-        case 7 => hi
-        case 8 => f
-      }
-      i += 1
-    }
-    new GenericInternalRow(vals)
-  }
-
-  private val rows: Iterator[InternalRow] = vars.iterator.flatMap { vn =>
-    val vnU = UTF8String.fromString(vn)
-    if (needData)
-      Netcdf.fileGridRows(file, bytes, vn).map { case (_, t, y, x, raw, lo, hi, f) =>
-        row(vnU, t, y, x, raw, lo, hi, f)
-      }
-    else {
-      val ((t, h, w), lo, hi, f) = Netcdf.gridShape(file, bytes, vn)
-      for {
-        ti <- (0L until t).iterator
-        yi <- (0L until h).iterator
-        xi <- (0L until w).iterator
-      } yield row(vnU, ti, yi, xi, 0.0, lo, hi, f)
-    }
-  }
-
+  // cursor: variable `vars(v)` decoded as `grid` (+ `data` when `raw`
+  // is projected), cell `i` of its `n` next
+  private var v = -1
+  private var vnU: UTF8String = _
+  private var grid: Netcdf.Grid = _
+  private var data: Array[Double] = _
+  private var i, n = 0L
   private var current: InternalRow = _
-  override def next(): Boolean = { val has = rows.hasNext; if (has) current = rows.next(); has }
+
+  override def next(): Boolean = {
+    while (i == n && v + 1 < vars.length) {
+      v += 1
+      vnU = UTF8String.fromString(vars(v))
+      grid = Netcdf.grid(file, bytes, vars(v))
+      data = if (needData) grid.values() else null
+      i = 0L; n = grid.t * grid.h * grid.w
+    }
+    if (i == n) false
+    else {
+      val hw = grid.h * grid.w
+      val vals = new Array[Any](cols.length)
+      var c = 0
+      while (c < cols.length) {
+        vals(c) = (cols(c): @switch) match {
+          case 0 => pathU
+          case 1 => vnU
+          case 2 => i / hw
+          case 3 => i % hw / grid.w
+          case 4 => i % grid.w
+          case 5 => data(i.toInt)
+          case 6 => grid.lo
+          case 7 => grid.hi
+          case 8 => grid.fill
+        }
+        c += 1
+      }
+      current = new GenericInternalRow(vals)
+      i += 1
+      true
+    }
+  }
   override def get(): InternalRow = current
   override def close(): Unit = ()
 }

@@ -7,8 +7,8 @@ import org.apache.hadoop.conf.Configuration
   * overrides — s3a credentials, endpoints) into executor code via
   * Hadoop's own wire format. A conf built fresh on the executor
   * would see only classpath XML and silently drop those session
-  * settings. Shared by the HDF5/NetCDF sinks
-  * ([[Sinks.writeKeyedFiles]]) and the `netcdf` DSv2 reader. */
+  * settings. Shared by the HDF5 sink ([[Sinks.writeHdf5Frames]]) and
+  * the `netcdf` DSv2 reader. */
 private[sources] final class SerializableHadoopConf(@transient var value: Configuration)
     extends Serializable {
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {

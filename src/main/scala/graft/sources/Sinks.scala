@@ -38,30 +38,7 @@ object Sinks {
   def writeHdf5Frames(df: DataFrame, outDir: String, fileKey: String,
                       tCol: String, yCol: String, xCol: String, valueCol: String,
                       h: Int, w: Int, datasetName: String = "array",
-                      gzipLevel: Int = 9): Unit =
-    writeKeyedFiles(df, outDir, fileKey, tCol, yCol, xCol, valueCol, ".h5") {
-      (out, tDim, cells) =>
-        val arr = new Array[Short](tDim * h * w)
-        cells.foreach { case (t, y, x, v) =>
-          require(y >= 0 && y < h && x >= 0 && x < w,
-            s"coordinate ($t,$y,$x) outside (*, $h, $w)")
-          require(v >= 0 && v <= 0xFFFF && v == v.toInt.toDouble,
-            s"value $v outside uint16")
-          arr(t * h * w + y * w + x) = v.toInt.toShort
-        }
-        Hdf5.writeUint16(out, datasetName, tDim, h, w, arr, gzipLevel)
-    }
-
-  /** Shared per-key file-writing machinery behind [[writeHdf5Frames]]
-    * and [[Netcdf.writeFrames]]: hash-repartition on the file key,
-    * sort within partitions, stream each key's cells into `writeOne`
-    * (receiving T = max t + 1 and the (t, y, x, value) cells), with
-    * the driver's Hadoop configuration and temp-path + rename
-    * atomicity. Peak memory per task = one file's cells. */
-  private[sources] def writeKeyedFiles(
-      df: DataFrame, outDir: String, fileKey: String,
-      tCol: String, yCol: String, xCol: String, valueCol: String, ext: String)(
-      writeOne: (java.io.OutputStream, Int, Seq[(Int, Int, Int, Double)]) => Unit): Unit = {
+                      gzipLevel: Int = 9): Unit = {
     import org.apache.hadoop.fs.Path
     val confSer = new SerializableHadoopConf(
       df.sparkSession.sparkContext.hadoopConfiguration)
@@ -79,13 +56,21 @@ object Sinks {
         def flush(): Unit = if (key != null && buf.nonEmpty) {
           val tDim = buf.iterator.map(_._1).max + 1
           require(buf.forall(_._1 >= 0), s"negative t index for key $key")
-          val dest = new Path(outDir, s"$key$ext")
-          val tmp = new Path(outDir, s"_tmp-$attempt-$key$ext")
+          val dest = new Path(outDir, s"$key.h5")
+          val tmp = new Path(outDir, s"_tmp-$attempt-$key.h5")
           val fs = dest.getFileSystem(conf)
           val out = fs.create(tmp, true)
           var ok = false
           try {
-            writeOne(out, tDim, buf)
+            val arr = new Array[Short](tDim * h * w)
+            buf.foreach { case (t, y, x, v) =>
+              require(y >= 0 && y < h && x >= 0 && x < w,
+                s"coordinate ($t,$y,$x) outside (*, $h, $w)")
+              require(v >= 0 && v <= 0xFFFF && v == v.toInt.toDouble,
+                s"value $v outside uint16")
+              arr(t * h * w + y * w + x) = v.toInt.toShort
+            }
+            Hdf5.writeUint16(out, datasetName, tDim, h, w, arr, gzipLevel)
             ok = true
           } finally {
             out.close()

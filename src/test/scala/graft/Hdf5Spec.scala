@@ -263,7 +263,7 @@ class Hdf5Spec extends AnyFunSuite {
     intercept[IllegalArgumentException](Hdf5.readUint16(Array.fill[Byte](128)(0x41)))
   }
 
-  test("Hdf5.readGrid: sink output round-trips through the Spark read path") {
+  test("sink output round-trips through the Spark read path") {
     val spark = TestSpark.spark
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("h5read").toFile
@@ -274,15 +274,17 @@ class Hdf5Spec extends AnyFunSuite {
       ).toDF("k", "t", "y", "x", "v")
       graft.sources.Sinks.writeHdf5Frames(df, dir.getAbsolutePath,
         "k", "t", "y", "x", "v", h = 2, w = 2)
-      val back = Hdf5.readGrid(spark, dir.getAbsolutePath + "/*.h5")
+      val back = spark.read.format("netcdf").option("var", "array")
+        .load(dir.getAbsolutePath + "/*.h5")
+        .select("path", "t", "y", "x", "raw")
         .collect()
         .map(r => (r.getString(0).split('/').last, r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4)))
+          r.getLong(3), r.getDouble(4)))
       // every written cell comes back with its uint16 value; absences are 0
       val m = back.map(x => (x._1, x._2, x._3, x._4) -> x._5).toMap
-      assert(m(("a.h5", 0L, 1L, 1L)) == 65535L, "uint16 max survives the read path")
-      assert(m(("a.h5", 0L, 0L, 0L)) == 7L && m(("b.h5", 1L, 1L, 1L)) == 2L)
-      assert(m(("b.h5", 0L, 1L, 1L)) == 0L, "absent cell reads as fill 0")
+      assert(m(("a.h5", 0L, 1L, 1L)) == 65535.0, "uint16 max survives the read path")
+      assert(m(("a.h5", 0L, 0L, 0L)) == 7.0 && m(("b.h5", 1L, 1L, 1L)) == 2.0)
+      assert(m(("b.h5", 0L, 1L, 1L)) == 0.0, "absent cell reads as fill 0")
       assert(back.length == 4 + 8, "a: 1x2x2, b: 2x2x2 dense grids")
     } finally {
       dir.listFiles().foreach(_.delete()); dir.delete()

@@ -142,7 +142,7 @@ class SourcesSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_nc")
     java.nio.file.Files.write(dir.resolve("temp_20201106T120000Z.nc"), fix1)
     try {
-      val grid = sources.Netcdf.readGrid(spark, s"$dir/*.nc", "temperature")
+      val grid = spark.read.format("netcdf").option("var", "temperature").load(s"$dir/*.nc")
         .withColumn("value", sources.Netcdf.decodedValue)
       val rows = grid.orderBy("t", "y", "x").collect()
       assert(rows.length == 12)
@@ -165,7 +165,7 @@ class SourcesSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_nc2")
     java.nio.file.Files.write(dir.resolve("rr.nc"), fix2)
     try {
-      val got = sources.Netcdf.readGrid(spark, s"$dir/*.nc", "rr")
+      val got = spark.read.format("netcdf").option("var", "rr").load(s"$dir/*.nc")
         .orderBy("t", "y", "x").collect()
       assert(got.length == 12)
       got.zipWithIndex.foreach { case (r, i) =>
@@ -174,7 +174,7 @@ class SourcesSpec extends AnyFunSuite {
       }
       // no valid_range/_FillValue attrs -> decodedValue passes raw through
       import org.apache.spark.sql.functions._
-      val passthrough = sources.Netcdf.readGrid(spark, s"$dir/*.nc", "rr")
+      val passthrough = spark.read.format("netcdf").option("var", "rr").load(s"$dir/*.nc")
         .withColumn("value", sources.Netcdf.decodedValue)
         .where(col("value") =!= col("raw")).count()
       assert(passthrough == 0)
@@ -207,34 +207,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(v.attrs("valid_range").values.toSeq == Seq(-2.0, 6.0))
     assert(v.attrs("_FillValue").values.toSeq == Seq(-999.0))
     assert(sources.Netcdf.readVar(b.toByteArray, hdr, v).sameElements(vals))
-  }
-
-  test("NetCDF per-key sink: one parseable .nc per key, absent cells take the fill value") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ncsink")
-    try {
-      val df = Seq(
-        ("a", 0, 0, 0, 7.0), ("a", 0, 0, 1, 8.0), ("a", 0, 1, 0, 9.0), ("a", 0, 1, 1, 10.0),
-        ("b", 0, 0, 0, 1.0), ("b", 1, 1, 1, 2.0)
-      ).toDF("k", "t", "y", "x", "v")
-      sources.Netcdf.writeFrames(df, dir.toString, "k", "t", "y", "x", "v",
-        h = 2, w = 2, varName = "rr", validRange = Some((0.0, 100.0)),
-        fillValue = Some(-1.0))
-      val grid = sources.Netcdf.readGrid(spark, s"$dir/*.nc", "rr")
-      val back = grid.orderBy("path", "t", "y", "x").collect()
-      assert(back.length == 4 + 8, s"a: 1x2x2 cells + b: 2x2x2 cells, got ${back.length}")
-      val bCells = back.filter(_.getAs[String]("path").endsWith("b.nc"))
-        .map(r => (r.getAs[Long]("t"), r.getAs[Long]("y"), r.getAs[Long]("x")) -> r.getAs[Double]("raw")).toMap
-      assert(bCells((0L, 0L, 0L)) == 1.0 && bCells((1L, 1L, 1L)) == 2.0)
-      assert(bCells((0L, 1L, 1L)) == -1.0, "absent cell takes the declared fill value")
-      // and the fill decodes to NULL downstream, like the reference's mask
-      val nulls = grid.withColumn("value", sources.Netcdf.decodedValue)
-        .where(col("value").isNull).count()
-      assert(nulls == 6, s"6 absent cells in b.nc must decode to NULL, got $nulls")
-    } finally {
-      dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
-    }
   }
 
   test("NetCDF reader is loud on garbage: bad magic and unknown variable throw") {
@@ -482,9 +454,9 @@ class SourcesSpec extends AnyFunSuite {
     java.nio.file.Files.write(dirH.resolve("temp.nc"), nc4fix1)
     try {
       def grid(dir: java.nio.file.Path): Seq[Seq[Any]] =
-        sources.Netcdf.readGrid(spark, s"$dir/*.nc", "temperature")
+        spark.read.format("netcdf").option("var", "temperature").load(s"$dir/*.nc")
           .withColumn("value", sources.Netcdf.decodedValue)
-          .drop("path").orderBy("t", "y", "x")
+          .drop("path", "var").orderBy("t", "y", "x")
           .collect().toSeq.map(_.toSeq)
       val classic = grid(dirC); val h5 = grid(dirH)
       assert(h5.length == 12)
@@ -500,8 +472,8 @@ class SourcesSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_nc_static")
     java.nio.file.Files.write(dir.resolve("static.nc"), fix3)
     try {
-      val rows = sources.Netcdf.readGrids(spark, s"$dir/*.nc", Seq("latitude", "elevation"))
-        .orderBy("var", "y", "x").collect()
+      val rows = spark.read.format("netcdf").option("vars", "latitude,elevation")
+        .load(s"$dir/*.nc").orderBy("var", "y", "x").collect()
       assert(rows.length == 12)
       val lat = rows.filter(_.getString(1) == "latitude").map(_.getDouble(5)).toSeq
       assert(lat == Seq(60.1f, 60.2f, 60.3f, 59.1f, 59.2f, 59.3f).map(_.toDouble))
@@ -514,20 +486,22 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
-  test("spark.read.format(netcdf): DSv2 connector matches readGrids; pruning skips payload decode") {
+  test("format(netcdf): multi-var rows decode in place; pruning skips payload decode") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_nc_dsv2")
     java.nio.file.Files.write(dir.resolve("static.nc"), fix3)
     java.nio.file.Files.write(dir.resolve("temp.nc"), nc4fix1) // HDF5-container generation
     try {
-      // multi-var over the classic file: identical rows to readGrids
-      // string-compare: the attr columns legitimately carry NaN, and
-      // NaN != NaN would fail element equality on identical rows
+      // multi-var over the classic file: every cell in place (the raw
+      // values are pinned by the case above), absent attrs as NaN
       val viaFmt = spark.read.format("netcdf").option("vars", "latitude,elevation")
-        .load(s"$dir/static.nc").orderBy("var", "y", "x").collect().map(_.toSeq.toString)
-      val viaFn = sources.Netcdf.readGrids(spark, s"$dir/static.nc",
-        Seq("latitude", "elevation")).orderBy("var", "y", "x").collect().map(_.toSeq.toString)
-      assert(viaFmt.length == 12 && viaFmt.toSeq == viaFn.toSeq)
+        .load(s"$dir/static.nc").orderBy("var", "y", "x").collect()
+      assert(viaFmt.length == 12)
+      assert(viaFmt.map(r => (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq ==
+        Seq("elevation", "latitude").flatMap(v => for (y <- 0L to 1L; x <- 0L to 2L) yield (v, 0L, y, x)))
+      assert(viaFmt.forall(r => r.getDouble(6).isNaN && r.getDouble(7).isNaN))
+      assert(viaFmt.map(_.getDouble(8)).take(6).forall(_ == -32767.0) &&
+        viaFmt.map(_.getDouble(8)).drop(6).forall(_.isNaN))
       // glob across BOTH .nc generations in one load
       val both = spark.read.format("netcdf").option("var", "temperature")
         .load(s"$dir/temp.nc")
@@ -543,6 +517,37 @@ class SourcesSpec extends AnyFunSuite {
       val e = intercept[Exception](
         spark.read.format("netcdf").load(s"$dir/static.nc").collect())
       assert(e.getMessage.contains("vars"), e.getMessage)
+    } finally {
+      dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
+    }
+  }
+
+  test("format(netcdf): a two-path load keeps a file name that holds a comma") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nc_paths")
+    Seq("a,b.nc", "c.nc").foreach(n => java.nio.file.Files.write(dir.resolve(n), fix3))
+    try {
+      val rows = spark.read.format("netcdf").option("var", "elevation")
+        .load(s"$dir/a,b.nc", s"$dir/c.nc").select("path", "raw").collect()
+      assert(rows.length == 12, rows.length)
+      assert(rows.map(_.getString(0).split('/').last).toSet == Set("a,b.nc", "c.nc"))
+    } finally {
+      dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
+    }
+  }
+
+  test("format(netcdf): a payload cut short fails naming the file; header-only still reads") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nc_cut")
+    // fix1 up to the end of its header: the 12 NC_SHORT cells are gone
+    java.nio.file.Files.write(dir.resolve("cut.nc"), fix1.take(fix1.length - 24))
+    try {
+      def load() = spark.read.format("netcdf").option("var", "temperature").load(s"$dir/cut.nc")
+      val header = load().select("var", "t", "y", "x", "fill_value").collect()
+      assert(header.length == 12 && header.forall(_.getDouble(4) == -1.0))
+      val e = intercept[Exception](load().select("t", "raw").collect())
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(m => m.contains(s"$dir/cut.nc") && m.contains("temperature")),
+        s"expected the file and variable in the error, got: ${msgs(e).mkString(" | ")}")
     } finally {
       dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
     }
@@ -743,7 +748,7 @@ class SourcesSpec extends AnyFunSuite {
       val df = Seq((Some("a"), 0, 0, 0, 1.0), (Option.empty[String], 0, 0, 1, 2.0))
         .toDF("k", "t", "y", "x", "v")
       val e = intercept[Exception] {
-        sources.Netcdf.writeFrames(df, dir.toString, "k", "t", "y", "x", "v", h = 1, w = 2)
+        sources.Sinks.writeHdf5Frames(df, dir.toString, "k", "t", "y", "x", "v", h = 1, w = 2)
       }
       // the require surfaces wrapped in SparkException; the root message travels
       def msgs(t: Throwable): Seq[String] =
@@ -758,7 +763,7 @@ class SourcesSpec extends AnyFunSuite {
   test("NetCDF-4 writer: written HDF5-container .nc re-reads cell-for-cell equal to its CDF-1 twin") {
     // write-side format symmetry (round-11 verdict item 8): the SAME
     // grid + attrs through both generations' writers, decoded by the
-    // ONE readGrid path — every cell, coordinate and decode attr must
+    // ONE format("netcdf") path — every cell, coordinate and decode attr must
     // agree; the HDF5 twin must parse as a REAL chunked+deflate int16
     // dataset with float64 attr messages, not some private shape
     val t = 3; val h = 4; val w = 5
@@ -779,13 +784,13 @@ class SourcesSpec extends AnyFunSuite {
       "netCDF-4 files are chunked+deflate")
     assert(ds.attrs("valid_range").values.toSeq == Seq(-200.0, 800.0))
     assert(ds.attrs("_FillValue").values.toSeq == Seq(-999.0))
-    // one readGrid path, two generations, identical rows
+    // one read path, two generations, identical rows
     val dir = java.nio.file.Files.createTempDirectory("graft_nc4w")
     try {
       java.nio.file.Files.write(dir.resolve("classic.nc"), classic.toByteArray)
       java.nio.file.Files.write(dir.resolve("nc4.nc"), nc4.toByteArray)
       def cells(f: String) =
-        sources.Netcdf.readGrid(spark, s"$dir/$f", "rr")
+        spark.read.format("netcdf").option("var", "rr").load(s"$dir/$f")
           .collect().map(r => (r.getAs[Long]("t"), r.getAs[Long]("y"), r.getAs[Long]("x")) ->
             (r.getAs[Double]("raw"), r.getAs[Double]("valid_lo"),
               r.getAs[Double]("valid_hi"), r.getAs[Double]("fill_value"))).toMap
@@ -794,21 +799,6 @@ class SourcesSpec extends AnyFunSuite {
         "HDF5-container .nc must decode cell-for-cell equal to its CDF-1 twin")
     } finally {
       dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
-    }
-    // the per-key sink writes the same container when asked
-    import spark.implicits._
-    val sdir = java.nio.file.Files.createTempDirectory("graft_nc4sink")
-    try {
-      val df = Seq(("a", 0, 0, 0, 7.0), ("a", 0, 0, 1, 8.0)).toDF("k", "t", "y", "x", "v")
-      sources.Netcdf.writeFrames(df, sdir.toString, "k", "t", "y", "x", "v",
-        h = 1, w = 2, varName = "rr", fillValue = Some(-1.0), netcdf4 = true)
-      val bytes = java.nio.file.Files.readAllBytes(sdir.resolve("a.nc"))
-      assert(sources.Hdf5Nc.isHdf5(bytes), "netcdf4=true sink must emit HDF5 containers")
-      val back = sources.Netcdf.readGrid(spark, s"$sdir/*.nc", "rr")
-        .orderBy("t", "y", "x").collect().map(_.getAs[Double]("raw")).toSeq
-      assert(back == Seq(7.0, 8.0))
-    } finally {
-      sdir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(sdir)
     }
   }
 }
