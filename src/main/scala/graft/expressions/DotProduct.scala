@@ -119,11 +119,14 @@ private[expressions] object NumericArray {
   }
 }
 
-/** Session extension registering the engine's native expressions —
-  * enable with `spark.sql.extensions=graft.expressions.GraftExtensions`
+/** Session extension registering the engine's native expressions and
+  * the `netcdf` source's once-per-file path expressions
+  * ([[graft.sources.HoistPathExprs]]) — enable with
+  * `spark.sql.extensions=graft.expressions.GraftExtensions`
   * (Tables.conf does this for every engine session). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPreCBORule(_ => graft.sources.HoistPathExprs)
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),

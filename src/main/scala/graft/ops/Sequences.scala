@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * §2.1 S4) — the reference's most load-bearing computation
   * (weather4cast/datasets.py:15-47 gates everything else).
   *
-  * Scale notes: every operator here is a single window pass partitioned
-  * by the series key (region/user). On a cluster that is one hash
+  * Scale notes: every operator here is a single keyed pass (a window,
+  * or for [[validStarts]] a grouped aggregate) partitioned by the
+  * series key (region/user). On a cluster that is one hash
   * shuffle on the key and then purely local sorted scans — no
   * self-joins, no N² blowup, skew bounded by the hottest single key.
   */
@@ -17,7 +18,7 @@ object Sequences {
 
   /** Convert an (irregular) timestamp column to a dense integer bucket
     * id at `stepSeconds` cadence: `floor(epoch_seconds / step)`. The
-    * window operators below ([[validStarts]], [[assemble]]) do integer
+    * sequence operators below ([[validStarts]], [[assemble]]) do integer
     * arithmetic on bucket ids; calling them on a raw TimestampType
     * column would silently do second-granularity math. */
   def tsBucket(ts: Column, stepSeconds: Long): Column =
@@ -26,22 +27,21 @@ object Sequences {
   /** P5/W1/W2: valid sequence starts. A bucket b is a valid start iff
     * buckets b+1 .. b+(seqLen-1) all exist for the same key
     * (datasets.py:39-47, on a fixed `interval` cadence). Implemented as
-    * one ordered window with `lead`: since buckets are distinct and
-    * sorted, bucket b+k exists for all k < L iff lead(b, L-1) == b+L-1.
+    * one grouped aggregate: each key's distinct buckets are collected
+    * and sorted, and since they are distinct and sorted, bucket b+k
+    * exists for all k < L iff the element L-1 places after b equals
+    * b+L-1. `collect_set` combines map-side, so the single key shuffle
+    * carries at most one row per (key, map task), not one per input
+    * row; null buckets never start or continue a sequence.
     */
   def validStarts(buckets: DataFrame, key: String, bucket: String, seqLen: Int): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(bucket)
+    require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
+    val bs = col("_bs")
     buckets
-      .select(col(key), col(bucket))
-      // one shuffle, not two: hash by the series key alone — the
-      // (key, bucket) distinct's ClusteredDistribution is satisfied by
-      // the key-only partitioning (a group never spans partitions),
-      // and the window then reuses the same exchange
-      .repartition(col(key))
-      .distinct()
-      .withColumn("lead_b", lead(col(bucket), seqLen - 1).over(w))
-      .where(col("lead_b") === col(bucket) + lit(seqLen - 1))
-      .select(col(key), col(bucket))
+      .groupBy(col(key))
+      .agg(array_sort(collect_set(col(bucket))).as("_bs"))
+      .select(col(key), explode(filter(bs,
+        (b, i) => try_element_at(bs, i + lit(seqLen)) === b + lit(seqLen - 1))).as(bucket))
   }
 
   /** W2: gap detection via lag — emit (key, gap_start, gap_end) for
@@ -105,6 +105,7 @@ object Sequences {
     */
   def assemble(starts: DataFrame, frames: DataFrame, key: String, bucket: String,
                seqLen: Int): DataFrame = {
+    require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
     val exploded = starts
       .select(col(key), col(bucket).as("t0"))
       .withColumn("step", explode(sequence(lit(0L), lit(seqLen.toLong - 1))))

@@ -51,11 +51,15 @@ object Sinks {
         val conf = confSer.value
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(tc => s"${tc.stageId()}-${tc.taskAttemptId()}").getOrElse("local")
+        // one file's cells, buffered column-wise in primitive arrays
+        // (grown by doubling) until the key changes
         var key: String = null
-        var buf = Vector.empty[(Int, Int, Int, Double)]
-        def flush(): Unit = if (key != null && buf.nonEmpty) {
-          val tDim = buf.iterator.map(_._1).max + 1
-          require(buf.forall(_._1 >= 0), s"negative t index for key $key")
+        var n = 0
+        var ts, ys, xs = new Array[Int](1024)
+        var vs = new Array[Double](1024)
+        def flush(): Unit = if (key != null && n > 0) {
+          val tDim = ts.view.take(n).max + 1
+          require(ts.view.take(n).forall(_ >= 0), s"negative t index for key $key")
           val dest = new Path(outDir, s"$key.h5")
           val tmp = new Path(outDir, s"_tmp-$attempt-$key.h5")
           val fs = dest.getFileSystem(conf)
@@ -63,12 +67,15 @@ object Sinks {
           var ok = false
           try {
             val arr = new Array[Short](tDim * h * w)
-            buf.foreach { case (t, y, x, v) =>
+            var c = 0
+            while (c < n) {
+              val t = ts(c); val y = ys(c); val x = xs(c); val v = vs(c)
               require(y >= 0 && y < h && x >= 0 && x < w,
                 s"coordinate ($t,$y,$x) outside (*, $h, $w)")
               require(v >= 0 && v <= 0xFFFF && v == v.toInt.toDouble,
                 s"value $v outside uint16")
               arr(t * h * w + y * w + x) = v.toInt.toShort
+              c += 1
             }
             Hdf5.writeUint16(out, datasetName, tDim, h, w, arr, gzipLevel)
             ok = true
@@ -80,7 +87,7 @@ object Sinks {
                 throw new java.io.IOException(s"rename $tmp -> $dest failed")
             } else fs.delete(tmp, false)
           }
-          buf = Vector.empty
+          n = 0
         }
         rows.foreach { r =>
           val k = r.getString(0)
@@ -88,7 +95,12 @@ object Sinks {
             s"null $fileKey value: every row must carry a non-null file key " +
               "(a null key has no destination file; filter or fill upstream)")
           if (k != key) { flush(); key = k }
-          buf :+= ((r.getInt(1), r.getInt(2), r.getInt(3), r.getDouble(4)))
+          if (n == ts.length) {
+            ts = java.util.Arrays.copyOf(ts, 2 * n); ys = java.util.Arrays.copyOf(ys, 2 * n)
+            xs = java.util.Arrays.copyOf(xs, 2 * n); vs = java.util.Arrays.copyOf(vs, 2 * n)
+          }
+          ts(n) = r.getInt(1); ys(n) = r.getInt(2); xs(n) = r.getInt(3); vs(n) = r.getDouble(4)
+          n += 1
         }
         flush()
       }

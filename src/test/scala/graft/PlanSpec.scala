@@ -36,7 +36,9 @@ class PlanSpec extends AnyFunSuite {
   test("p5: valid-starts runs on a single key shuffle") {
     val p = finalPlan("p5_valid_starts")
     assert("Exchange".r.findAllIn(p).length == 1,
-      "distinct + window must reuse one exchange:\n" + p.take(1200))
+      "the per-key bucket set must take one key exchange:\n" + p.take(1200))
+    assert(p.contains("partial_collect_set"),
+      "buckets must combine map-side before the exchange:\n" + p.take(1200))
   }
 
   test("a3: gram matrix is one shuffle-free pass + single-row merge") {

@@ -35,6 +35,20 @@ class SequencesSpec extends AnyFunSuite {
     assert(starts.length == 7)
   }
 
+  test("a sequence length below 1 is refused") {
+    val e1 = intercept[IllegalArgumentException](Sequences.validStarts(buckets, "k", "bkt", 0))
+    assert(e1.getMessage.contains("seqLen"))
+    intercept[IllegalArgumentException](Sequences.assemble(buckets, buckets, "k", "bkt", 0))
+  }
+
+  test("null buckets never start or continue a sequence; L=1 keeps every bucket") {
+    val withNull = Seq(("c", Some(0L)), ("c", None), ("c", Some(1L)), ("c", Some(3L)))
+      .toDF("k", "bkt")
+    assert(Sequences.validStarts(withNull, "k", "bkt", 2).collect().map(_.getLong(1)).toSeq == Seq(0L))
+    assert(Sequences.validStarts(withNull, "k", "bkt", 1).collect().map(_.getLong(1)).sorted.toSeq ==
+      Seq(0L, 1L, 3L))
+  }
+
   test("assemble gathers exactly L rows per start") {
     val frames = buckets.withColumn("v", $"bkt" * 10)
     val starts = Sequences.validStarts(buckets, "k", "bkt", 3)

@@ -637,6 +637,202 @@ class SourcesSpec extends AnyFunSuite {
     }
   }
 
+  // ---- the catalog layout: path expressions and split packing ------
+
+  /** 2 regions x 2 slots of `temperature` (t=1, y=2, x=3) in the
+    * reference layout `REGION/SUBSET/YYYYDDD/PRODUCT/S_NWC_…_{ts}Z.nc`,
+    * classic and NetCDF-4 alternating; cell i of (r, s) holds
+    * r*100 + s*10 + i. */
+  private def withLayoutCatalog(body: java.nio.file.Path => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory("graft_nc_layout")
+    for (r <- 1 to 2; s <- 0 to 1) {
+      val dir = root.resolve(s"R$r/training/2019100/CTTH")
+      java.nio.file.Files.createDirectories(dir)
+      val out = java.nio.file.Files.newOutputStream(
+        dir.resolve(f"S_NWC_CTTH_MSG4_Europe-VISIR_20190410T00${15 * s}%02d00Z.nc"))
+      val frame = Array.tabulate(6)(i => (r * 100 + s * 10 + i).toDouble)
+      try {
+        if ((r + s) % 2 == 0) sources.Netcdf.writeGrid3(out, "temperature", 1, 2, 3, frame)
+        else sources.Hdf5.writeGridNc(out, "temperature", 1, 2, 3, frame)
+      } finally out.close()
+    }
+    try body(root) finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+      }
+      rm(root.toFile)
+    }
+  }
+
+  // the weather benchmark's region and 15-minute bucket of a frame's path
+  private def regionOf(path: org.apache.spark.sql.Column) =
+    org.apache.spark.sql.functions.regexp_extract(path, "/R(\\d+)/", 1).cast("int")
+  private def bucketOf(path: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions._
+    ops.Sequences.tsBucket(
+      to_timestamp(regexp_extract(path, "_(\\d{8}T\\d{6})Z\\.nc$", 1), "yyyyMMdd'T'HHmmss"), 900)
+  }
+  private val bucket0 = java.time.LocalDate.of(2019, 4, 10)
+    .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond / 900
+
+  private def layoutFrames(root: java.nio.file.Path) = {
+    import org.apache.spark.sql.functions.col
+    spark.read.format("netcdf").option("var", "temperature").load(s"$root/*/*/*/CTTH/*.nc")
+      .select(regionOf(col("path")).as("region"), bucketOf(col("path")).as("bkt"),
+        col("y"), col("x"), col("raw"))
+  }
+
+  /** Physical nodes other than the netcdf scan that evaluate a regex or
+    * a timestamp parse. */
+  private def perCellPathWork(plan: org.apache.spark.sql.execution.SparkPlan) =
+    Aqe.collect(plan) {
+      case n if !n.isInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] &&
+          n.expressions.exists(_.exists {
+            case _: org.apache.spark.sql.catalyst.expressions.RegExpExtract |
+                 _: org.apache.spark.sql.catalyst.expressions.GetTimestamp => true
+            case _ => false
+          }) => n.nodeName
+    }
+
+  test("format(netcdf): path-only expressions run once per file, inside the scan") {
+    import org.apache.spark.sql.functions.col
+    withLayoutCatalog { root =>
+      val frames = layoutFrames(root)
+      val rows = frames.collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4))).toSet
+      val want = (for (r <- 1 to 2; s <- 0 to 1; i <- 0 until 6)
+        yield (r, bucket0 + s, i / 3L, i % 3L, (r * 100 + s * 10 + i).toDouble)).toSet
+      assert(rows == want)
+      val plan = frames.queryExecution.executedPlan
+      assert(perCellPathWork(plan).isEmpty, s"path expressions evaluated per cell:\n$plan")
+      val scan = netcdfScans(plan).head.scan
+      assert(!scan.readSchema().fieldNames.contains("path"), "path is read though nothing needs it")
+      val desc = scan.description()
+      assert(desc.contains("files=4") && desc.contains("PathExprs: [") &&
+        desc.contains("regexp_extract(path"), desc)
+      // the weather pass's starts + assembly: the inferred not-null
+      // filters of its join hoist too
+      val starts = ops.Sequences.validStarts(frames.select("region", "bkt"), "region", "bkt", 2)
+      val asm = ops.Sequences.assemble(starts, frames, "region", "bkt", 2)
+      val got = asm.select("region", "t0", "step", "y", "x", "raw").collect()
+      assert(got.length == 2 * 2 * 6, got.length)
+      assert(got.forall(r => r.getLong(1) == bucket0 &&
+        r.getDouble(5) == r.getInt(0) * 100 + r.getLong(2) * 10 + r.getLong(3) * 3 + r.getLong(4)))
+      val asmPlan = asm.queryExecution.executedPlan
+      assert(perCellPathWork(asmPlan).isEmpty, s"path expressions evaluated per cell:\n$asmPlan")
+    }
+  }
+
+  test("format(netcdf): only per-file expressions on every-row positions are hoisted") {
+    import org.apache.spark.sql.functions._
+    withLayoutCatalog { root =>
+      def load() = spark.read.format("netcdf").option("var", "temperature")
+        .load(s"$root/*/*/*/CTTH/*.nc")
+      def pathExprs(df: org.apache.spark.sql.DataFrame): String = {
+        df.collect()
+        netcdfScans(df.queryExecution.executedPlan).head.scan.description()
+          .split("PathExprs: ").drop(1).headOption.getOrElse("")
+      }
+      val region = regexp_extract(col("path"), "/R(\\d+)/", 1)
+      // nondeterministic: not hoisted whole
+      val mixed = pathExprs(load().select((length(col("path")) + rand(7)).as("m")))
+      assert(!mixed.contains("rand"), mixed)
+      // reads `var` too: only its path-only part is hoisted
+      val withVar = load().select(concat(region, col("var")).as("k"))
+      assert(withVar.collect().map(_.getString(0)).toSet == Set("1temperature", "2temperature"))
+      val wv = pathExprs(withVar)
+      assert(wv.contains("regexp_extract(path") && !wv.contains("concat"), wv)
+      // a lazy CASE branch is evaluated only where raw > 0: left in place
+      val lazyBranch = load().select(when(col("raw") > 0, region).as("r"))
+      assert(pathExprs(lazyBranch).isEmpty)
+      assert(lazyBranch.collect().map(_.getString(0)).toSet == Set("1", "2"))
+    }
+  }
+
+  test("format(netcdf): hoisted expressions keep exchange reuse and scan equality by value") {
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.functions._
+    withLayoutCatalog { root =>
+      def perRegion(key: org.apache.spark.sql.Column) =
+        spark.read.format("netcdf").option("var", "temperature").load(s"$root/*/*/*/CTTH/*.nc")
+          .select(key.as("k"), col("raw")).groupBy("k").agg(sum("raw").as("s"))
+      val twice = perRegion(regionOf(col("path"))).union(perRegion(regionOf(col("path"))))
+      val rows = twice.collect().map(r => (r.getInt(0), r.getDouble(1)))
+      val perRegionSum = (r: Int) => (0 to 1).flatMap(s => (0 until 6).map(i => r * 100 + s * 10 + i)).sum
+      assert(rows.sorted.toSeq == Seq(1, 1, 2, 2).map(r => (r, perRegionSum(r).toDouble)))
+      val plan = twice.queryExecution.executedPlan
+      assert(Aqe.collect(plan) { case r: ReusedExchangeExec => r }.nonEmpty,
+        s"no ReusedExchangeExec in the final plan:\n$plan")
+      // same read schema (one int path column), different expressions
+      def scanOf(df: org.apache.spark.sql.DataFrame) =
+        netcdfScans(df.queryExecution.executedPlan).head.scan
+      val byRegion = scanOf(perRegion(regionOf(col("path"))))
+      val byDay = scanOf(perRegion(regexp_extract(col("path"), "/(\\d{7})/", 1).cast("int")))
+      assert(byRegion.readSchema() == byDay.readSchema())
+      assert(byRegion != byDay, "scans with different path expressions must not compare equal")
+      assert(byRegion == scanOf(perRegion(regionOf(col("path")))))
+    }
+  }
+
+  /** The splits a load plans, as file-name lists. */
+  private def splitsOf(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    netcdfScans(df.queryExecution.executedPlan).head.scan.toBatch.planInputPartitions().toSeq
+      .map(_.asInstanceOf[sources.NetcdfInputPartition].files.map(_.split('/').last))
+
+  test("format(netcdf): small files share splits; each file is opened once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nc_splits")
+    val names = (0 until 13).map(i => f"f$i%02d.nc")
+    names.foreach(n => java.nio.file.Files.write(dir.resolve(n), fix3))
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val prior = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+      spark.conf.set("fs.file.impl.disable.cache", "true")
+      val df = spark.read.format("netcdf").option("vars", "latitude,elevation")
+        .load(s"$dir/*.nc").select("path", "var", "raw")
+      val before = names.map(n => CountingLocalFs.opensOf(s"$dir/$n"))
+      val rows = df.collect()
+      val opened = names.map(n => CountingLocalFs.opensOf(s"$dir/$n")).zip(before)
+        .map { case (a, b) => a - b }
+      assert(opened.forall(_ == 1), s"opens per file: $opened")
+      val splits = splitsOf(df)
+      assert(splits.length <= spark.sparkContext.defaultParallelism + 1, splits)
+      assert(splits.flatten.sorted == names)
+      assert(netcdfScans(df.queryExecution.executedPlan).head.scan.description()
+        .contains(s"files=13 splits=${splits.length}"))
+      val lat = Seq(60.1f, 60.2f, 60.3f, 59.1f, 59.2f, 59.3f).map(_.toDouble)
+      val elev = Seq(5.0, 12.0, -32767.0, 44.0, 180.0, 7.0)
+      val byFile = rows.groupBy(_.getString(0).split('/').last)
+      assert(byFile.keySet == names.toSet)
+      byFile.values.foreach { rs =>
+        assert(rs.filter(_.getString(1) == "latitude").map(_.getDouble(2)).toSeq.sorted == lat.sorted)
+        assert(rs.filter(_.getString(1) == "elevation").map(_.getDouble(2)).toSeq.sorted == elev.sorted)
+      }
+    } finally {
+      prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
+    }
+  }
+
+  test("format(netcdf): a payload cut short fails naming its file inside a shared split") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_nc_cut_split")
+    (0 until 13).foreach(i => java.nio.file.Files.write(dir.resolve(f"ok$i%02d.nc"), fix1))
+    java.nio.file.Files.write(dir.resolve("cut.nc"), fix1.take(fix1.length - 24))
+    try {
+      val df = spark.read.format("netcdf").option("var", "temperature").load(s"$dir/*.nc")
+        .select("t", "raw")
+      assert(splitsOf(df).find(_.contains("cut.nc")).exists(_.size > 1),
+        s"cut.nc does not share a split: ${splitsOf(df)}")
+      val e = intercept[Exception](df.collect())
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(m => m.contains(s"$dir/cut.nc") && m.contains("temperature")),
+        s"expected the file and variable in the error, got: ${msgs(e).mkString(" | ")}")
+    } finally {
+      dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("NetCDF-4 container (superblock v2, OHDR, chunked+shuffle+deflate): edge chunks clipped, attrs decoded") {
     val dss = sources.Hdf5Nc.parse(nc4fix2)
     assert(dss.map(_.path) == Seq("rr"))
@@ -803,15 +999,21 @@ class SourcesSpec extends AnyFunSuite {
   }
 }
 
-/** `file://` that counts its opens: installed through a session's
-  * `fs.file.impl`, it shows which reads honour the session's conf. */
+/** `file://` that counts its opens, in all and per file: installed
+  * through a session's `fs.file.impl`, it shows which reads honour the
+  * session's conf and how often each file is opened. */
 class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
   override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
     CountingLocalFs.opens.incrementAndGet()
+    CountingLocalFs.perFile.computeIfAbsent(f.toUri.getPath,
+      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
     super.open(f, bufferSize)
   }
 }
 
 object CountingLocalFs {
   val opens = new java.util.concurrent.atomic.AtomicInteger
+  private val perFile =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]
+  def opensOf(file: String): Int = Option(perFile.get(file)).fold(0)(_.get)
 }
