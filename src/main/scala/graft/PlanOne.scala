@@ -18,7 +18,7 @@ object PlanOne {
   private val Headline = Seq(
     "p1_projection",      // pushdown + pruning reach the scan
     "j1_broadcast_dim",   // dims broadcast, only the agg shuffles
-    "p5_valid_starts",    // distinct + window share one key shuffle
+    "p5_valid_starts",    // map-side collect_set, one key shuffle
     "a3_gram_matrix",     // shuffle-free partial+final single pass
     "a4_ridge_weights",   // chained-select algebra over the one-pass agg
     "o1_sort_topk",       // TakeOrderedAndProject, no global sort

@@ -111,19 +111,6 @@ object text {
     aggregate(vals, lit(0L), (acc, v) => pmod(acc * lit(31L) + v, lit(2147483647L)))
   }
 
-  /** k-word shingles as an array of strings: shingle i joins tokens
-    * [i, i+k). */
-  def shingles(t: Column, k: Int = 3): Column = {
-    val toks = tokens(t)
-    // sequence(0, n-k) is empty-safe: when n < k, sequence(0, negative)
-    // would error, so guard with a when().
-    val n = size(toks)
-    when(n < k, array().cast("array<string>")).otherwise(
-      transform(
-        sequence(lit(0), n - lit(k)),
-        i => concat_ws(" ", (0 until k).map(o => element_at(toks, i + lit(o + 1))): _*)))
-  }
-
   /** SimHash over 16 md5-hex-digit bits: for a token's md5 hex and bit
     * b, the b-th hex digit's high bit votes +1/-1; document bit b is
     * the sign of the vote sum. Takes the PRE-COMPUTED md5 hex (compute

@@ -76,23 +76,11 @@ object AnnIndex {
 
   /** The CURRENT codes path — flat `codes` until the first compact,
     * `codes_v<N>` after (the zero-window versioned layout; the
-    * version history IS the store's compact record — [[codesVersion]]
-    * reads it, [[readCodesVersion]] pins it). */
+    * version history IS the store's compact record —
+    * [[CompactSwap.currentVersion]] reads it, [[CompactSwap.readVersion]]
+    * pins it). */
   private def codesPath(spark: SparkSession, dir: String): String =
     CompactSwap.currentTablePath(spark, dir, "codes")
-
-  /** The index's current codes version (0 = never compacted), None =
-    * never built — the reproducibility handle a training run records
-    * alongside its outputs. */
-  def codesVersion(spark: SparkSession, dir: String): Option[Int] =
-    CompactSwap.currentVersion(spark, dir, "codes")
-
-  /** The codes table exactly as compact `v` left it — byte-stable
-    * under later appends/compacts until the version GC retires it
-    * ([[CompactSwap.readVersion]]'s keep policy): "train against the
-    * store as of compact N", reproducibly. */
-  def readCodesVersion(spark: SparkSession, dir: String, v: Int): DataFrame =
-    CompactSwap.readVersion(spark, dir, "codes", v)
 
   /** [[build]] in an OPQ-ROTATED space: corpus vectors rotate by the
     * orthogonal `r` (scan-stage graft_matvec — zero exchanges added)
@@ -101,8 +89,8 @@ object AnnIndex {
     * exact neighbor set is unchanged — what improves is the PQ
     * approximation (codewords live in the refined basis, lower
     * quantization error → better ADC ranking). Serve through
-    * [[searchRotated]]/[[appendRotated]], which read `rot` and
-    * rotate queries/deltas the same way. */
+    * [[searchRotated]], which reads `rot` and rotates queries the
+    * same way. */
   def buildRotated(emb: DataFrame, dir: String, r: Array[Array[Double]],
                    k: Int = 8, p: Pq.Params = Pq.Params(),
                    cells: Option[DataFrame] = None): Unit = {
@@ -142,18 +130,6 @@ object AnnIndex {
       buildRotated(emb, dir, mkR, k, p)
     }
 
-  /** [[append]] for a rotated index: the delta rotates through the
-    * persisted `rot` row before encoding against the frozen
-    * quantizers — appended == built-in-one-shot still holds. */
-  def appendRotated(spark: SparkSession, newEmb: DataFrame, dir: String,
-                    p: Pq.Params = Pq.Params()): Unit = {
-    val rot = spark.read.parquet(s"$dir/rot")
-    val rotated = newEmb.crossJoin(broadcast(rot))
-      .select(col("vec_id"),
-        call_function("graft_matvec", col("rflat"), col("ve")).as("ve"))
-    append(spark, rotated, dir, p)
-  }
-
   /** INCREMENTAL maintenance: PQ-encode `newEmb` (vec_id, ve) against
     * the index's PERSISTED centroids and codebook — both read from
     * the one-row meta table, nothing re-derived — and append the
@@ -174,26 +150,6 @@ object AnnIndex {
         zip_with(col("ve"), col("cv"), (x, c) => x - c).as("ve"))
     CompactSwap.appendTo(Pq.encoded(assigned, meta.select(col("cbs")), p, extra = Seq("cell")),
       codesPath(spark, dir), tag, "cell")
-  }
-
-  /** Streaming INGEST for the persisted index — the encode-on-arrival
-    * half of the streaming story ([[searchStream]] is the query
-    * half): every micro-batch of new vectors (vec_id, ve) appends via
-    * [[append]], so the index absorbs a live feed with delta-sized
-    * scans against the frozen quantizers, exactly once per batch
-    * ([[Stores.oncePerBatch]]). */
-  def appendStream(spark: SparkSession, vectors: DataFrame, dir: String,
-                   p: Pq.Params = Pq.Params(),
-                   checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Stores.oncePerBatch(batch, batchId, dir, "appended", checkpoint) { tag =>
-          append(spark, batch, dir, p, tag = Some(tag))
-        }
-        ()
-      }
-      .start()
   }
 
   /** TAKEDOWN — the fifth index verb (build → search → append →
@@ -321,7 +277,7 @@ object AnnIndex {
     * list files at stream start) keeps serving ACROSS the compact
     * (spec-pinned in AnnStreamSpec). The previous version is GC'd
     * one compact later — a stream may survive `keep` (default 1)
-    * compacts before needing a restart, and [[readCodesVersion]]
+    * compacts before needing a restart, and [[CompactSwap.readVersion]]
     * pins any retained version for reproducible reads. Crash states
     * self-heal: an unsentineled next-version dir is purged by the
     * next call; late appends are COPIED across so no crash loses
@@ -448,25 +404,6 @@ object AnnIndex {
     * the cells its queries touch via the join itself. At 100 TB you
     * bucket the codes table by cell so the join co-locates, or batch
     * queries by probe cell upstream. */
-  /** [[searchStream]] against a ROTATED index: each streaming query
-    * rotates through the persisted one-row `rot` table on the way in
-    * — a STATELESS stream-static broadcast join plus one scan-stage
-    * matvec, then the standard probe/ADC/window path. Emissions are
-    * bit-identical to batch [[searchRotated]] per query (the
-    * searchStream parity contract carries over unchanged). */
-  def searchRotatedStream(spark: SparkSession, queries: DataFrame, dir: String,
-                          nprobe: Int = 1, limit: Int = 10,
-                          p: Pq.Params = Pq.Params(),
-                          delay: String = "10 seconds",
-                          windowLen: String = "10 seconds"): DataFrame = {
-    val rot = spark.read.parquet(s"$dir/rot").withColumn("_r1", lit(1))
-    val rotated = queries.withColumn("_r1", lit(1))
-      .join(broadcast(rot), "_r1")
-      .withColumn("qv", call_function("graft_matvec", col("rflat"), col("qv")))
-      .drop("rflat", "_r1")
-    searchStream(spark, rotated, dir, nprobe, limit, p, delay, windowLen)
-  }
-
   def searchStream(spark: SparkSession, queries: DataFrame, dir: String,
                    nprobe: Int = 1, limit: Int = 10,
                    p: Pq.Params = Pq.Params(),

@@ -744,54 +744,6 @@ object Bpe {
           x => x.getField("token_ids"))).as("token_ids"))
   }
 
-  /** [[encodeIds]] against the persisted dictionary — the id-surface
-    * serving path (symmetry with [[encodeIndexed]] for counts). */
-  def encodeIdsIndexed(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                       textCol: Column, idCol: Column, dir: String,
-                       maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame =
-    encodeIds(docs, textCol, idCol, spark.read.parquet(s"$dir/dict"),
-      maxBroadcastRows, knownDictRows = Some(parquetRowCount(spark, s"$dir/dict")))
-
-  /** Streaming token-ID encode against the persisted dictionary —
-    * the id-surface twin of [[encodeStream]]: a live ingest feed
-    * tokenized to per-(doc, event-time-window) ordered id arrays.
-    * Both joins are STATELESS stream-static (the size-gated dict
-    * side + the always-broadcast vocab); the only state is the
-    * per-open-window collect_list of (wpos, tpos, tok_id) int
-    * triples — bounded by the window's own token volume and flushed
-    * by the watermark. Emissions are row-identical to batch
-    * [[encodeIds]] per doc when a doc's words share one window
-    * (`wstart` stays in the output — the [[encodeStream]] parity
-    * contract). */
-  def encodeIdsStream(spark: org.apache.spark.sql.SparkSession, docs: DataFrame,
-                      textCol: Column, idCol: Column, tsCol: Column, dir: String,
-                      delay: String = "10 seconds",
-                      windowLen: String = "10 seconds",
-                      maxBroadcastRows: Long = DefaultMaxBroadcastRows): DataFrame = {
-    val dict = spark.read.parquet(s"$dir/dict")
-    val segToks = dict.select(col("w"), split(col("seq"), " ").as("toks"))
-    // footer-metadata gate (parquetRowCount) — streaming serving pays
-    // zero gate jobs, like the batch indexed paths
-    val rhs = if (parquetRowCount(spark, s"$dir/dict") <= maxBroadcastRows)
-                broadcast(segToks)
-              else segToks.hint("shuffle_hash")
-    docs.select(idCol.as("doc_id"), tsCol.as("ts"),
-        posexplode(split(textCol, " ")).as(Seq("wpos", "w")))
-      .withWatermark("ts", delay)
-      .join(rhs, Seq("w"), "left")
-      .select(col("doc_id"), col("ts"), col("wpos"),
-        posexplode(coalesce(col("toks"), split(col("w"), "")))
-          .as(Seq("tpos", "tok")))
-      .join(broadcast(vocab(dict)), Seq("tok"), "left")
-      .groupBy(col("doc_id"), window(col("ts"), windowLen))
-      .agg(transform(
-        array_sort(collect_list(struct(col("wpos"), col("tpos"),
-          coalesce(col("tok_id"), lit(-1)).as("tok_id")))),
-        x => x.getField("tok_id")).as("token_ids"))
-      .select(col("doc_id"), col("token_ids"),
-        col("window.start").as("wstart"))
-  }
-
   /** Streaming ENCODE against the persisted dictionary — tokenizing
     * a live ingest feed with the trained artifact. The document
     * stream explodes to words in the scan stage and stream-static-

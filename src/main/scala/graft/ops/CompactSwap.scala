@@ -678,12 +678,6 @@ object CompactSwap {
     spark.read.parquet(files: _*)
   }
 
-  /** Whether pin `pin` exists under `dir`. */
-  def hasPin(spark: SparkSession, dir: String, pin: String): Boolean = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(pinPath(dir, pin))
-  }
-
   /** Drop pin `pin` — called after the batch's idempotency marker
     * commits (an orphaned pin is harmless: bytes of file names). */
   def dropPin(spark: SparkSession, dir: String, pin: String): Unit = {

@@ -72,12 +72,6 @@ object DedupIndex {
   private def tablePath(spark: SparkSession, dir: String, t: String): String =
     CompactSwap.currentTablePath(spark, dir, t)
 
-  /** The store's current compact version per table (0 = never
-    * compacted; the two tables promote together under one
-    * `_compacting` marker, so they normally agree). */
-  def storeVersion(spark: SparkSession, dir: String, table: String = "fp"): Option[Int] =
-    CompactSwap.currentVersion(spark, dir, table)
-
   /** A store table exactly as compact `v` left it — byte-stable under
     * later appends/compacts until the version GC retires it: pin
     * "the dedup store as of compact N" for a reproducible run. */

@@ -9,11 +9,13 @@ import org.apache.spark.sql.functions._
   * fold, so it is not a window function: the two legitimate Spark
   * forms are
   *  1. typed `groupByKey(...).mapGroups` (sort each group, fold) —
-  *     arbitrary Scala state, one shuffle on the key;
+  *     arbitrary Scala state, one shuffle on the key
+  *     ([[foldTypedConvGrid]], the frame-state recurrence);
   *  2. `aggregate()` higher-order function over a
   *     `sort_array(collect_list(struct(...)))` — stays in Catalyst,
-  *     SQL-oracle-expressible.
-  * Both are provided; a ScalaTest asserts they agree.
+  *     SQL-oracle-expressible ([[foldAgg]], [[foldAggConvGrid]]).
+  * FoldStreamSpec checks [[foldAgg]] against a plain-Scala replay of
+  * [[step]]; RefScaleSpec pins the two ConvGRU forms equal.
   *
   * tanh is expanded as `(exp(2x)-1)/(exp(2x)+1)` so an external SQL
   * engine without a tanh builtin evaluates the identical expression.
@@ -24,7 +26,7 @@ object Fold {
   val InScale = 100.0
   val HWeight = 0.5
 
-  /** One GRU step on plain doubles (the mapGroups path). */
+  /** One GRU step on plain doubles (the streaming paths). */
   def step(h: Double, x: Double): Double = {
     val o = x / InScale + HWeight * h
     val t = (math.exp(2 * o) - 1) / (math.exp(2 * o) + 1)
@@ -258,25 +260,5 @@ object Fold {
             (key, h, n, false)
           }
       }
-  }
-
-  /** Form 1: typed mapGroups fold (sort in memory per group). */
-  def foldTyped(spark: SparkSession, events: DataFrame, key: String, ts: String,
-                ord2: String, v: String): DataFrame = {
-    import spark.implicits._
-    // micros-since-epoch as long: seconds-as-double * 1e6 stays within
-    // double's exact-integer range (~1.7e15 < 2^53)
-    val ds: Dataset[(Long, Long, Long, Double)] = events
-      .select(col(key).cast("long"),
-        (col(ts).cast("double") * 1e6).cast("long"),
-        col(ord2).cast("long"), col(v).cast("double"))
-      .as[(Long, Long, Long, Double)]
-    ds.groupByKey(_._1)
-      .mapGroups { (k, rows) =>
-        val sorted = rows.toArray.sortBy(r => (r._2, r._3, r._4))
-        val h = sorted.foldLeft(0.0)((acc, r) => step(acc, r._4))
-        (k, h, sorted.length.toLong)
-      }
-      .toDF(key, "h_final", "n_steps")
   }
 }

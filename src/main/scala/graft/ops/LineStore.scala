@@ -49,21 +49,11 @@ object LineStore {
   }
 
   /** CURRENT counts path — flat until the first compact, counts_v<N>
-    * after ([[CompactSwap]]'s zero-window versioned protocol);
-    * [[storeVersion]]/[[readCountsVersion]] expose the pinning
-    * handles. */
+    * after ([[CompactSwap]]'s zero-window versioned protocol;
+    * [[CompactSwap.currentVersion]]/[[CompactSwap.readVersion]] are
+    * the pinning handles). */
   private def countsPath(spark: SparkSession, dir: String): String =
     CompactSwap.currentTablePath(spark, dir, "counts")
-
-  /** Current compact version of the counts table (0 = never
-    * compacted), None = never built. */
-  def storeVersion(spark: SparkSession, dir: String): Option[Int] =
-    CompactSwap.currentVersion(spark, dir, "counts")
-
-  /** The counts table exactly as compact `v` left it — byte-stable
-    * until the version GC retires it. */
-  def readCountsVersion(spark: SparkSession, dir: String, v: Int): DataFrame =
-    CompactSwap.readVersion(spark, dir, "counts", v)
 
   /** [[build]] once per (dir, corpus fingerprint) — the shared marker
     * lifecycle ([[Stores.oncePerFingerprint]]). */

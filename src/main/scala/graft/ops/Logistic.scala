@@ -234,16 +234,13 @@ object Logistic {
                   dir: String, threshold: Double = 0.5): DataFrame =
     keep(feat, storedWeights(spark, dir), threshold)
 
-  /** The snapped quality probability of feature array `x` under
-    * literal weights `w` — the public scoring column, for pipelines
-    * that filter a frame carrying more than (doc_id, x) (e.g. the
-    * ids flagship keeps text/lang/source through the gate). Same
+  /** The snapped quality probability under literal weights `w` over
+    * inline feature expressions — the public scoring column, for
+    * pipelines that filter a frame carrying more than (doc_id, x)
+    * (e.g. the ids flagship keeps text/lang/source through the gate).
+    * No array construction — see [[sigmaCols]] for why that matters
+    * inside a big gate predicate. `xs(0)` is the 1.0 bias; the same
     * expression [[keep]] filters on. */
-  def score(x: Column, w: Seq[Double]): Column = sigma(x, w)
-
-  /** [[score]] over inline feature expressions (no array
-    * construction — see [[sigmaCols]] for why that matters inside a
-    * big gate predicate). `xs(0)` is the 1.0 bias. */
   def scoreCols(xs: Seq[Column], w: Seq[Double]): Column = sigmaCols(xs, w)
 
   /** Score + filter with trained weights (the serving half): emits

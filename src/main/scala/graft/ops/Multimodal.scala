@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
@@ -310,7 +310,7 @@ object Multimodal {
   }
 
   /** Minimal spec-conformant ISO-BMFF writer (fixture/query side, the
-    * twin of [[decodeMp4]] the way packVideo twins unpackVideo):
+    * twin of [[decodeMp4]] and of the MP4 branch in [[unpackVideo]]):
     * `ftyp` + `moov{mvhd, trak{tkhd, mdia{hdlr(vide), minf{stbl{
     * stsd(codec)}}}}}`, version-0 boxes, timescale 1000 so duration
     * units ARE milliseconds. */
@@ -557,37 +557,18 @@ object Multimodal {
   }
 
   // ---- video frame plumbing -----------------------------------------
-  // The frame-sample / resize / feature-extract stages every multimodal
-  // training pipeline runs. Real video codecs are out of scope in this
-  // container (no native libs), so the DECODE step uses the
-  // deterministic GRFV test container below (magic "GRFV", BE nFrames/
-  // h/w, then nFrames dense h*w gray frames); everything Spark-side —
-  // the partition-batched fan-out, the one-row-per-frame schema, the
-  // pooling arithmetic — is real and a codec would slot in at
-  // [[unpackVideo]] exactly like image codecs slot into [[decode]].
+  // Video frame decode: GIF, AVI and MP4 containers; a further codec
+  // slots in at [[unpackVideo]] exactly like image codecs slot into
+  // [[decode]].
   // Unrecognized payloads get a deterministic single stub frame (same
   // philosophy as [[decodeStub]]: exact, testable, loud nowhere).
 
   /** `tMs` is the frame's media-clock presentation time in
     * milliseconds when the container carries one (MP4 `stts` /
     * fragment `trun` durations against the `mdhd` timescale); -1.0
-    * for clockless containers (GRFV, AVI fixture path, GIF). */
+    * for clockless containers (AVI fixture path, GIF). */
   final case class Frame(id: Long, frameIdx: Int, h: Int, w: Int, pixels: Array[Byte],
                          tMs: Double = -1.0)
-
-  /** Pack dense gray frames into the GRFV container (test/fixture side). */
-  def packVideo(frames: Seq[Array[Byte]], h: Int, w: Int): Array[Byte] = {
-    require(frames.nonEmpty && frames.forall(_.length == h * w),
-      s"every frame must be h*w=${h * w} bytes")
-    val out = java.nio.ByteBuffer.allocate(16 + frames.size * h * w)
-    out.put('G'.toByte).put('R'.toByte).put('F'.toByte).put('V'.toByte)
-    out.putInt(frames.size).putInt(h).putInt(w)
-    frames.foreach(out.put)
-    out.array()
-  }
-
-  def isVideo(b: Array[Byte]): Boolean =
-    b.length >= 16 && b(0) == 'G' && b(1) == 'R' && b(2) == 'F' && b(3) == 'V'
 
   /** Animated GIF: 'GIF87a' / 'GIF89a'. The one multi-frame container
     * the JDK carries a REAL codec for — [[unpackVideo]] decodes its
@@ -1755,7 +1736,7 @@ object Multimodal {
       "H.264-class frame decode needs an external codec library")
   }
 
-  /** Decode a GRFV payload into frames; animated GIF payloads decode
+  /** Decode a video payload into frames. Animated GIF payloads decode
     * through the REAL JDK codec — every frame, gray via integer
     * Rec.601 luma ((299r+587g+114b+500)/1000), which degenerates to
     * the exact palette value when r==g==b, so [[packGifFrames]]
@@ -1766,118 +1747,26 @@ object Multimodal {
     * (JDK JPEG codec). MP4 payloads route through [[unpackMp4]] —
     * real `stsz`/`stsc`/`stco` sample-table walk plus per-frame
     * decode for raw grayscale (lossless) and motion JPEG. Other
-    * non-GRFV payloads — and GIF/AVI/MP4-magic
+    * payloads — and GIF/AVI/MP4-magic
     * payloads the codecs reject (truncated/garbage bytes, codecs the
     * JDK lacks such as H.264) — become one deterministic stub frame
     * (pixels = cyclic payload bytes at the stub codec's fake dims) so
     * mixed media columns never throw. */
-  def unpackVideo(id: Long, payload: Array[Byte]): Iterator[Frame] =
-    if (isGif(payload)) {
-      // native spec walk first (the hot path); ImageIO twin for
-      // structures it rejects; deterministic stub for garbage bytes
-      try unpackGif(id, payload).iterator
-      catch { case scala.util.control.NonFatal(_) =>
-        try unpackGifImageIO(id, payload).iterator
-        catch { case scala.util.control.NonFatal(_) =>
-          val s = decodeStub(id, payload)
-          val px = Array.tabulate(s.height * s.width)(i => payload(i % payload.length))
-          Iterator.single(Frame(id, 0, s.height, s.width, px))
-        }
-      }
-    } else if (isAvi(payload)) {
-      try unpackAvi(id, payload)
-      catch { case scala.util.control.NonFatal(_) =>
-        val s = decodeStub(id, payload)
-        val px = Array.tabulate(s.height * s.width)(i => payload(i % payload.length))
-        Iterator.single(Frame(id, 0, s.height, s.width, px))
-      }
-    } else if (isMp4(payload)) {
-      try unpackMp4(id, payload)
-      catch { case scala.util.control.NonFatal(_) =>
-        val s = decodeStub(id, payload)
-        val px = Array.tabulate(s.height * s.width)(i => payload(i % payload.length))
-        Iterator.single(Frame(id, 0, s.height, s.width, px))
-      }
-    } else if (isVideo(payload)) {
-      val bb = java.nio.ByteBuffer.wrap(payload)
-      bb.position(4)
-      val n = bb.getInt; val h = bb.getInt; val w = bb.getInt
-      require(payload.length == 16 + n.toLong * h * w, s"GRFV payload truncated (id=$id)")
-      (0 until n).iterator.map { i =>
-        val px = new Array[Byte](h * w)
-        System.arraycopy(payload, 16 + i * h * w, px, 0, h * w)
-        Frame(id, i, h, w, px)
-      }
-    } else {
+  def unpackVideo(id: Long, payload: Array[Byte]): Iterator[Frame] = {
+    def stub: Iterator[Frame] = {
       val s = decodeStub(id, payload)
       val px = Array.tabulate(s.height * s.width)(i => payload(i % payload.length))
       Iterator.single(Frame(id, 0, s.height, s.width, px))
     }
-
-  /** Every-k-th frame sampling, fused into the decode pass: the
-    * partition-batched fan-out emits ONE ROW PER SAMPLED FRAME and
-    * never materializes unsampled frames as rows. Scan-stage work —
-    * no shuffle; a 1000-executor cluster samples embarrassingly
-    * parallel, one task per file split. */
-  def sampleFrames(spark: SparkSession, media: DataFrame, everyK: Int): Dataset[Frame] = {
-    require(everyK >= 1, s"everyK must be >= 1, got $everyK")
-    import spark.implicits._
-    media.select(col("id"), col("payload")).as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          unpackVideo(id, bytes).filter(_.frameIdx % everyK == 0)
-        }
-      }
-  }
-
-  /** s×s mean-pool resize (round-half-up integer mean — the byte-side
-    * twin of the A8 avg-pool operator). Requires exact divisibility:
-    * silent edge-padding would corrupt training data undetected. */
-  def resizeFrame(f: Frame, s: Int): Frame = {
-    require(s >= 1 && f.h % s == 0 && f.w % s == 0,
-      s"dims ${f.h}x${f.w} not divisible by pool $s")
-    val oh = f.h / s; val ow = f.w / s
-    val out = new Array[Byte](oh * ow)
-    var oy = 0
-    while (oy < oh) {
-      var ox = 0
-      while (ox < ow) {
-        var sum = 0
-        var dy = 0
-        while (dy < s) {
-          var dx = 0
-          val base = (oy * s + dy) * f.w + ox * s
-          while (dx < s) { sum += f.pixels(base + dx) & 0xff; dx += 1 }
-          dy += 1
-        }
-        out(oy * ow + ox) = ((sum + s * s / 2) / (s * s)).toByte
-        ox += 1
-      }
-      oy += 1
-    }
-    Frame(f.id, f.frameIdx, oh, ow, out)
-  }
-
-  /** Per-frame feature extraction in exact integer space (sum and
-    * sum-of-squares as longs — reassociation-proof, same contract as
-    * the quantized aggregates): mean and population variance per
-    * frame, plus a 4-bin histogram. */
-  def frameStats(frames: Dataset[Frame]): DataFrame = {
-    import frames.sparkSession.implicits._
-    frames.map { f =>
-      var sum = 0L; var sq = 0L
-      val hist = new Array[Long](4)
-      var i = 0
-      while (i < f.pixels.length) {
-        val v = f.pixels(i) & 0xff
-        sum += v; sq += v.toLong * v; hist(v >> 6) += 1
-        i += 1
-      }
-      val n = f.pixels.length.toLong
-      (f.id, f.frameIdx, f.h, f.w, sum, sq, n,
-        sum.toDouble / n, (sq.toDouble - sum.toDouble * sum / n) / n,
-        hist(0), hist(1), hist(2), hist(3))
-    }.toDF("id", "frame_idx", "h", "w", "pix_sum", "pix_sq", "n_pix",
-      "mean", "variance", "h0", "h1", "h2", "h3")
+    def orStub(frames: => Iterator[Frame]): Iterator[Frame] =
+      try frames catch { case scala.util.control.NonFatal(_) => stub }
+    if (isGif(payload))
+      // native spec walk first (the hot path); ImageIO twin for
+      // structures it rejects; deterministic stub for garbage bytes
+      orStub(try unpackGif(id, payload).iterator
+             catch { case scala.util.control.NonFatal(_) => unpackGifImageIO(id, payload).iterator })
+    else if (isAvi(payload)) orStub(unpackAvi(id, payload))
+    else if (isMp4(payload)) orStub(unpackMp4(id, payload))
+    else stub
   }
 }

@@ -209,20 +209,12 @@ object Pq {
       .select(col("cell"), (col("p") + 1).cast("int").as("sub"),
         col("e").getField("ve").as("scv"))
 
-  /** Folds (cell, sub, scv) sub-centroids into ONE broadcastable row:
-    * a map cell → sub-sorted array<struct<cell:=sub, cv>> (the struct
-    * field is named `cell` so [[ivfAssignedWith]]'s kernel reads it
-    * unchanged). */
-  def subCellsMap(seeds: DataFrame): DataFrame =
-    seeds.groupBy(col("cell"))
-      .agg(sort_array(collect_list(
-        struct(col("sub").as("cell"), col("scv").as("cv")))).as("arr"))
-      .agg(map_from_entries(collect_list(struct(col("cell"), col("arr")))).as("subcells"))
-
   /** Scan-stage fine assignment: adds `sub` to the coarse-assigned
     * frame via the own cell's sub-centroid argmin ((q6(d2), sub)
     * order — the oracle's row_number twin). `subMap` is ONE
-    * [[subCellsMap]] row. */
+    * [[localSubMap]] row: a map cell → sub-sorted
+    * array<struct<cell:=sub, cv>> (the struct field is named `cell` so
+    * [[ivfAssignedWith]]'s kernel reads it unchanged). */
   def fineAssigned(assigned: DataFrame, subMap: DataFrame): DataFrame =
     assigned.crossJoin(broadcast(subMap))
       .withColumn("_fc", call_function("graft_ivf_cell", col("ve"),
@@ -265,9 +257,9 @@ object Pq {
     localSubMap(spark, merged)
   }
 
-  /** Build the ONE-ROW sub-centroid map ([[subCellsMap]]'s shape —
-    * cell -> sub-sorted array<struct<cell:=sub, cv>>) locally from
-    * collected (cell, sub, scv) rows. */
+  /** Build the ONE-ROW sub-centroid map — cell -> sub-sorted
+    * array<struct<cell:=sub, cv>> — locally from collected
+    * (cell, sub, scv) rows. */
   private def localSubMap(spark: org.apache.spark.sql.SparkSession,
                           entries: Seq[(Int, Int, Seq[Double])]): DataFrame = {
     import org.apache.spark.sql.Row
@@ -403,8 +395,9 @@ object Pq {
       .collect()
     val byMC = meanRows.groupBy(r => (r.getInt(0), r.getInt(1)))
     val prevRow = cbRow.collect()(0)
-    val prev = prevRow.getSeq[Row](0)
-      .map(e => ((e.getInt(0), e.getInt(1)), e.getSeq[Double](2)))
+    val prev = prevRow.getSeq[Row](prevRow.fieldIndex("cbs")).map { e =>
+      ((e.getInt(e.fieldIndex("m")), e.getInt(e.fieldIndex("cid"))), e.getSeq[Double](e.fieldIndex("cv")))
+    }
     val entries = prev.map { case ((m, cid), pcv) =>
       val cv = byMC.get((m, cid)) match {
         case Some(rows) => rows.sortBy(_.getInt(2)).toSeq

@@ -351,21 +351,6 @@ object SemDedupStore {
       .write.mode("append").parquet(s"$dir/tombstones")
   }
 
-  /** The codes table's current compact version (0 = never
-    * compacted) — the d_store_pinned_read convention applied here. */
-  def codesVersion(spark: SparkSession, dir: String): Option[Int] =
-    CompactSwap.currentVersion(spark, dir, "codes")
-
-  /** Pin "the store as of compact `v`" byte-stably while appends and
-    * later compacts proceed ([[CompactSwap.readVersion]] — the
-    * sentinel manifest IS the file list, so a post-pin append into
-    * the same version dir does not leak in). The reproducible-
-    * training handle: a semantic-dedup decision replayed against the
-    * pinned version is bit-stable until the version GC (one compact
-    * later) retires it. */
-  def readVersion(spark: SparkSession, dir: String, v: Int): DataFrame =
-    CompactSwap.readVersion(spark, dir, "codes", v)
-
   /** Physically drop tombstoned rows: one [[CompactSwap]] versioned
     * rewrite of the codes table (zero read-availability window — a
     * live serving loop resolves the promoted version on its next

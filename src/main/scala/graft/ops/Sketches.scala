@@ -126,9 +126,11 @@ object Sketches {
     * — no register ever mixed the erased group with a survivor.
     * Routed through the zero-window versioned compact (readers keep
     * their pinned listings; the previous version is GC'd one compact
-    * later). Row-level (sub-group) erasure remains [[takedown]]'s
-    * recorded impossibility: inside one group's sketch the erased
-    * rows' hashes may BE the register maxima. */
+    * later). Row-level (sub-group) erasure is impossible: HLL
+    * registers are a max-merge, so inside one group's sketch the
+    * erased rows' hashes may BE the register maxima. Its erasure path
+    * is a rebuild over the post-erasure corpus (drop the store dir and
+    * re-ingest, which [[ingestBatch]]'s markers make safe to replay). */
   def takedownGroup(spark: org.apache.spark.sql.SparkSession, dir: String,
                     removed: Column): Unit =
     // not(coalesce(removed, false)), NOT where(!removed): under SQL
@@ -156,24 +158,4 @@ object Sketches {
       .rollup(keys.map(col): _*)
       .agg(grouping_id().as("gid"),
         hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"))
-
-  /** TAKEDOWN is UNSUPPORTED for the sketch store, loudly (the
-    * H.264/MP3-PCM recorded-contract convention): HLL registers are
-    * a max-merge — union-idempotent, deletion-free — so removing one
-    * document's contribution from a merged sketch is
-    * information-theoretically impossible (its hashes may be the
-    * register maxima other docs share). The erasure path for
-    * sketches is REBUILD over the post-erasure corpus: drop the
-    * store dir and re-ingest, which [[ingestBatch]]'s idempotency
-    * markers make safe to replay. The row-level stores
-    * ([[DedupIndex.takedown]], [[AnnIndex.takedown]],
-    * [[LineStore.takedown]]) carry real takedown verbs; estimates
-    * merely BOUND post-erasure counts from above until the rebuild. */
-  def takedown(dir: String): Nothing =
-    throw new UnsupportedOperationException(
-      s"sketch store $dir cannot take down rows: HLL union is irreversible " +
-        "(register max-merge) — for a whole GROUP use takedownGroup (group-keyed " +
-        "sketches are disjoint, so dropping a group's rows IS the rebuilt-without " +
-        "store); for sub-group erasure rebuild over the post-erasure corpus " +
-        "(delete the store dir, re-ingest; batch markers make the replay safe)")
 }

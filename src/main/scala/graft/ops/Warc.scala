@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *   header   = field-name ":" SP field-value (Content-Length REQUIRED;
   *              WARC-Type / WARC-Record-ID / WARC-Date are mandatory
   *              per spec §5 and enforced on [[pack]], tolerated-if-
-  *              absent on [[parse]] — real crawls contain sloppy
+  *              absent on [[recordIterator]] — real crawls contain sloppy
   *              writers, but framing errors are never tolerated)
   *   a WARC FILE is records back to back; the .warc.gz form is one
   *   gzip MEMBER per record (spec annex C recommends record-at-time
@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * an index error three operators downstream.
   *
   * Scale shape: a WARC file is the parallelism unit (the archive
-  * convention caps files at ~1 GB), so [[records]] reads via
+  * convention caps files at ~1 GB), so [[recordsStream]] reads via
   * binaryFile and explodes records per file in the SCAN stage
   * (mapPartitions, zero shuffles). Decode is STREAMING
   * ([[recordIteratorAuto]]: member-by-member inflate feeding an
@@ -80,21 +80,12 @@ object Warc {
     out.toByteArray
   }
 
-  /** Parse one WARC file's bytes (plain, already-gunzipped) into
-    * records. Loud on every framing violation; an empty file is an
-    * empty record list (a zero-record WARC is just zero bytes).
-    * Materializes all records — fixture/round-trip use; the
-    * production scan path is [[recordIterator]], which never holds
-    * more than one record. */
-  def parse(bytes: Array[Byte]): Seq[Record] =
-    recordIterator(new java.io.ByteArrayInputStream(bytes)).toVector
-
   /** INCREMENTAL record reader over a plain WARC byte stream — the
     * production decode shape: per-record memory is that record's
     * Content-Length, never the file's. Composed with [[memberGunzip]]
     * this is what lets a conventional ~1 GB .warc.gz that expands to
     * 3-5 GB decode inside a task without ever allocating the
-    * decompressed file (the flat [[gunzipAll]]+[[parse]] pair caps at
+    * decompressed file (a flat gunzip-then-parse pair caps at
     * a 2 GiB byte[] and OOMs long before that). All framing errors
     * stay loud with stream offsets (offsets are decompressed-stream
     * positions, which for a plain .warc equal buffer offsets). */
@@ -259,8 +250,8 @@ object Warc {
     * garbage is an error, never an implicit EOF. Pull-based so the
     * decompressed file is NEVER materialized: composed with
     * [[recordIterator]], a conventional ~1 GB crawl .warc.gz that
-    * expands to 3-5 GB decodes with per-record memory (the flat
-    * [[gunzipAll]] would need a >2 GiB byte[] and die first). */
+    * expands to 3-5 GB decodes with per-record memory (a flat
+    * gunzip into one byte[] would need >2 GiB and die first). */
   private final class MemberGunzip(bytes: Array[Byte]) extends java.io.InputStream {
     private var pos = 0
     private var member = 0
@@ -363,19 +354,6 @@ object Warc {
     new MemberGunzip(bytes)
   }
 
-  /** Decompress ALL gzip members into one flat byte[] — fixture and
-    * round-trip use only (a byte[] caps at 2 GiB; real crawl files
-    * expand past that, which is why the scan path composes
-    * [[gunzipStream]] with [[recordIterator]] instead). */
-  def gunzipAll(bytes: Array[Byte]): Array[Byte] = {
-    val in = gunzipStream(bytes)
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](1 << 16)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    out.toByteArray
-  }
-
   /** Parse a file that may be plain .warc or record-gzipped .warc.gz
     * — the two on-disk framings one crawl lake mixes freely.
     * Materializes the record list; the scan path uses
@@ -471,32 +449,22 @@ object Warc {
     out
   }
 
-  /** Crawl-lake SOURCE: every record of every `*.warc` / `*.warc.gz`
-    * file under `pathGlob` as rows (file, record_idx, warc_type,
-    * record_id, target_uri, content_length, payload) — binaryFile
-    * scan, records exploded in the scan stage (one task per file,
-    * the archive parallelism unit; per-task memory is file-sized).
-    * Downstream: `httpBody` + `graft_html_extract` turn response
-    * rows into the scrub flagships' input. */
-  def records(spark: SparkSession, pathGlob: String): DataFrame =
-    explodeRecords(spark.read.format("binaryFile").load(pathGlob))
-
-  /** STREAMING twin of [[records]]: watch `pathGlob` for newly
-    * arriving .warc/.warc.gz files (the binaryFile source's fixed
-    * schema needs no user schema) and explode each file's records in
-    * the scan stage as it lands — the crawl lake's continuous front
-    * door, consumed by [[CrawlStream.ingestWarc]]. */
-  def recordsStream(spark: SparkSession, pathGlob: String): DataFrame =
+  /** Crawl-lake SOURCE: watch `pathGlob` for newly arriving
+    * .warc/.warc.gz files and explode every record of each file in
+    * the scan stage as it lands, as rows (file, record_idx,
+    * warc_type, record_id, target_uri, content_length, payload) —
+    * one task per file, the archive parallelism unit. The crawl
+    * lake's continuous front door, consumed by
+    * [[CrawlStream.ingestWarc]]; `httpBody` + `graft_html_extract`
+    * turn response rows into the scrub flagships' input. */
+  def recordsStream(spark: SparkSession, pathGlob: String): DataFrame = {
+    import spark.implicits._
     // binaryFile's schema is FIXED by the format, but the streaming
     // source API still demands it spelled out (no stream-time inference)
-    explodeRecords(spark.readStream.format("binaryFile")
+    spark.readStream.format("binaryFile")
       .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
-      .load(pathGlob))
-
-  private def explodeRecords(files: DataFrame): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    files.select(col("path"), col("content"))
+      .load(pathGlob)
+      .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (path, bytes) =>

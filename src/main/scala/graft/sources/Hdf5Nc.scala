@@ -33,7 +33,8 @@ import java.nio.{ByteBuffer, ByteOrder}
   * layout and attr checks are [[Netcdf.grid]]'s, which sniffs the
   * magic and routes here, so classic and HDF5-container `.nc` files
   * decode through one function; the numeric preprocessing stays in
-  * the column operators ([[Netcdf.decodedValue]]).
+  * the column operators ([[graft.functions.scalars.fillToNull]],
+  * [[graft.functions.scalars.minmaxDecode]]).
   * Fixture-tested in SourcesSpec against hand-built from-the-spec
   * bytes, the same doctrine as the CDF fixtures — a reader bug cannot
   * self-agree with its own writer.

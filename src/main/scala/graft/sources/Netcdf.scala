@@ -2,8 +2,6 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.functions._
-
 /** Pure-JVM classic NetCDF (CDF-1 / CDF-2) reader — the ingest twin of
   * the reference's on-disk input path (weather4cast/datasets.py:86-94:
   * `netCDF4.Dataset(..., memory=raw_data)` with `set_auto_scale(False)`
@@ -206,15 +204,6 @@ object Netcdf {
             throw new IllegalArgumentException(s"$path $name: ${e.getMessage}", e)
         })
   }
-
-  /** The reference's preprocess as one column (datasets.py:58-71 minus
-    * the per-variable mean-impute, which is A1's job): fill cells →
-    * NULL, others min-max scaled to [0, 1] by the file's own
-    * `valid_range`. NaN attr sentinels (absent attrs) pass raw through. */
-  def decodedValue: org.apache.spark.sql.Column =
-    when(col("raw") === col("fill_value"), lit(null).cast("double"))
-      .otherwise(when(isnan(col("valid_lo")), col("raw"))
-        .otherwise((col("raw") - col("valid_lo")) / (col("valid_hi") - col("valid_lo"))))
 
   // ---- writer: the read path's exact inverse ------------------------
 

@@ -45,16 +45,12 @@ object Tables {
   // DataFrames outlive it in this map. Plans are immutable, so sharing
   // one DataFrame across queries is safe — with one caveat: the plan
   // pins the parquet FILE LISTING at first load. Rewriting files under
-  // an sfDir mid-session would be served stale; call [[invalidate]]
-  // after regenerating test data.
+  // an sfDir mid-session would be served stale: regenerate test data
+  // between sessions, not inside one.
   private val planCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
   private val evictionHooked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[SparkSession]()
-
-  /** Drop every memoized plan (all sessions). Needed only when files
-    * under a previously-loaded sfDir have been rewritten. */
-  def invalidate(): Unit = planCache.clear()
 
   /** Read `<sfDir>/<name>.parquet`, normalizing any long-nanos `ts`
     * column back to TimestampType. */

@@ -53,86 +53,4 @@ class AnnStreamSpec extends AnyFunSuite {
       assert(got.count(_._1 == 0L) == 10 && got.count(_._1 == 37L) == 10)
     } finally q.stop()
   }
-
-  test("searchRotatedStream: streaming top-10 == batch searchRotated over the rotated index") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val emb = sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("ve"))
-    val dir = s"${sys.props("java.io.tmpdir")}/graft-opqivf-streamtest"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    // a deterministic dense rotation (the permutation arm of the OPQ
-    // panel suffices — the stream path only needs rot to be real)
-    val r = Array.tabulate(64, 64)((i, j) =>
-      if ((i + 17) % 64 == j) (if (i % 3 == 0) -1.0 else 1.0) else 0.0)
-    graft.ops.AnnIndex.buildRotated(emb.where(col("vec_id") =!= 0), dir, r)
-
-    val qIds = Seq(0L, 37L)
-    val mem = MemoryStream[(Long, Long)]
-    val queries = mem.toDF().toDF("query_id", "sec")
-      .withColumn("ts", timestamp_seconds(col("sec"))).drop("sec")
-      .join(emb.withColumnRenamed("vec_id", "query_id"), "query_id")
-      .withColumnRenamed("ve", "qv")
-    val out = graft.ops.AnnIndex.searchRotatedStream(spark, queries, dir, nprobe = 2)
-    val q = out.writeStream.format("memory").queryName("opq_stream_out")
-      .outputMode("append").start()
-    try {
-      mem.addData((0L, 5L), (37L, 6L))
-      q.processAllAvailable()
-      mem.addData((1L, 100L)) // advances the watermark; closes the window
-      q.processAllAvailable()
-      val got = spark.table("opq_stream_out")
-        .where(col("wstart") === timestamp_seconds(lit(0)))
-        .orderBy("query_id", "rk")
-        .select("query_id", "vec_id", "ad2")
-        .collect().map(x => (x.getLong(0), x.getLong(1), x.getDouble(2))).toSeq
-      val want = qIds.flatMap { qid =>
-        graft.ops.AnnIndex.searchRotated(spark, dir,
-          emb.where(col("vec_id") === qid).select(col("ve").as("qv")), nprobe = 2)
-          .collect().map(x => (qid, x.getLong(0), x.getAs[Double]("ad2"))).toSeq
-      }
-      assert(got == want, s"\n got=$got\nwant=$want")
-      assert(got.count(_._1 == 0L) == 10 && got.count(_._1 == 37L) == 10)
-    } finally q.stop()
-  }
-
-  test("appendStream: index ingested from a vector stream == one-shot build") {
-    // the ingest half: base build, then the delta arrives as TWO
-    // micro-batches through foreachBatch append — search over the
-    // streamed index must equal search over a full one-shot build
-    val emb = sources.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("ve"))
-    val corpus = emb.where(col("vec_id") =!= 0)
-    val isDelta = col("vec_id") % 10 === 4 && col("vec_id") > 16
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dirS = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-ingest-stream"
-    val dirF = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-ingest-full"
-    val ckpt = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-ingest-ckpt"
-    Seq(dirS, dirF, ckpt).foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
-    graft.ops.AnnIndex.build(corpus.where(!isDelta), dirS)
-    graft.ops.AnnIndex.build(corpus, dirF)
-
-    val delta = corpus.where(isDelta)
-      .select(col("vec_id"), col("ve")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    val (b1, b2) = delta.splitAt(delta.length / 2)
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val vecs = mem.toDF().toDF("vec_id", "ve")
-      .select(col("vec_id"), col("ve").cast("array<double>").as("ve"))
-    val q = graft.ops.AnnIndex.appendStream(spark, vecs, dirS, checkpoint = ckpt)
-    try {
-      mem.addData(b1.toSeq); q.processAllAvailable()
-      mem.addData(b2.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val qv = emb.where(col("vec_id") === 0).select(col("ve").as("qv"))
-    val streamed = graft.ops.AnnIndex.search(spark, dirS, qv, nprobe = 2)
-      .collect().map(_.toSeq).toSeq
-    val oneShot = graft.ops.AnnIndex.search(spark, dirF, qv, nprobe = 2)
-      .collect().map(_.toSeq).toSeq
-    assert(streamed == oneShot,
-      s"streamed index diverged:\n  got =$streamed\n  want=$oneShot")
-    assert(spark.read.parquet(s"$dirS/codes").count() ==
-      spark.read.parquet(s"$dirF/codes").count())
-  }
 }

@@ -279,44 +279,6 @@ class ApproxSpec extends AnyFunSuite {
     assert(hitsOf("/root/testdata/sf0.01") == 2L, "sf0.01 rotated-index hits drifted")
   }
 
-  test("rotated index: appendRotated == buildRotated in one shot (frozen quantizers)") {
-    import org.apache.spark.sql.functions._
-    // the e_ivfpq_appended contract carried to the rotated space: an
-    // index built over half the corpus and appendRotated the rest
-    // must search bit-identically to one built over everything —
-    // quantizers AND rotation frozen at build time. The quantizer
-    // seeds (vec_ids 1..k / 1..ks) must be in the BASE half.
-    val e0 = sources.Tables.load(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("ve"))
-    val corpus = e0.where(col("vec_id") =!= 0)
-    val q1 = e0.where(col("vec_id") === 0).select(col("ve").as("qv"))
-    val rng = new scala.util.Random(5)
-    val raw = Array.fill(64, 64)(rng.nextGaussian())
-    val r = Array.ofDim[Double](64, 64)
-    for (i <- 0 until 64) {
-      val v = raw(i).clone()
-      for (k <- 0 until i) {
-        val dd = (0 until 64).map(j => v(j) * r(k)(j)).sum
-        for (j <- 0 until 64) v(j) -= dd * r(k)(j)
-      }
-      val nn = math.sqrt(v.map(x => x * x).sum)
-      for (j <- 0 until 64) r(i)(j) = v(j) / nn
-    }
-    val base = s"${sys.props("java.io.tmpdir")}/graft-opq-append-spec"
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    graft.ops.AnnIndex.buildRotated(corpus, s"$base/full", r)
-    graft.ops.AnnIndex.buildRotated(corpus.where(col("vec_id") <= 250), s"$base/half", r)
-    graft.ops.AnnIndex.appendRotated(spark, corpus.where(col("vec_id") > 250), s"$base/half")
-    def top(dir: String) = graft.ops.AnnIndex.searchRotated(spark, dir, q1,
-        nprobe = 2, limit = 10)
-      .select(col("vec_id"), col("ad2"))
-      .collect().map(x => (x.getLong(0), x.getDouble(1))).toSeq
-    val (full, appended) = (top(s"$base/full"), top(s"$base/half"))
-    assert(full.nonEmpty && full == appended,
-      s"appended rotated index must equal the one-shot build:\n$full\n$appended")
-  }
-
   test("e_opq_recall_planted: OPQ recall saturates; planted qerr HALVES in one round") {
     import org.apache.spark.sql.functions._
     // the clustered complement of the isotropic e_opq_indexed pins:
@@ -382,6 +344,22 @@ class ApproxSpec extends AnyFunSuite {
     val err = (0 until 8).flatMap(i => (0 until 8).map(j =>
       math.abs(got(i)(j) - rStar(i)(j)))).max
     assert(err < 1e-10, s"planted rotation not recovered: max err $err")
+  }
+
+  test("lloydStepQerr: a leading extra cbRow column leaves codebook and qerr unchanged") {
+    import org.apache.spark.sql.functions._
+    import graft.ops.Pq
+    val p = Pq.Params()
+    val emb = sources.Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("ve"))
+    val cb = Pq.codebookRow(emb, p)
+    def step(cbRow: org.apache.spark.sql.DataFrame) = {
+      val r = Pq.lloydStepQerr(emb, cbRow, p).collect()(0)
+      (r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("cbs")).map(_.toSeq), r.getAs[Long]("qerr_q6"))
+    }
+    val plain = step(cb)
+    assert(plain._1.length == p.m * p.ks && plain._2 > 0)
+    assert(step(cb.select(lit(7L).as("lead"), col("cbs"))) == plain)
   }
 
   test("Sketches.ingestStream == sequential ingestBatch; replayed batches are idempotent") {
@@ -899,7 +877,7 @@ class ApproxSpec extends AnyFunSuite {
     val orphan = new org.apache.hadoop.fs.Path(s"$dirApp/codes_v2")
     fs.mkdirs(orphan)
     graft.ops.AnnIndex.compact(spark, dirApp)
-    assert(graft.ops.AnnIndex.codesVersion(spark, dirApp).contains(2),
+    assert(graft.ops.CompactSwap.currentVersion(spark, dirApp, "codes").contains(2),
       "crashed v2 must be purged and re-promoted")
     val recovered = graft.ops.AnnIndex.search(spark, dirApp, q, nprobe = 2)
       .collect().map(_.toSeq).toSeq
@@ -908,7 +886,7 @@ class ApproxSpec extends AnyFunSuite {
   }
 
   test("AnnIndex tagged append: a torn-batch replay never doubles a vector's code row") {
-    // the appendStream torn window: crash after append, marker
+    // a foreachBatch ingest's torn window: crash after append, marker
     // unwritten -> the batch body replays. Plain append mode would
     // land the delta's code rows TWICE, and a doubled vector occupies
     // two top-k slots (decision-changing, unlike the dedup store's
@@ -978,7 +956,7 @@ class ApproxSpec extends AnyFunSuite {
         df.write.partitionBy("cell").parquet(tmp)
         graft.ops.AnnIndex.append(spark, corpus.where(isDelta), dir)
       })
-    assert(graft.ops.AnnIndex.codesVersion(spark, dir).contains(1))
+    assert(graft.ops.CompactSwap.currentVersion(spark, dir, "codes").contains(1))
     val truth = {
       val dirFull = s"${sys.props("java.io.tmpdir")}/graft-ivfpq-reconcile-full"
       fs.delete(new org.apache.hadoop.fs.Path(dirFull), true)

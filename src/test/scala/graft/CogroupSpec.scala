@@ -30,13 +30,4 @@ class CogroupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(merged == viaJoin)
   }
-
-  test("Tables.invalidate drops memoized plans; reload still works") {
-    val before = sources.Tables.load(spark, "/root/testdata/sf0.001", "nation")
-    graft.sources.Tables.invalidate()
-    val after = sources.Tables.load(spark, "/root/testdata/sf0.001", "nation")
-    // a fresh plan object (cache really dropped), same data
-    assert(!(before eq after))
-    assert(before.count() == after.count())
-  }
 }

@@ -259,12 +259,6 @@ class DedupSpec extends AnyFunSuite {
     assert(e.getMessage.contains("EAGER"), s"got: ${e.getMessage}")
   }
 
-  test("shingles: short docs yield empty shingle set, not an error") {
-    val s = Seq((9L, "one two")).toDF("doc_id", "text")
-      .select(size(text.shingles($"text", 3)).as("n")).collect()(0).getInt(0)
-    assert(s == 0)
-  }
-
   test("bloomDecontamKeep: bloom prune + exact confirm equals the plain exact keep-list") {
     // bench doc 10 shares a 5-gram with docs 1/2/3 (same base text);
     // doc 4 and the short doc 6 are clean
@@ -892,7 +886,7 @@ class DedupSpec extends AnyFunSuite {
     val good = ("the quick brown fox jumps over the lazy dog and then the dog " +
       "sleeps in the warm sun for hours while the fox keeps running through the field ") * 4
     val scores = Seq((101L, junk), (102L, good)).toDF("doc_id", "text")
-      .select(col("doc_id"), Logistic.score(array(xs: _*), w).as("p"))
+      .select(col("doc_id"), Logistic.scoreCols(xs, w).as("p"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(scores(101L) < 0.5, s"junk doc must score below threshold: $scores, w=$w")
     assert(scores(102L) >= 0.5, s"good doc must clear threshold: $scores, w=$w")

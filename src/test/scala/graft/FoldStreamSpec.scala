@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Fold
 import graft.streaming.Streaming
 
-/** X2 fold: the typed mapGroups form and the aggregate() HOF form must
-  * agree. ST1/ST2: the streaming execution of the same logical plan
+/** X2 fold: the aggregate() HOF form must equal a plain-Scala replay
+  * of [[Fold.step]]. ST1/ST2: the streaming execution of the same logical plan
   * must reproduce the batch result (update/complete modes). */
 class FoldStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -15,15 +15,20 @@ class FoldStreamSpec extends AnyFunSuite {
 
   private lazy val events = sources.Tables.load(spark, "/root/testdata/sf0.001", "events")
 
-  test("GRU fold: typed mapGroups == aggregate() HOF, per key") {
-    val a = Fold.foldAgg(events, "user_id", "ts", "event_id", "value")
-      .select($"user_id", $"h_final".as("h_agg"))
-    val t = Fold.foldTyped(spark, events, "user_id", "ts", "event_id", "value")
-      .select($"user_id", $"h_final".as("h_typed"))
-    val joined = a.join(t, "user_id").collect()
-    assert(joined.length == 15)
-    joined.foreach { r =>
-      assert(math.abs(r.getAs[Double]("h_agg") - r.getAs[Double]("h_typed")) < 1e-12, r.toString)
+  test("GRU fold: aggregate() HOF == plain-Scala replay of Fold.step, per key") {
+    val agg = Fold.foldAgg(events, "user_id", "ts", "event_id", "value")
+      .select($"user_id".cast("long"), $"h_final")
+      .as[(Long, Double)].collect().toMap
+    // the same (ts, event_id, value) order foldAgg's sort_array uses
+    val replay = events.select($"user_id".cast("long"), expr("unix_micros(ts)"),
+        $"event_id".cast("long"), $"value".cast("double"))
+      .as[(Long, Long, Long, Double)].collect()
+      .groupBy(_._1).map { case (k, rows) =>
+        k -> rows.sortBy(r => (r._2, r._3, r._4)).foldLeft(0.0)((h, r) => Fold.step(h, r._4))
+      }
+    assert(agg.size == 15 && agg.keySet == replay.keySet)
+    agg.foreach { case (k, h) =>
+      assert(math.abs(h - replay(k)) < 1e-12, s"user $k: foldAgg $h, replay ${replay(k)}")
     }
   }
 

@@ -80,11 +80,4 @@ class Mp3Spec extends AnyFunSuite {
     val e8 = intercept[IllegalArgumentException](Mp3.parse(mixed))
     assert(e8.getMessage.contains("changed mid-stream"), e8.getMessage)
   }
-
-  test("PCM decode is a recorded loud contract, not a silent stub") {
-    val e = intercept[UnsupportedOperationException](
-      Mp3.decodePcm(Mp3.pack(0, 1, Seq(6), Seq(false))))
-    assert(e.getMessage.contains("out of pure-JVM scope"), e.getMessage)
-    assert(e.getMessage.contains("Mp3.parse"), e.getMessage)
-  }
 }

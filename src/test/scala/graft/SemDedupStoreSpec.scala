@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.SemDedupStore
+import graft.ops.{CompactSwap, SemDedupStore}
 
 /** The persisted semantic-dedup store (ops/SemDedupStore) under its
   * serving claims:
@@ -209,13 +209,13 @@ class SemDedupStoreSpec extends AnyFunSuite {
     val dir = tmp("graft-semdd-pin")
     SemDedupStore.build(base, dir)
     SemDedupStore.compact(spark, dir) // promote codes -> codes_v1
-    assert(SemDedupStore.codesVersion(spark, dir).contains(1))
-    val pinned = SemDedupStore.readVersion(spark, dir, 1)
+    assert(CompactSwap.currentVersion(spark, dir, "codes").contains(1))
+    val pinned = CompactSwap.readVersion(spark, dir, "codes", 1)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     // append lands in the SAME current version dir — the pin's
     // sentinel manifest must exclude it
     SemDedupStore.append(spark, emb.where(col("vec_id").between(301, 320)), dir)
-    val pinnedAfter = SemDedupStore.readVersion(spark, dir, 1)
+    val pinnedAfter = CompactSwap.readVersion(spark, dir, "codes", 1)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
     assert(pinnedAfter == pinned,
       s"pinned read must be byte-stable across an append: +${pinnedAfter -- pinned}")

@@ -139,11 +139,16 @@ class SourcesSpec extends AnyFunSuite {
 
   test("NetCDF readGrid: long table with fill->NULL and valid_range scaling downstream") {
     import org.apache.spark.sql.functions._
+    import graft.functions.scalars
     val dir = java.nio.file.Files.createTempDirectory("graft_nc")
     java.nio.file.Files.write(dir.resolve("temp_20201106T120000Z.nc"), fix1)
     try {
-      val grid = spark.read.format("netcdf").option("var", "temperature").load(s"$dir/*.nc")
-        .withColumn("value", sources.Netcdf.decodedValue)
+      val raw = spark.read.format("netcdf").option("var", "temperature").load(s"$dir/*.nc")
+      // every cell row carries the file's own valid_range
+      assert(raw.select("valid_lo", "valid_hi").distinct().collect()
+        .map(r => (r.getDouble(0), r.getDouble(1))).toSeq == Seq((0.0, 500.0)))
+      val grid = raw.withColumn("value",
+        scalars.minmaxDecode(scalars.fillToNull(col("raw"), col("fill_value")), 0.0, 500.0))
       val rows = grid.orderBy("t", "y", "x").collect()
       assert(rows.length == 12)
       // fills at flat idx 3 (t0,y1,x0) and 7 (t1,y0,x1) decode to NULL
@@ -172,12 +177,6 @@ class SourcesSpec extends AnyFunSuite {
         assert(r.getAs[Double]("raw") == i * 1.5, s"cell $i")
         assert(r.getAs[Long]("t") == i / 4)
       }
-      // no valid_range/_FillValue attrs -> decodedValue passes raw through
-      import org.apache.spark.sql.functions._
-      val passthrough = spark.read.format("netcdf").option("var", "rr").load(s"$dir/*.nc")
-        .withColumn("value", sources.Netcdf.decodedValue)
-        .where(col("value") =!= col("raw")).count()
-      assert(passthrough == 0)
     } finally {
       dir.toFile.listFiles().foreach(_.delete()); java.nio.file.Files.delete(dir)
     }
@@ -455,7 +454,8 @@ class SourcesSpec extends AnyFunSuite {
     try {
       def grid(dir: java.nio.file.Path): Seq[Seq[Any]] =
         spark.read.format("netcdf").option("var", "temperature").load(s"$dir/*.nc")
-          .withColumn("value", sources.Netcdf.decodedValue)
+          .withColumn("value", graft.functions.scalars.minmaxDecode(
+            graft.functions.scalars.fillToNull(col("raw"), col("fill_value")), 0.0, 500.0))
           .drop("path", "var").orderBy("t", "y", "x")
           .collect().toSeq.map(_.toSeq)
       val classic = grid(dirC); val h5 = grid(dirH)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.{AnnIndex, DedupIndex, LineStore, Pq, Sketches}
+import graft.ops.{AnnIndex, CompactSwap, DedupIndex, LineStore, Pq, Sketches}
 
 /** TAKEDOWN — the stores' erasure verb (GDPR/DMCA content removal) on
   * planted fixtures. The two invariants every store must hold:
@@ -77,7 +77,7 @@ class TakedownSpec extends AnyFunSuite {
         graft.ops.CompactSwap.currentTablePath(spark, dir, "bands"))
       .select($"doc_id").distinct().collect().map(_.getLong(0)).toSeq
     assert(liveDocs == Seq(3L), s"band rows not folded: $liveDocs")
-    assert(DedupIndex.storeVersion(spark, dir, "bands").contains(1),
+    assert(CompactSwap.currentVersion(spark, dir, "bands").contains(1),
       "compact should have promoted bands to v1")
 
     // parity 2: == a store REBUILT without the erased docs
@@ -327,11 +327,6 @@ class TakedownSpec extends AnyFunSuite {
   // ---------------------------------------------------------------
   // Sketches — the recorded impossibility
   // ---------------------------------------------------------------
-
-  test("Sketches.takedown is a loud unsupported contract (HLL union is irreversible)") {
-    val e = intercept[UnsupportedOperationException] { Sketches.takedown("/tmp/nope") }
-    assert(e.getMessage.contains("rebuild"), e.getMessage)
-  }
 
   test("Sketches.takedownGroup retains NULL-keyed survivor groups (three-valued logic)") {
     // a NULL group key is legal in groupBy (NULL data keys group

@@ -356,36 +356,6 @@ class TextPipelineSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("Bpe.encodeIdsStream: streamed id arrays == batch encodeIds per doc") {
-    import graft.ops.Bpe
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val train = Seq((1L, "aaaa aaaa banana"), (2L, "banana spark")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bpeidstream").toString
-    Bpe.buildDictIfAbsent(spark, train, $"text", dir, iters = 2, fingerprint = "s1")
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)] // (doc_id, text, sec)
-    val stream = mem.toDF().toDF("doc_id", "text", "sec")
-      .withColumn("ts", timestamp_seconds($"sec")).drop("sec")
-    val out = Bpe.encodeIdsStream(spark, stream, $"text", $"doc_id", $"ts", dir)
-    val q = out.writeStream.format("memory").queryName("bpe_idstream_out")
-      .outputMode("append").start()
-    try {
-      // 'unseen' char-falls-back; 'Q' is out-of-alphabet -> -1 UNK
-      mem.addData((10L, "aaaa banana unseen Q", 4L), (11L, "banana banana", 6L))
-      q.processAllAvailable()
-      mem.addData((12L, "late", 100L)) // watermark closes [0,10)
-      q.processAllAvailable()
-      val got = spark.table("bpe_idstream_out")
-        .collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSet
-      val batch = Bpe.encodeIdsIndexed(spark,
-          Seq((10L, "aaaa banana unseen Q"), (11L, "banana banana")).toDF("doc_id", "text"),
-          $"text", $"doc_id", dir)
-        .collect().map(r => (r.getLong(0), r.getSeq[Int](1))).toSet
-      assert(got == batch, s"\n got=$got\nbatch=$batch")
-      assert(got.exists(_._2.contains(-1)), "the UNK id must appear")
-    } finally q.stop()
-  }
-
   test("Bpe.mergeStep: an exhausted dictionary is a no-op, not an empty frame") {
     import graft.ops.Bpe
     // every word a single symbol -> no adjacent pair anywhere: best
@@ -833,20 +803,19 @@ class TextPipelineSpec extends AnyFunSuite {
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      // PLAN CONSTRUCTION of both serving encodes: the broadcast gate
+      // PLAN CONSTRUCTION of the serving encode: the broadcast gate
       // reads parquet footers on the driver — no COUNT job may start.
       // (Datasource resolution may run footer-reading "parquet at"
       // jobs; those are metadata-sized and not the gate count this
       // test pins. The in-plan path keeps its one cache-hit count by
       // design.)
       val e1 = Bpe.encodeIndexed(spark, docs, $"text", $"doc_id", dir)
-      val e2 = Bpe.encodeIdsIndexed(spark, docs, $"text", $"doc_id", dir)
       Thread.sleep(1500) // listener bus is async
       val sites = jobSites.toArray.map(_.toString).toSeq
       assert(!sites.exists(_.contains("count at")),
         s"persisted-dict encode planning must not run a gate count, saw: $sites")
-      // and the plans still execute correctly
-      assert(e1.count() == 2 && e2.count() == 2)
+      // and the plan still executes correctly
+      assert(e1.count() == 2)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 

@@ -55,7 +55,7 @@ class VersionedStoreSpec extends AnyFunSuite {
       // COMPACT MID-STREAM: promotes codes -> codes_v1; the flat v0
       // the stream pinned at start stays byte-complete on disk
       AnnIndex.compact(spark, dir)
-      assert(AnnIndex.codesVersion(spark, dir).contains(1))
+      assert(CompactSwap.currentVersion(spark, dir, "codes").contains(1))
       mem.addData((37L, 106L)) // second window; also closes the first
       q.processAllAvailable()
       mem.addData((1L, 300L))  // closes the second window
@@ -79,28 +79,28 @@ class VersionedStoreSpec extends AnyFunSuite {
     val dir = tmp("graft-vstore-pin")
     AnnIndex.build(emb.where(col("vec_id").between(1, 300)), dir)
     AnnIndex.append(spark, emb.where(col("vec_id").between(301, 350)), dir)
-    assert(AnnIndex.codesVersion(spark, dir).contains(0), "flat build = version 0")
+    assert(CompactSwap.currentVersion(spark, dir, "codes").contains(0), "flat build = version 0")
 
     AnnIndex.compact(spark, dir) // -> codes_v1
-    assert(AnnIndex.codesVersion(spark, dir).contains(1))
-    val asOf1 = AnnIndex.readCodesVersion(spark, dir, 1)
+    assert(CompactSwap.currentVersion(spark, dir, "codes").contains(1))
+    val asOf1 = CompactSwap.readVersion(spark, dir, "codes", 1)
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(asOf1 == (1L to 350L).toSet)
 
     // later lifecycle: another append, another compact
     AnnIndex.append(spark, emb.where(col("vec_id").between(351, 400)), dir)
     AnnIndex.compact(spark, dir) // -> codes_v2; GC retires v0 (keep = 1)
-    assert(AnnIndex.codesVersion(spark, dir).contains(2))
+    assert(CompactSwap.currentVersion(spark, dir, "codes").contains(2))
 
     // the pinned version is BYTE-STABLE under everything that happened
-    val asOf1Again = AnnIndex.readCodesVersion(spark, dir, 1)
+    val asOf1Again = CompactSwap.readVersion(spark, dir, "codes", 1)
       .select($"vec_id").collect().map(_.getLong(0)).toSet
     assert(asOf1Again == asOf1, "pinned version drifted under later appends/compacts")
     // current reflects the full lifecycle
-    assert(AnnIndex.readCodesVersion(spark, dir, 2)
+    assert(CompactSwap.readVersion(spark, dir, "codes", 2)
       .select($"vec_id").collect().map(_.getLong(0)).toSet == (1L to 400L).toSet)
     // v0 was GC'd — pinning it is a LOUD error naming the keep policy
-    val e = intercept[IllegalArgumentException](AnnIndex.readCodesVersion(spark, dir, 0))
+    val e = intercept[IllegalArgumentException](CompactSwap.readVersion(spark, dir, "codes", 0))
     assert(e.getMessage.contains("garbage-collected"), e.getMessage)
   }
 
@@ -145,7 +145,7 @@ class VersionedStoreSpec extends AnyFunSuite {
       // COMPACT between batches (folds the tombstone, promotes v1):
       // the serving loop re-resolves and keeps answering identically
       AnnIndex.compact(spark, dir)
-      assert(AnnIndex.codesVersion(spark, dir).contains(1))
+      assert(CompactSwap.currentVersion(spark, dir, "codes").contains(1))
       mem.addData(0L)
       q.processAllAvailable()
       assert(got.toSeq.maxBy(_._1)._2 == afterTd,
@@ -197,8 +197,8 @@ class VersionedStoreSpec extends AnyFunSuite {
     DedupIndex.build(docs, ddir, $"text", $"doc_id")
     DedupIndex.append(delta, ddir, $"text", $"doc_id")
     DedupIndex.compact(spark, ddir)
-    assert(DedupIndex.storeVersion(spark, ddir, "fp").contains(1) &&
-      DedupIndex.storeVersion(spark, ddir, "bands").contains(1),
+    assert(CompactSwap.currentVersion(spark, ddir, "fp").contains(1) &&
+      CompactSwap.currentVersion(spark, ddir, "bands").contains(1),
       "both tables promote together")
     val fpAsOf1 = DedupIndex.readTableVersion(spark, ddir, "fp", 1).count()
     // probes read the CURRENT version transparently
@@ -216,11 +216,11 @@ class VersionedStoreSpec extends AnyFunSuite {
     LineStore.build(docs, ldir, $"text", $"doc_id", sep = " ")
     LineStore.append(delta, ldir, $"text", $"doc_id", sep = " ")
     LineStore.compact(spark, ldir)
-    assert(LineStore.storeVersion(spark, ldir).contains(1))
-    val n1 = LineStore.readCountsVersion(spark, ldir, 1).count()
+    assert(CompactSwap.currentVersion(spark, ldir, "counts").contains(1))
+    val n1 = CompactSwap.readVersion(spark, ldir, "counts", 1).count()
     LineStore.append(Seq((9L, "brand new words here")).toDF("doc_id", "text"),
       ldir, $"text", $"doc_id", sep = " ")
-    assert(LineStore.readCountsVersion(spark, ldir, 1).count() == n1,
+    assert(CompactSwap.readVersion(spark, ldir, "counts", 1).count() == n1,
       "pinned counts version must not see the later append")
     // the scrub probe reads CURRENT state — v1's folded lines (alpha
     // from the build, nine from the pre-compact append) AND the
@@ -353,9 +353,11 @@ class VersionedStoreSpec extends AnyFunSuite {
       "replayed kept set diverged from attempt 1 across the compact " +
         "(empty = the replay saw its own folded fingerprints)")
     // marker commit drops the pins
+    val linePin = new java.io.File(lineDir, s"_asof_$tag")
+    assert(linePin.exists(), s"pinAsOf must have written $linePin")
     CompactSwap.dropPin(spark, lineDir, tag)
     CompactSwap.dropPin(spark, dedupDir, tag)
-    assert(!CompactSwap.hasPin(spark, lineDir, tag))
+    assert(!linePin.exists(), s"dropPin must remove $linePin")
     // a SECOND compact GCs the pinned generation; a late replay now
     // fails LOUDLY instead of silently diverging ("restart within
     // `keep` compacts" is mechanically checked)

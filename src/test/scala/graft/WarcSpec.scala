@@ -6,11 +6,18 @@ import graft.ops.Warc
 /** WARC (ISO 28500) codec + source on crafted fixtures: round-trips,
   * both on-disk framings (.warc plain, .warc.gz record-at-time
   * members), the HTTP payload split, and the loud-error contract for
-  * every framing violation. Real-file reads (Warc.records) are
+  * every framing violation. Real-file reads (Warc.recordsStream) are
   * verified here because DuckDB has no WARC reader — the .nc/.h5
   * container convention. */
 class WarcSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** Plain WARC bytes through the scan path's incremental reader. */
+  private def parse(bytes: Array[Byte]): Seq[Warc.Record] =
+    Warc.recordIterator(new java.io.ByteArrayInputStream(bytes)).toVector
+
+  /** Drain the scan path's member-walking gunzip stream. */
+  private def drain(bytes: Array[Byte]): Array[Byte] = Warc.gunzipStream(bytes).readAllBytes()
 
   private def rec(i: Int, typ: String, payload: Array[Byte],
                   extra: Seq[(String, String)] = Seq.empty) =
@@ -26,7 +33,7 @@ class WarcSpec extends AnyFunSuite {
       rec(i, if (i == 1) "response" else "metadata", p,
         if (i == 1) Seq("WARC-Target-URI" -> "http://x/y") else Seq.empty)
     })
-    val rs = Warc.parse(bytes)
+    val rs = parse(bytes)
     assert(rs.length == 3)
     assert(rs.map(_.recordType) == Seq("metadata", "response", "metadata"))
     assert(rs(1).targetUri == "http://x/y")
@@ -58,7 +65,7 @@ class WarcSpec extends AnyFunSuite {
 
   test("loud contract: every framing violation names itself") {
     val good = Warc.pack(Seq(rec(0, "metadata", "xyz".getBytes("UTF-8"))))
-    def boom(bytes: Array[Byte]) = intercept[IllegalArgumentException](Warc.parse(bytes))
+    def boom(bytes: Array[Byte]) = intercept[IllegalArgumentException](parse(bytes))
 
     // truncated mid-header
     assert(boom(good.take(20)).getMessage.contains("WARC:"))
@@ -93,7 +100,7 @@ class WarcSpec extends AnyFunSuite {
       Warc.httpBody("FTP/1.1 200\r\n\r\nx".getBytes("ISO-8859-1")))
       .getMessage.contains("not HTTP"))
     // gunzip on non-gzip
-    assert(intercept[IllegalArgumentException](Warc.gunzipAll("WARC/1.1".getBytes()))
+    assert(intercept[IllegalArgumentException](drain("WARC/1.1".getBytes()))
       .getMessage.contains("gzip"))
   }
 
@@ -103,7 +110,7 @@ class WarcSpec extends AnyFunSuite {
     // re-frame the tail as fake records (record smuggling)
     val smuggle = new String(good, "ISO-8859-1")
       .replace("Content-Length: 4", "Content-Length: 4294967300")
-    val e = intercept[IllegalArgumentException](Warc.parse(smuggle.getBytes("ISO-8859-1")))
+    val e = intercept[IllegalArgumentException](parse(smuggle.getBytes("ISO-8859-1")))
     assert(e.getMessage.contains("runs off"), e.getMessage)
 
     // member 2's magic corrupted: the whole file must fail, never
@@ -112,11 +119,11 @@ class WarcSpec extends AnyFunSuite {
     val gz = recs.toArray.flatMap(r => Warc.gzipMember(Warc.pack(Seq(r))))
     val m2 = Warc.gzipMember(Warc.pack(Seq(recs(0)))).length
     val bad = gz.clone(); bad(m2) = 0x00 // member 2 magic byte 1
-    val e2 = intercept[IllegalArgumentException](Warc.gunzipAll(bad))
+    val e2 = intercept[IllegalArgumentException](drain(bad))
     assert(e2.getMessage.contains("bad magic") && e2.getMessage.contains("member 1"), e2.getMessage)
     // CRC flip inside member 2's trailer: loud, names the member
     val bad2 = gz.clone(); bad2(gz.length - 6) = (bad2(gz.length - 6) ^ 0x01).toByte
-    val e3 = intercept[IllegalArgumentException](Warc.gunzipAll(bad2))
+    val e3 = intercept[IllegalArgumentException](drain(bad2))
     assert(e3.getMessage.contains("CRC-32") || e3.getMessage.contains("ISIZE"), e3.getMessage)
     // intact members still concatenate
     assert(Warc.parseAuto(gz).length == 2)
@@ -265,7 +272,7 @@ class WarcSpec extends AnyFunSuite {
     assert(got.toSet == Set(("<urn:uuid:7>", "unique seven")), got.toString)
   }
 
-  test("Warc.records: binaryFile source explodes real .warc and .warc.gz files") {
+  test("Warc.recordsStream: binaryFile source explodes real .warc and .warc.gz files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-warc-src")
     val a = Warc.pack(Seq(
       rec(0, "warcinfo", "software: graft\r\n".getBytes("UTF-8")),
@@ -277,8 +284,11 @@ class WarcSpec extends AnyFunSuite {
     java.nio.file.Files.write(dir.resolve("a.warc"), a)
     java.nio.file.Files.write(dir.resolve("b.warc.gz"), b)
 
-    val rows = Warc.records(spark, s"$dir/*")
-      .orderBy("file", "record_idx").collect()
+    val q = Warc.recordsStream(spark, s"$dir/*")
+      .writeStream.format("memory").queryName("warc_records_src")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally q.stop()
+    val rows = spark.table("warc_records_src").orderBy("file", "record_idx").collect()
     assert(rows.length == 4)
     val typesByFile = rows.groupBy(_.getAs[String]("file").split('/').last)
       .view.mapValues(_.map(_.getAs[String]("warc_type")).toSeq).toMap
